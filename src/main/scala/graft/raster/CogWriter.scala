@@ -1,20 +1,25 @@
 package graft.raster
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWriter, PartReceipt}
 
 /** End-to-end COG write — the engine form of the reference's only
   * public API, `write_ccog` (reference ccog/ccog.py:801-971):
   *
   *   pyramid (level loop, persist per level, SURVEY §4.1)
-  *   → per-tile encode (narrow map, fused stats partials)
-  *   → distributed prefix-sum offsets (Offsets, R25)
-  *   → driver header emit (BigTiff, R22 — offset/count metadata is
-  *     grid×16 B, tiny relative to pixel data)
-  *   → ordered multipart sink (OrderedMultipartWriter, R28/R36).
+  *   → per-tile encode, ONCE, into a persisted frame (narrow map,
+  *     fused stats partials)
+  *   → ONE collect: every tile's size plus exact per-partition band
+  *     stats partials (grid×~20 B + bands×~100 B per partition)
+  *   → driver layout (Offsets.layout, R25: the prefix sum IS the
+  *     header's TileOffsets array) and header emit (BigTiff, R22)
+  *   → narrow placement map over the persisted frame (broadcast
+  *     offsets) → ordered multipart sink (OrderedMultipartWriter,
+  *     R28/R36).
   *
-  * One shuffle per pyramid level + one range shuffle for placement +
-  * one for packing; pixel bytes cross the wire once after encode.
+  * One shuffle per pyramid level + one for packing: encoded bytes
+  * cross the wire once, into their parts.
   */
 object CogWriter {
 
@@ -53,9 +58,9 @@ object CogWriter {
     // 1. pyramid: every level persisted (Pyramid.build)
     val levels = Pyramid.build(level0, profile)
 
-    // 2. encode every level; union is a plan-level concat, no shuffle.
-    // With maskPages each tile emits its 1-bit validity plane too —
-    // the reference's data+mask interleave (ccog/ccog.py:409-422).
+    // 2. encode every level ONCE; union is a plan-level concat, no
+    // shuffle. With maskPages each tile emits its 1-bit validity plane
+    // too — the reference's data+mask interleave (ccog/ccog.py:409-422).
     val encoded = levels
       .map(_.flatMap { t =>
         if (profile.maskPages)
@@ -63,97 +68,71 @@ object CogWriter {
         else Seq(TileCodec.encode(t, profile))
       })
       .reduce(_ union _)
-
-    // 3. absolute offsets via distributed prefix sum
-    val headerLen = BigTiff.headerLength(profile)
-    val placement = Offsets.place(encoded, headerLen)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     try {
-      // 4. per-page offset/count arrays for the header + size metrics.
-      // Metadata only (bytes column never collected): grid cells × ~24 B.
-      val meta = placement.placed
-        .map(p => (p.level, p.ty, p.tx, p.page, p.offset, p.nbytes))
+      // 3. one collect of metadata only (the bytes column is never
+      // read): per partition, its tiles' sizes and the masked PER-BAND
+      // stats partials of its level-0 data pages — no second pass over
+      // pixels (the reference pays a full extra pass,
+      // ccog/ccog.py:38,511-541)
+      val perPartition = encoded
+        .select($"level", $"ty", $"tx", $"page", $"nbytes", $"pxTotal", $"bandValid",
+          $"bandSum", $"bandSumSq", $"bandMin", $"bandMax")
+        .as[TileMeta].rdd
+        .mapPartitions { it =>
+          val sizes = Array.newBuilder[Offsets.TileSize]
+          var stats = Seq.empty[BandPartial]
+          it.foreach { m =>
+            sizes += Offsets.TileSize(m.level, m.ty, m.tx, m.page, m.nbytes)
+            if (m.level == 0 && m.page == TileCodec.PageData)
+              stats = BandPartial.merge(stats, m.bandValid.indices.map(BandPartial.of(m, _)))
+          }
+          Iterator((sizes.result(), stats))
+        }
         .collect()
-      val nTiles = meta.length.toLong
-      val nSparse = meta.count(_._6 == 0).toLong
-      val tileBytes = meta.map(_._6.toLong).sum
-      val maxTile = if (meta.isEmpty) 0L else meta.map(_._6.toLong).max
+      val sizes = perPartition.flatMap(_._1)
+      val stats = perPartition.map(_._2).foldLeft(Seq.empty[BandPartial])(BandPartial.merge)
+        .map(_.result)
+
+      // 4. absolute offsets: driver prefix sum in file order, already
+      // shaped as the header's per-page arrays
+      val headerLen = BigTiff.headerLength(profile)
+      val layout = Offsets.layout(sizes, headerLen, profile.gridDims)
+      val nTiles = sizes.length.toLong
+      val nSparse = sizes.count(_.nbytes == 0).toLong
+      val tileBytes = layout.fileLen - headerLen
+      val maxTile = sizes.foldLeft(0L)((m, t) => math.max(m, t.nbytes.toLong))
       val nLevels = profile.maxLevel + 1
-      val pages = BigTiff.pageSpecs(profile)
-      val byPage = meta.groupBy(m => (m._1, if (m._4 == TileCodec.PageMask) true else false))
       // ghost layout: stored bytes are leader(4)+payload+trailer(4);
       // TileOffsets point at the payload, TileByteCounts exclude the
       // decoration (GDAL convention; reference ccog/ccog.py:430-441)
       val ghostPad = if (profile.ghost) 4L else 0L
-      val offsets = pages.map { pg =>
-        val (gw, _) = profile.gridDims(pg.level)
-        val arr = new Array[Long](profile.tilesPerLevel(pg.level))
-        byPage.getOrElse((pg.level, pg.isMask), Array.empty).foreach {
-          case (_, ty, tx, _, off, n) =>
-            arr(ty * gw + tx) = if (n == 0) 0L else off + ghostPad
+      def pageArrays(arrays: Map[(Int, Int), Array[Long]], pad: Long) =
+        BigTiff.pageSpecs(profile).map { pg =>
+          val page = if (pg.isMask) TileCodec.PageMask else TileCodec.PageData
+          arrays.get((pg.level, page))
+            .fold(new Array[Long](profile.tilesPerLevel(pg.level)))(
+              _.map(v => if (v == 0) 0L else v + pad))
         }
-        arr
-      }
-      val counts = pages.map { pg =>
-        val (gw, _) = profile.gridDims(pg.level)
-        val arr = new Array[Long](profile.tilesPerLevel(pg.level))
-        byPage.getOrElse((pg.level, pg.isMask), Array.empty).foreach {
-          case (_, ty, tx, _, _, n) =>
-            arr(ty * gw + tx) = if (n == 0) 0L else n.toLong - 2 * ghostPad
-        }
-        arr
-      }
 
-      // 5. masked PER-BAND stats from the fused encode partials — no
-      // second pass over pixels (reference pays a full extra pass,
-      // ccog/ccog.py:38,511-541)
-      // per-tile partials are deterministic (fixed row-major loops);
-      // the CROSS-TILE reduction must be too — double sums are
-      // order-dependent at the last ulp, which would leak into the
-      // fixed-width header stats and make the assembled bytes vary
-      // between runs. DECIMAL accumulation is exact, hence
-      // order-independent.
-      import org.apache.spark.sql.functions.{sum => fsum, min => fmin, max => fmax, when => fwhen, col}
-      val statsRows = placement.cached
-        .filter(e => e.level == 0 && e.page == TileCodec.PageData)
-        .flatMap(e => e.bandValid.indices.map(b =>
-          (b, e.pxTotal, e.bandValid(b), e.bandSum(b), e.bandSumSq(b),
-            e.bandMin(b), e.bandMax(b))))
-        .toDF("band", "total", "valid", "s", "ss", "mn", "mx")
-        .groupBy(col("band"))
-        .agg(fsum(col("total")), fsum(col("valid")),
-          fsum(col("s").cast("decimal(38,12)")).cast("double"),
-          fsum(col("ss").cast("decimal(38,12)")).cast("double"),
-          fmin(fwhen(col("valid") > 0, col("mn"))),
-          fmax(fwhen(col("valid") > 0, col("mx"))))
-        .orderBy(col("band"))
-        .collect()
-      val stats = statsRows.toSeq.map { r =>
-        val total = r.getLong(1)
-        val valid = r.getLong(2)
-        if (valid == 0) BandStats(total, 0, 0, 0, 0, 0, 0)
-        else {
-          val mean = r.getDouble(3) / valid
-          val varp = r.getDouble(4) / valid - mean * mean
-          BandStats(total, valid, mean, math.sqrt(math.max(0, varp)),
-            r.getDouble(5), r.getDouble(6), 100.0 * valid / total)
-        }
-      }
-
-      // 6. header bytes (driver) → chunked blobs at offsets [0, headerLen).
+      // 5. header bytes (driver) → chunked blobs at offsets [0, headerLen).
       // Per-band STATISTICS_* tags ride along (fixed-width, so the
-      // length was already known to the offset pass)
-      val headerBytes = BigTiff.header(profile, offsets, counts,
+      // length was already known to the layout)
+      val headerBytes = BigTiff.header(profile, pageArrays(layout.offsets, ghostPad),
+        pageArrays(layout.counts, -2 * ghostPad),
         stats.map(s => (s.min, s.max, s.mean, s.stddev, s.validPct)))
       val headerBlobs = headerBytes.grouped(HeaderChunk).zipWithIndex
         .map { case (chunk, i) => Blob(i.toLong * HeaderChunk, chunk) }
         .toSeq
       val maxBlob = math.max(maxTile, headerBlobs.map(_.bytes.length.toLong).max)
 
-      // 7. one ordered blob stream: header ++ non-sparse tiles
+      // 6. one ordered blob stream: header ++ non-sparse tiles, each
+      // placed by a narrow map over the persisted encode
       val blobs = spark.createDataset(headerBlobs)
-        .union(placement.placed.filter(_.nbytes > 0).map(p => Blob(p.offset, p.bytes)))
-      val totalLen = headerLen + tileBytes
+        .union(Offsets.placedWith(encoded, layout).filter(_.nbytes > 0)
+          .map(p => Blob(p.offset, p.bytes)))
+      val totalLen = layout.fileLen
       val receipts =
         if (resume)
           OrderedMultipartWriter.writeResuming(blobs, totalLen, maxBlob,
@@ -164,7 +143,7 @@ object CogWriter {
       Result(headerLen, totalLen, tileBytes, nTiles, nSparse,
         receipts.size, nLevels, stats, receipts)
     } finally {
-      placement.cached.unpersist()
+      encoded.unpersist()
       levels.foreach(_.unpersist())
     }
   }
@@ -176,5 +155,56 @@ object CogWriter {
     val sink = new LocalMultipartSink(dir)
     val res = write(level0, profile, sink, partTarget = partTarget)
     (sink.assembled, res)
+  }
+}
+
+/** An encoded tile without its bytes — what the writer's one driver
+  * collect reads off the persisted encode. */
+private[raster] case class TileMeta(level: Int, ty: Int, tx: Int, page: Int,
+    nbytes: Int, pxTotal: Long, bandValid: Array[Long], bandSum: Array[Double],
+    bandSumSq: Array[Double], bandMin: Array[Double], bandMax: Array[Double])
+
+/** Exact partial of one band's level-0 stats. Per-tile partials are
+  * deterministic (fixed row-major loops); the cross-tile reduction must
+  * be too — double sums are order-dependent at the last ulp, which
+  * would leak into the fixed-width header stats and make the assembled
+  * bytes vary between runs. Each double sum is rounded the way Spark's
+  * double → decimal(38,12) cast does (its Double.toString value, HALF_UP
+  * to scale 12) and summed exactly, so merging is associative and
+  * commutative and the result equals a decimal(38,12) SQL sum. Invalid
+  * tiles carry min +inf / max −inf, so they never win. */
+private[raster] case class BandPartial(total: Long, valid: Long,
+    sum: java.math.BigDecimal, sumSq: java.math.BigDecimal, min: Double, max: Double) {
+
+  def +(o: BandPartial): BandPartial = BandPartial(total + o.total, valid + o.valid,
+    sum.add(o.sum), sumSq.add(o.sumSq), if (o.min < min) o.min else min,
+    if (o.max > max) o.max else max)
+
+  def result: CogWriter.BandStats =
+    if (valid == 0) CogWriter.BandStats(total, 0, 0, 0, 0, 0, 0)
+    else {
+      val mean = sum.doubleValue / valid
+      val varp = sumSq.doubleValue / valid - mean * mean
+      CogWriter.BandStats(total, valid, mean, math.sqrt(math.max(0, varp)),
+        min, max, 100.0 * valid / total)
+    }
+}
+
+private[raster] object BandPartial {
+  /** A non-finite sum casts to NULL in SQL, which the sum skips. */
+  def decimal(d: Double): java.math.BigDecimal =
+    if (!java.lang.Double.isFinite(d)) java.math.BigDecimal.ZERO
+    else new java.math.BigDecimal(java.lang.Double.toString(d))
+      .setScale(12, java.math.RoundingMode.HALF_UP)
+
+  /** Band-wise sum; a side with no level-0 data tiles is empty. */
+  def merge(a: Seq[BandPartial], b: Seq[BandPartial]): Seq[BandPartial] =
+    if (a.isEmpty) b else if (b.isEmpty) a else a.zip(b).map { case (x, y) => x + y }
+
+  def of(m: TileMeta, b: Int): BandPartial = {
+    val valid = m.bandValid(b) > 0
+    BandPartial(m.pxTotal, m.bandValid(b), decimal(m.bandSum(b)), decimal(m.bandSumSq(b)),
+      if (valid) m.bandMin(b) else Double.PositiveInfinity,
+      if (valid) m.bandMax(b) else Double.NegativeInfinity)
   }
 }

@@ -154,16 +154,17 @@ class LocalMultipartSink(dir: String) extends ResumableMultipartSink {
   * S3-legal parts — replaces the reference's runtime pairwise merge
   * tree (reference ccog/aws_tools.py:181-245, R36/R37): sizes are known
   * post-encode, so partNumber is a pure function of byte offset and the
-  * plan is one range shuffle, no tree.
+  * plan is one shuffle, no tree and no sampling.
   *
   * partNumber = offset/targetSize + 1. Blobs never split, so a part
   * holds every blob starting inside its window: size ∈
   * (target − maxBlob, target + maxBlob), and with
   * target ≥ 5 MiB + maxBlob every non-final part clears the S3 minimum
-  * (reference constraint table ccog/aws_tools.py:20-28). Equal
-  * partNumbers can't straddle a range-partition boundary (single-column
-  * range partitioning keeps equal keys together), so each part is
-  * uploaded exactly once, whole.
+  * (reference constraint table ccog/aws_tools.py:20-28). The part count
+  * is (totalBytes − 1)/target + 1, so part p goes to partition
+  * (p − 1)·slices/nParts of min(nParts, spark.sql.shuffle.partitions)
+  * slices: contiguous part ranges, a part never split across two
+  * partitions, so each part is uploaded exactly once, whole.
   */
 object OrderedMultipartWriter {
 
@@ -244,11 +245,23 @@ object OrderedMultipartWriter {
       preUploaded: Map[Int, PartReceipt]): Seq[PartReceipt] = {
     val spark = blobs.sparkSession
     import spark.implicits._
+    // the part count is known up front, so contiguous partNumber
+    // ranges map onto partitions arithmetically — no range sampling job
+    val nParts = (totalBytes - 1) / target + 1
+    val slices = math.max(1L, math.min(nParts,
+      spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
     val receipts = blobs
-      .map(b => (((b.offset / target) + 1).toInt, b.offset, b.bytes))
-      .toDF("partNumber", "offset", "bytes")
-      .repartitionByRange($"partNumber")
+      .map { b =>
+        val pn = b.offset / target + 1
+        // clamped so a stray offset reaches the contiguity audit below
+        // instead of failing the shuffle
+        val slice = math.min(slices - 1L, math.max(0L, (pn - 1) * slices / nParts))
+        (slice.toInt, pn.toInt, b.offset, b.bytes)
+      }
+      .toDF("slice", "partNumber", "offset", "bytes")
+      .repartitionById(slices, $"slice")
       .sortWithinPartitions($"partNumber", $"offset")
+      .drop("slice")
       .as[(Int, Long, Array[Byte])]
       .mapPartitions { it =>
         val out = Seq.newBuilder[PartReceipt]

@@ -43,11 +43,17 @@ class MockS3Server {
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  // the server never shuts down the executor it is given; stop() must,
+  // or its 8 non-daemon threads outlive the server and hold the JVM
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+  server.setExecutor(pool)
   server.start()
 
   def endpoint: String = s"http://127.0.0.1:${server.getAddress.getPort}"
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+  }
 
   def failNextRequests(n: Int): Unit = fail500.set(n)
   def errorBodyOnNextComplete(): Unit = errorBodyOnCompletes(1)

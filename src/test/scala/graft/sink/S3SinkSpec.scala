@@ -55,6 +55,21 @@ class S3SinkSpec extends SparkSpec {
     }
   }
 
+  test("arithmetic packing over the S3 wire: more parts than shuffle partitions, boundary-aligned blobs") {
+    withServer { srv =>
+      val s = spark
+      val (blobs, expect) = SinkSpec.alignedBlobs(7)
+      val sink = new S3MultipartSink(srv.endpoint, "test-bucket", "out/aligned.bin")
+      val receipts = OrderedMultipartWriter.write(
+        s.createDataset(blobs)(org.apache.spark.sql.Encoders.product[Blob]),
+        expect.length.toLong, SinkSpec.AlignedBlob, sink, defaultPart = 0L)
+      // S3 part ETags are the parts' MD5s: the receipts equal the plan
+      assert(receipts == SinkSpec.packingPlan(blobs, SinkSpec.AlignedTarget))
+      assert(srv.partUploads.map(_._2).sorted == (1 to 7))
+      assert(java.util.Arrays.equals(srv.storedObject("test-bucket", "out/aligned.bin").get, expect))
+    }
+  }
+
   test("transient 5xx responses are retried with backoff; upload still lands") {
     withServer { srv =>
       val sink = new S3MultipartSink(srv.endpoint, "b", "k", backoffMs = 1L)

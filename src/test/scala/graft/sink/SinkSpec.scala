@@ -96,4 +96,59 @@ class SinkSpec extends SparkSpec {
     // different length: not landed
     assert(!sink.raceLanded(dest, Array[Byte](1, 2, 3)))
   }
+
+  test("arithmetic packing: 1 part and part counts below, at and above the shuffle partitions") {
+    val s = spark
+    import s.implicits._
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    // fixed-size blobs: every part boundary is a blob start
+    for (nParts <- Seq(1, 3, 4, 7)) {
+      val (blobs, expect) = SinkSpec.alignedBlobs(nParts)
+      val sink = new LocalMultipartSink(tmp())
+      val receipts = OrderedMultipartWriter.write(s.createDataset(blobs),
+        expect.length.toLong, SinkSpec.AlignedBlob, sink, defaultPart = 0L)
+      assert(receipts.size == nParts)
+      assert(receipts == SinkSpec.packingPlan(blobs, SinkSpec.AlignedTarget), s"$nParts parts")
+      assert(java.util.Arrays.equals(sink.assembled, expect), s"$nParts parts")
+    }
+    // random sizes: boundaries fall inside blobs
+    val (blobs, expect) = blobStream(48)
+    val maxBlob = blobs.map(_.bytes.length.toLong).max
+    val sink = new LocalMultipartSink(tmp())
+    val receipts = OrderedMultipartWriter.write(s.createDataset(blobs),
+      expect.length.toLong, maxBlob, sink, defaultPart = 0L)
+    assert(receipts.size > 4)
+    assert(receipts == SinkSpec.packingPlan(blobs,
+      OrderedMultipartWriter.targetPartSize(expect.length.toLong, maxBlob, 0L)))
+    assert(java.util.Arrays.equals(sink.assembled, expect))
+  }
+}
+
+object SinkSpec {
+
+  /** 256 KiB blobs under the 5 MiB + maxBlob target floor: the target
+    * is exactly 21 blobs, so every part starts on a blob. */
+  val AlignedBlob: Long = 256L << 10
+  val AlignedTarget: Long = OrderedMultipartWriter.S3MinPart + AlignedBlob
+
+  def alignedBlobs(nParts: Int): (Seq[Blob], Array[Byte]) = {
+    val rnd = new scala.util.Random(nParts)
+    // the last part holds a third of a target
+    val n = (nParts - 1) * (AlignedTarget / AlignedBlob).toInt + 7
+    val blobs = (0 until n).map { i =>
+      val b = new Array[Byte](AlignedBlob.toInt)
+      rnd.nextBytes(b)
+      Blob(i * AlignedBlob, b)
+    }
+    (blobs, blobs.flatMap(_.bytes).toArray)
+  }
+
+  /** The receipts a part plan that keeps each partNumber = offset /
+    * target + 1 whole and in offset order must produce, ETag = MD5. */
+  def packingPlan(blobs: Seq[Blob], target: Long): Seq[PartReceipt] =
+    blobs.sortBy(_.offset).groupBy(_.offset / target + 1).toSeq.sortBy(_._1).map {
+      case (pn, bs) =>
+        val bytes = bs.flatMap(_.bytes).toArray
+        PartReceipt(pn.toInt, bs.head.offset, bytes.length.toLong, Digests.md5hex(bytes))
+    }
 }

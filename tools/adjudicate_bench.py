@@ -80,6 +80,10 @@ def isolated_run(query, sf_dir, cpus, repo_root):
         t = load_queries(out).get(query)
     finally:
         os.unlink(out)
+    # graft.Bench records a query that threw as -1.0: a failure, never a time
+    if t is None or t < 0:
+        sys.stderr.write(f"  isolated run of {query} recorded no time ({t})\n")
+        return None
     return t
 
 
@@ -120,6 +124,7 @@ def paired_adjudication(q, prev, curr, prev_path, curr_path, threshold,
         "query": q,
         "paired_runs_sec": [[round(a, 3), round(b, 3)]
                             for a, b in zip(base_ts, cur_ts)],
+        "failed_pairs": f"{pairs - len(deltas)}/{pairs}",
         "mean_delta_sec": round(sum(deltas) / len(deltas), 3) if deltas else None,
         "config": (f"paired alternation, fresh JVM per run, SPARK_GRAFT_ONLY={q}, "
                    f"{sf_dir}, local[{cpus}], baseline classes {baseline_repo}, "
@@ -187,6 +192,7 @@ def main(argv):
         results.append({
             "query": q,
             "runs_sec": [round(t, 3) for t in times],
+            "failed_runs": f"{runs - len(times)}/{runs}",
             "min_sec": round(min(times), 3) if times else None,
             "config": (f"fresh JVM per run, SPARK_GRAFT_ONLY={q}, {sf_dir}, "
                        f"local[{cpus}], min-of-2 per run"),

@@ -46,6 +46,8 @@ def main(argv):
             "min_8c": round(min(t8), 3) if t8 else None,
             "ratio_8c_over_32c": (round(min(t8) / min(t32), 2)
                                   if t32 and t8 else None),
+            "failed_32c": f"{ns.runs - len(t32)}/{ns.runs}",
+            "failed_8c": f"{ns.runs - len(t8)}/{ns.runs}",
             "config": (f"fresh JVM per run, alternating 32c/8c, "
                        f"SPARK_GRAFT_ONLY={q}, {ns.sf_dir} (10x linear "
                        f"workload via graft.ScaleEvidence), min-of-2 per "
@@ -53,7 +55,8 @@ def main(argv):
         }
         results.append(rec)
         print(f"  => {q}: 32c {rec['min_32c']} s, 8c {rec['min_8c']} s, "
-              f"ratio {rec['ratio_8c_over_32c']}", flush=True)
+              f"ratio {rec['ratio_8c_over_32c']} (failed 32c "
+              f"{rec['failed_32c']}, 8c {rec['failed_8c']})", flush=True)
     if ns.out:
         with open(ns.out, "w") as f:
             json.dump(results, f, indent=1)

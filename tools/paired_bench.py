@@ -44,8 +44,10 @@ def main(argv):
             if a is not None and b is not None:
                 base_ts.append(a)
                 cur_ts.append(b)
+        failed = f"{ns.pairs - len(base_ts)}/{ns.pairs}"
         if not base_ts:
-            results.append({"query": q, "verdict": "error: all runs failed"})
+            results.append({"query": q, "failed_pairs": failed,
+                            "verdict": "error: all runs failed"})
             continue
         deltas = [b - a for a, b in zip(base_ts, cur_ts)]
         faster = sum(d < 0 for d in deltas)
@@ -59,13 +61,15 @@ def main(argv):
             "mean_current_sec": round(mean_b, 3),
             "mean_delta_sec": round(mean_b - mean_a, 3),
             "faster_pairs": f"{faster}/{len(deltas)}",
+            "failed_pairs": failed,
             "config": (f"paired alternation, fresh JVM per run, "
                        f"SPARK_GRAFT_ONLY={q}, {ns.sf_dir}, local[{ns.cpus}], "
                        f"baseline classes {ns.baseline_classes}, current "
                        f"classes {repo_root}"),
         })
         print(f"  => {q}: {mean_a:.3f} -> {mean_b:.3f} s "
-              f"(delta {mean_b - mean_a:+.3f}, faster {faster}/{len(deltas)})",
+              f"(delta {mean_b - mean_a:+.3f}, faster {faster}/{len(deltas)}, "
+              f"failed pairs {failed})",
               flush=True)
     if ns.out:
         with open(ns.out, "w") as f:
