@@ -1,76 +1,86 @@
 package graft.graph
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Generic connected components by min-label propagation + pointer
-  * jumping — the reusable core of the near-dup clustering operator
-  * (`DedupQueries.dedupClusters` keeps its own fused version with
-  * shared-cache bookkeeping; this standalone form serves any edge
-  * list, e.g. the fuzzy-term graph of entity resolution).
+/** Connected components by min-label propagation + pointer jumping —
+  * the one distributed loop behind near-dup clustering
+  * (`DedupQueries.dedupClusters`) and the fuzzy-term graph of entity
+  * resolution past its driver-local gate.
   *
-  * Same iterative discipline as [[PageRank]]: edges deduped,
-  * bidirected and cached ONCE; each round is one join + one groupBy
-  * (min over neighbor labels) plus a self-join pointer jump that
-  * shortcuts chain components (labels only decrease, so jumping to the
-  * label's label is always sound); `localCheckpoint` per round keeps
-  * lineage O(1); convergence = zero label changes, O(diameter/2)
-  * rounds. */
+  * Same iterative discipline as [[PageRank]]: edges bidirected and
+  * cached ONCE, pre-partitioned on the join key; each round is one
+  * join + one groupBy (min over neighbor labels) plus a self-join
+  * pointer jump that shortcuts chain components (labels only decrease,
+  * so jumping to the label's label is always sound); `localCheckpoint`
+  * per round keeps lineage O(1), and each round's checkpoint blocks are
+  * freed as soon as the next round supersedes them; convergence = zero
+  * label changes, O(diameter/2) rounds. */
 object ConnectedComponents {
 
+  /** Round cap: far above any component diameter the callers produce
+    * (pointer jumping roughly halves the rounds a chain needs). */
+  private val MaxRounds = 50
+
   /** (node, cluster) for every node in `edges(src, dst)`; cluster is
-    * the MIN node id of the component — deterministic. */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    * the MIN node id of the component — deterministic. Repeated edges
+    * give the same labels. The returned frame reads the final round's
+    * checkpoint blocks, which stay pinned until
+    * [[releaseCheckpoints]]. */
+  def run(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // r22 NOTE: AQE stays ON here — an AQE-off variant (the
-    // PageRank.run treatment) paired-measured SLOWER on the fused
-    // dedupClusters twin of this loop (BENCH_r22_paired_batch3*.json):
-    // AQE's runtime partition coalescing is the right sizing for
-    // label-scale rounds, unlike pagerank's edge-scale ones.
-    // pre-partitioned on the join key (r22, the PageRank discipline):
-    // every round joins labels onto e by src, so the cached edge frame
-    // holds hashpartitioning(src) once and the per-round join runs
-    // shuffled-hash with NO exchange on the edge side (the hint below
-    // keeps the planner off broadcast — node-scale labels cannot
+    // edges: a CACHE pre-partitioned on the per-round join key (r22,
+    // the PageRank discipline) — cache preserves hashpartitioning(src)
+    // where an eager checkpoint drops it, so every round's label join
+    // runs shuffled-hash with NO exchange on the edge side (the hint
+    // below keeps the planner off broadcast — node-scale labels cannot
     // broadcast at real graph sizes — and off sort-merge's per-round
-    // edge re-sort). cache(), not checkpoint: only cache preserves the
-    // partitioning info.
-    val e = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .union(edges.select($"dst".cast("long").as("src"),
-        $"src".cast("long").as("dst")))
-      .distinct()
+    // edge re-sort). A caller passing a checkpointed frame must keep
+    // its blocks pinned until this returns: the lazy cache
+    // materializes on the first round's action and reads them —
+    // truncated lineage cannot recompute a freed block.
+    val e = edges.select($"src", $"dst")
+      .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .repartition($"src")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = e.select($"src".as("node")).distinct()
-      .withColumn("cluster", $"node")
-      .localCheckpoint()
+    // r22 NOTE: the PageRank-style AQE-off loop was tried here and
+    // paired-measured SLOWER on q_dedup_clusters (0/4, +0.77 s; with
+    // data-sized shuffle partitions still 2/4, +0.23 s —
+    // BENCH_r22_paired_batch3*.json): on that pair graph AQE's runtime
+    // coalescing (≈1 post-shuffle partition for ~1k edges) beats any
+    // statically chosen count, and unlike pagerank the loop's plans are
+    // join-heavy node-scale frames where per-stage scheduling is not
+    // the dominant term. Reverted; AQE stays ON for this loop.
+    var (labels, prevBlocks) = checkpointTracked(
+      e.select($"src".as("node")).distinct()
+        .withColumn("cluster", $"node"))
     var changed = 1L
     var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    while (changed > 0 && iter < MaxRounds) {
+      // each node adopts the min label among itself and its neighbors
       val msgs = e
         .join(labels.withColumnRenamed("node", "src").hint("shuffle_hash"),
           Seq("src"))
         .groupBy($"dst".as("node"))
         .agg(min($"cluster").as("nbr_min"))
-      // cached, not checkpointed (r22, the fused dedupClusters
-      // discipline): the pointer-jump self-join reads `adopted` twice,
-      // which cache() serves, while its lineage stays one round deep
-      // (labels is a checkpoint) — the eager checkpoint here only paid
-      // a THIRD action per round (join+agg ran as its own job instead
-      // of inside next's materialization)
+      // cached within the round, not checkpointed: the pointer-jump
+      // self-join references `adopted` twice, which cache() serves
+      // without running the edge join + min-agg twice, while its
+      // lineage stays one round deep (labels is a checkpoint); an eager
+      // checkpoint here paid a THIRD action per round
       val adopted = labels.join(msgs, Seq("node"), "left")
         .select($"node", $"cluster".as("old"),
           least($"cluster", coalesce($"nbr_min", $"cluster")).as("cluster"))
         .cache()
-      val next = adopted
+      // pointer-jump (label compression): cluster := label(cluster)
+      val (next, nextBlocks) = checkpointTracked(adopted
         .join(adopted.select($"node".as("cluster"), $"cluster".as("jump")),
           Seq("cluster"), "left")
         .select($"node", $"old",
-          least($"cluster", coalesce($"jump", $"cluster")).as("cluster"))
-        .localCheckpoint()
-      adopted.unpersist(blocking = false)
+          least($"cluster", coalesce($"jump", $"cluster")).as("cluster")))
       // convergence test is a SEPARATE count() job per round, over the
       // just-checkpointed (cached) blocks — deliberately not an
       // accumulator folded into the jump pass: accumulators on
@@ -80,11 +90,62 @@ object ConnectedComponents {
       // The count scans O(nodes) in-memory rows; immaterial next to
       // the two joins per round.
       changed = next.filter($"cluster" =!= $"old").count()
+      adopted.unpersist(blocking = false)
+      // next is materialized: the previous round's label blocks are
+      // unreachable from here on — O(1) storage across rounds
+      prevBlocks.foreach(_.unpersist(blocking = false))
+      prevBlocks = nextBlocks
       labels = next.select($"node", $"cluster")
       iter += 1
     }
-    e.unpersist()
+    // the returned DF reads only the FINAL round's blocks, which MUST
+    // stay persisted for the consumer (truncated lineage); they wait in
+    // the retained registry for releaseCheckpoints()
+    e.unpersist(blocking = false)
+    prevBlocks.foreach(retainedBlocks.add)
     labels
+  }
+
+  /** Eager `localCheckpoint` of `df`, returning the checkpointed RDDs
+    * it created so the caller can unpersist them once provably never
+    * read again. localCheckpoint materializes AND truncates the logical
+    * plan — cache() alone keeps the full lineage, so each round's plan
+    * would embed every prior round and planning cost grows per
+    * iteration. The blocks of a truncated-lineage DF can never be
+    * recomputed; they are found by diffing getPersistentRDDs around the
+    * checkpoint (public API; no private LogicalRDD poking). Serialized
+    * under checkpointLock: a CONCURRENT localCheckpoint landing between
+    * the snapshot and the diff would otherwise be captured — and later
+    * unpersisted — by this call. */
+  private[graft] def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) =
+    checkpointLock.synchronized {
+      val sc = df.sparkSession.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val out = df.localCheckpoint()
+      // the same job may also materialize OTHER persisted datasets the
+      // plan reads (e.g. the shared shingle cache); keep only the
+      // locally-checkpointed RDD this call created so we never free a
+      // cache someone else still uses
+      val added = (sc.getPersistentRDDs -- before).values
+        .filter(_.isCheckpointed).toSeq
+      (out, added)
+    }
+
+  private val checkpointLock = new Object
+
+  // final-round label blocks of every run call, pinned until the caller
+  // is done with the results
+  private val retainedBlocks = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+
+  /** Unpersist the final-round label blocks retained by prior [[run]]
+    * calls. Call ONLY after those results are fully consumed — their
+    * lineage is truncated and cannot recompute. */
+  def releaseCheckpoints(): Unit = {
+    var r = retainedBlocks.poll()
+    while (r != null) {
+      r.unpersist(blocking = false)
+      r = retainedBlocks.poll()
+    }
   }
 
   /** Driver-local components for METADATA-SCALE edge lists — the

@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * al. 1998, public).
   *
   * DataFrame-first dataflow, same discipline as the connected-
-  * components operator (`DedupQueries.q_dedup_clusters`):
+  * components operator ([[ConnectedComponents.run]]):
   *
   *  - `edges(src, dst)` is deduped once; out-degrees come from ONE
   *    groupBy and ride along as an `(src, dst, deg)` frame cached for

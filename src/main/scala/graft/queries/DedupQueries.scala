@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Fixtures
+import graft.graph.ConnectedComponents
 import graft.text.{MinHashLSH, SimHash}
 
 /** Near-duplicate mining beyond the exact/oracle paths in
@@ -72,135 +73,29 @@ object DedupQueries {
     * Jaccard pairs, each doc labelled with the min doc_id reachable in
     * its component — the step that turns pairwise similarity into
     * "keep one representative per duplicate group". Spark side:
-    * iterative min-label propagation (each round = one edge join + one
-    * min-agg; converges in O(component diameter) rounds — the standard
-    * scalable CC, no driver-side graph). DuckDB side: recursive-CTE
-    * transitive closure over the same pairs. */
+    * [[ConnectedComponents.run]], iterative min-label propagation with
+    * pointer jumping (converges in O(component diameter / 2) rounds —
+    * the standard scalable CC, no driver-side graph). DuckDB side:
+    * recursive-CTE transitive closure over the same pairs. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sc = spark.sparkContext
-
-    // localCheckpoint (eager) materializes AND truncates the logical
-    // plan — cache() alone keeps the full lineage, so each round's plan
-    // would embed every prior round and planning cost grows per
-    // iteration. The blocks of a truncated-lineage DF can never be
-    // recomputed, so only DFs that are provably never read again may be
-    // unpersisted — tracked here by diffing getPersistentRDDs around
-    // each checkpoint (public API; no private LogicalRDD poking).
-    // Serialized under DedupQueries.checkpointLock: a CONCURRENT
-    // localCheckpoint landing between the snapshot and the diff would
-    // otherwise be captured — and later unpersisted — by this call,
-    // destroying blocks whose truncated lineage cannot recompute.
-    def checkpointTracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
-      DedupQueries.checkpointLock.synchronized {
-        val before = sc.getPersistentRDDs.keySet
-        val out = df.localCheckpoint()
-        // the same job may also materialize OTHER persisted datasets
-        // the plan reads (e.g. the shared shingle cache); keep only the
-        // locally-checkpointed RDD this call created so we never free a
-        // cache someone else still uses
-        val added = (sc.getPersistentRDDs -- before).values
-          .filter(_.isCheckpointed).toSeq
-        (out, added)
-      }
-
     // checkpoint the expensive dedupNgram subplan ONCE: both branches
-    // of the bidirectional union below reference it, and without this
-    // the shingle join + Jaccard agg would evaluate twice
-    val (pairs, pairsBlocks) = checkpointTracked(
-      PipelineQueries.dedupNgram(spark, sfDir).select($"id_a", $"id_b"))
-    // edges: a CACHE pre-partitioned on the per-round join key (r22,
-    // the PageRank discipline) — cache preserves hashpartitioning(src)
-    // where the previous eager checkpoint dropped it, so every round's
-    // label join runs shuffled-hash with NO exchange on the edge side.
-    // Lineage stays one step deep (pairs is a checkpoint), and the
-    // pairs blocks MUST stay pinned until the loop ends: the lazy cache
-    // materializes on the first round's action and reads them —
-    // truncated lineage cannot recompute a freed block.
-    val edges = pairs
-      .union(pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-      .toDF("src", "dst")
-      .repartition($"src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r22 NOTE: the PageRank-style AQE-off loop was tried here and
-    // paired-measured SLOWER (0/4, +0.77 s; with data-sized shuffle
-    // partitions still 2/4, +0.23 s — BENCH_r22_paired_batch3*.json):
-    // on this pair graph AQE's runtime coalescing (≈1 post-shuffle
-    // partition for ~1k edges) beats any statically chosen count, and
-    // unlike pagerank the loop's plans are join-heavy node-scale
-    // frames where per-stage scheduling is not the dominant term.
-    // Reverted; AQE stays ON for this loop.
-    var (labels, prevBlocks) = checkpointTracked(
-      edges.select($"src".as("doc_id")).distinct()
-        .withColumn("cluster", $"doc_id"))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 50) {
-      // each node adopts the min label among itself and its neighbors
-      val msgs = edges
-        .join(labels.withColumnRenamed("doc_id", "src").hint("shuffle_hash"),
-          Seq("src"))
-        .groupBy($"dst".as("doc_id"))
-        .agg(min($"cluster").as("nbr_min"))
-      // cached within the round: the pointer-jump self-join references
-      // `adopted` twice, and uncached the edge join + min-agg would run
-      // twice per round
-      val adopted = labels.join(msgs, Seq("doc_id"), "left")
-        .select($"doc_id", $"cluster".as("old"),
-          least($"cluster", coalesce($"nbr_min", $"cluster")).as("cluster"))
-        .cache()
-      // pointer-jump (label compression): cluster := label(cluster).
-      // Labels only decrease, so the jump target's label is always <=
-      // the current one; this shortcuts chain-shaped components,
-      // halving the O(diameter) round count
-      val (next, nextBlocks) = checkpointTracked(adopted
-        .join(adopted.select($"doc_id".as("cluster"), $"cluster".as("jump")),
-          Seq("cluster"), "left")
-        .select($"doc_id", $"old",
-          least($"cluster", coalesce($"jump", $"cluster")).as("cluster")))
-      // convergence test scans the just-checkpointed blocks — no
-      // recompute of the round's joins
-      changed = next.filter($"cluster" =!= $"old").count()
-      adopted.unpersist(blocking = false)
-      // next is materialized: the previous round's label blocks are
-      // unreachable from here on — O(1) storage across rounds instead
-      // of one leaked block set per round
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = nextBlocks
-      labels = next.select($"doc_id", $"cluster")
-      iter += 1
-    }
-    // the returned DF reads only the FINAL round's blocks; edges and
-    // the pairs checkpoint behind them are done. The final labels
-    // blocks MUST stay persisted for the consumer (truncated lineage —
-    // dropping them would break the result), so they are handed to the
-    // retained registry for releaseClusterCheckpoints() to free once
-    // results are consumed.
-    edges.unpersist(blocking = false)
+    // of the edge bidirection read it, and without this the shingle
+    // join + Jaccard agg would evaluate twice. Its blocks stay pinned
+    // until run returns (its edge cache materializes from them).
+    val (pairs, pairsBlocks) = ConnectedComponents.checkpointTracked(
+      PipelineQueries.dedupNgram(spark, sfDir)
+        .select($"id_a".as("src"), $"id_b".as("dst")))
+    val labels = ConnectedComponents.run(pairs)
     pairsBlocks.foreach(_.unpersist(blocking = false))
-    prevBlocks.foreach(retainedClusterBlocks.add)
-    labels.orderBy($"doc_id")
+    labels.withColumnRenamed("node", "doc_id").orderBy($"doc_id")
   }
-
-  /** Lock serializing getPersistentRDDs-diff checkpoint tracking. */
-  private[queries] val checkpointLock = new Object
-
-  // final-round label blocks of every dedupClusters call, pinned until
-  // the caller is done with the results (the same long-lived-session
-  // concern evictShingleCache addresses for the shingle frames)
-  private val retainedClusterBlocks =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
   /** Unpersist the final-round label blocks retained by prior
-    * [[dedupClusters]] calls. Call ONLY after those results are fully
-    * consumed — their lineage is truncated and cannot recompute. */
-  def releaseClusterCheckpoints(): Unit = {
-    var r = retainedClusterBlocks.poll()
-    while (r != null) {
-      r.unpersist(blocking = false)
-      r = retainedClusterBlocks.poll()
-    }
-  }
+    * [[dedupClusters]] calls (and every other
+    * [[ConnectedComponents.run]]). Call ONLY after those results are
+    * fully consumed — their lineage is truncated and cannot recompute. */
+  def releaseClusterCheckpoints(): Unit = ConnectedComponents.releaseCheckpoints()
 
   val dedupClustersSql: String = {
     // transitive closure over the SAME exact-Jaccard pairs; cluster =

@@ -338,28 +338,6 @@ object JoinQueries {
     * tables, writing them on first use. Distinct sfDirs get distinct
     * table names so two scale factors in one JVM never clobber each
     * other's layout. */
-  /** Drop the memoized bucketed tables and forget every entry. The
-    * per-round harness never needs this (the JVM exits); a long-lived
-    * session embedding the library calls it after regenerating fixture
-    * data under a memoized sfDir, or to release stopped sessions the
-    * map would otherwise retain. */
-  def evictBucketedWarehouse(): Unit = {
-    val it = bucketedWarehouse.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val s = e.getKey._1
-      try {
-        s.sql(s"DROP TABLE IF EXISTS graft_bktq_orders_${e.getValue}")
-        s.sql(s"DROP TABLE IF EXISTS graft_bktq_lineitem_${e.getValue}")
-      } catch { case _: Exception => () } // stopped session: nothing to drop
-    }
-    bucketedWarehouse.clear()
-    // the DPP layout memo has the same lifecycle hazards (stale layout
-    // after fixture regeneration, stopped sessions pinned in the map);
-    // its staging dirs are TmpDirs-swept, so forgetting them suffices
-    dppWarehouse.clear()
-  }
-
   private def ensureBucketedTables(spark: SparkSession, sfDir: String): String =
     bucketedWarehouse.computeIfAbsent((spark, sfDir), { case (s, d) =>
       // MD5 of the full path: hashCode alone can collide across two

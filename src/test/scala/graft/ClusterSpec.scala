@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import graft.graph.ConnectedComponents
 
 /** Connected-components label propagation: planted components of
   * different shapes (chain, star, triangle+tail, singleton pair) all
-  * converge to their min-id label — including the chain, which needs
-  * multiple propagation rounds. */
+  * converge to their min-id label, in the distributed loop that
+  * q_dedup_clusters runs and in the driver-local union-find. */
 class ClusterSpec extends SparkSpec {
 
   test("min-label propagation finds planted components exactly") {
@@ -17,37 +17,18 @@ class ClusterSpec extends SparkSpec {
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (10L, 12L), (10L, 13L),
       (20L, 21L), (21L, 22L), (20L, 22L), (22L, 23L),
-      (30L, 31L)).toDF("id_a", "id_b")
-
-    // run the same propagation loop the query uses, against these pairs
-    val edges = pairs.union(pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-      .toDF("src", "dst").cache()
-    var labels = edges.select($"src".as("doc_id")).distinct()
-      .withColumn("cluster", $"doc_id").cache()
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < 50) {
-      val msgs = edges.join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
-        .groupBy($"dst".as("doc_id")).agg(min($"cluster").as("nbr_min"))
-      val next = labels.join(msgs, Seq("doc_id"), "left")
-        .select($"doc_id", least($"cluster", coalesce($"nbr_min", $"cluster")).as("cluster"))
-        .cache()
-      next.count()
-      changed = next.join(labels.withColumnRenamed("cluster", "old"), Seq("doc_id"))
-        .filter($"cluster" =!= $"old").count()
-      labels.unpersist()
-      labels = next
-      iters += 1
-    }
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (30L, 31L))
     val want = Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L,
       30L -> 30L, 31L -> 30L)
+    val got = ConnectedComponents.run(pairs.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want, s"got $got")
-    // the diameter-4 chain needs >1 round: convergence must be iterative
-    assert(iters >= 3 && iters < 50, s"converged in $iters rounds")
+    val local = ConnectedComponents.runLocal(pairs)
+    assert(local == want, s"runLocal got $local")
+    ConnectedComponents.releaseCheckpoints()
   }
 
   test("cluster loop keeps O(1) checkpoint blocks and rebuilds after cache eviction") {

@@ -61,6 +61,24 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.forall(_.getLong(1) == 0L), "one component labeled by node 0")
   }
 
+  test("superseded rounds free their checkpoints; release frees the last") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
+    ConnectedComponents.releaseCheckpoints()
+    val before = checkpointed
+    // a 40-node chain takes 6 rounds (5 that move a label, 1 that
+    // confirms), each with its own label checkpoint
+    val chain = (0L until 40L).sliding(2).map(s => (s(0), s(1))).toSeq
+    val got = ConnectedComponents.run(chain.toDF("src", "dst")).collect()
+    assert(got.forall(_.getLong(1) == 0L))
+    val grown = checkpointed -- before
+    assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
+    ConnectedComponents.releaseCheckpoints()
+    val left = checkpointed -- before
+    assert(left.isEmpty, s"retained checkpoints not freed: $left")
+  }
+
   test("q_entity_resolve equals brute-force components of brute-force pairs") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
