@@ -1,21 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Fixtures.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: codegen + shuffle machinery + parquet footers, so the
-    // first timed query doesn't absorb session start-up
-    import org.apache.spark.sql.functions.expr
-    spark.range(1000000).groupBy(expr("id % 10")).count().count()
-    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+    val spark = Fixtures.localSession()
+    Fixtures.warmUp(spark, sfDir)
     // deterministic name order: Map iteration order shifts when the
     // query set grows, which silently reshuffles who pays cache warmth
     // (e.g. the shared shingle cache) across rounds

@@ -66,6 +66,28 @@ object Fixtures {
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new graft.functions.GraftExtensions)
 
+  /** The local session the driver mains (Bench, Verify, Plans,
+    * ShuffleProbe) run on: `local[$SPARK_GRAFT_CPUS]` (default 4) with
+    * as many shuffle partitions, no UI, WARN logging. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm-up before timing: codegen + shuffle machinery + parquet
+    * footers, so the first timed query doesn't absorb session start-up. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).groupBy(expr("id % 10")).count().count()
+    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
+      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+  }
+
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame   = table(s, d, "customer")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (optimization rounds): dumps `explain("formatted")`
   * for every declared query to one file per query, so plan claims
   * (Exchange counts, join strategies, PushedFilters/ReadSchema) are
@@ -14,15 +12,9 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = if (args.length > 0) args(0) else "plans/r21"
     val suffix = if (args.length > 1) args(1) else "before"
-    val spark = Fixtures.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Fixtures.localSession()
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (optimization rounds, guide §1): runs ONE declared
   * query end-to-end (same `.count()` action as Bench) with a
@@ -17,19 +16,10 @@ object ShuffleProbe {
     require(args.nonEmpty, "usage: ShuffleProbe <query_name>")
     val name = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Fixtures.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Fixtures.localSession()
     val fn = SparkEntry.queries(name)
     // warmup exactly like Bench so JIT/footers don't skew the timing
-    import org.apache.spark.sql.functions.expr
-    spark.range(1000000).groupBy(expr("id % 10")).count().count()
-    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+    Fixtures.warmUp(spark, sfDir)
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var shufWrite = 0L

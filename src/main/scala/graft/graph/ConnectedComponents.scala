@@ -133,12 +133,12 @@ object ConnectedComponents {
 
   private val checkpointLock = new Object
 
-  // final-round label blocks of every run call, pinned until the caller
-  // is done with the results
-  private val retainedBlocks = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+  // final-round blocks of every run call (and of PageRank.run), pinned
+  // until the caller is done with the results
+  private[graph] val retainedBlocks = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
 
-  /** Unpersist the final-round label blocks retained by prior [[run]]
-    * calls. Call ONLY after those results are fully consumed — their
+  /** Unpersist the final-round blocks retained by prior [[run]] and
+    * [[PageRank.run]] calls. Call ONLY after those results are fully consumed — their
     * lineage is truncated and cannot recompute. */
   def releaseCheckpoints(): Unit = {
     var r = retainedBlocks.poll()

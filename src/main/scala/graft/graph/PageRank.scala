@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -50,7 +51,9 @@ object PageRank {
 
   /** Ranks after `iters` power iterations over directed `edges(src,
     * dst)`. Returns (node, rank) for every node appearing as a src or
-    * dst; ranks sum to 1. */
+    * dst; ranks sum to 1. The returned frame reads the final round's
+    * checkpoint blocks, which stay pinned until
+    * [[ConnectedComponents.releaseCheckpoints]]. */
   def run(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -119,7 +122,7 @@ object PageRank {
         .persist(StorageLevel.MEMORY_AND_DISK)
 
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
-      .localCheckpoint(eager = false)
+    var blocks = Seq.empty[RDD[_]]
     var it = 0
     while (it < iters) {
       // mass sitting on dangling nodes (no out-edges) this round:
@@ -149,16 +152,21 @@ object PageRank {
       // join+agg rounds per barrier) while the job count — the real
       // fixed cost of an iterative dataflow at any scale — halves.
       // Dangling graphs checkpoint every round anyway (the scalar
-      // aggregate above materializes the chain).
-      ranks =
-        if (it % 2 == 1 || it == iters - 1 || anyDangling)
-          next.localCheckpoint()
-        else next
+      // aggregate above materializes the chain). A checkpoint frees the
+      // one it supersedes: nothing reads those blocks again.
+      if (it % 2 == 1 || it == iters - 1 || anyDangling) {
+        val (cp, cpBlocks) = ConnectedComponents.checkpointTracked(next)
+        blocks.foreach(_.unpersist(blocking = false))
+        ranks = cp
+        blocks = cpBlocks
+      } else ranks = next
       it += 1
     }
     // the loop ends on a just-materialized checkpoint (it == iters-1
-    // always checkpoints), so the helper frames are safe to release —
-    // the returned ranks are a self-contained checkpointed RDD
+    // always checkpoints), so the helper frames are safe to release;
+    // the returned ranks read its blocks, which wait in the retained
+    // registry for ConnectedComponents.releaseCheckpoints()
+    blocks.foreach(ConnectedComponents.retainedBlocks.add)
     nodes.unpersist()
     linked.unpersist()
     if (danglingNodes != null) danglingNodes.unpersist()

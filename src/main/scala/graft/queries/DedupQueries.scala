@@ -93,7 +93,7 @@ object DedupQueries {
 
   /** Unpersist the final-round label blocks retained by prior
     * [[dedupClusters]] calls (and every other
-    * [[ConnectedComponents.run]]). Call ONLY after those results are
+    * [[ConnectedComponents.run]] and [[graft.graph.PageRank.run]]). Call ONLY after those results are
     * fully consumed — their lineage is truncated and cannot recompute. */
   def releaseClusterCheckpoints(): Unit = ConnectedComponents.releaseCheckpoints()
 

@@ -535,16 +535,16 @@ object ScanQueries {
     * layout — local paths, s3a, or the repo's ranged-HTTP filesystem:
     * the listing goes through `FileSystem.listStatus` (never
     * `java.io.File`, which only speaks local disk), and the SESSION's
-    * Hadoop conf rides to executors via a broadcast
-    * [[graft.sources.SerializableHadoopConf]] so custom scheme
-    * registrations (`fs.http.impl`, SigV4 keys) resolve inside tasks
-    * too. InventorySpec drives this same code path against a
-    * MockS3Server-backed HTTP layout. */
+    * Hadoop conf rides to executors via [[graft.sources.SessionConf]]
+    * so custom scheme registrations (`fs.http.impl`, SigV4 keys)
+    * resolve inside tasks too. InventorySpec drives this same code
+    * path against a MockS3Server-backed HTTP layout. */
   def inventoryOf(spark: SparkSession, ordersBase: String): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sessionState.newHadoopConf()
+    val session = graft.sources.SessionConf.broadcast(spark)
     val basePath = new org.apache.hadoop.fs.Path(ordersBase)
-    val fs = basePath.getFileSystem(hconf)
+    val fs = basePath.getFileSystem(
+      graft.sources.SessionConf.hadoop(session.value, Map.empty))
     // wire-format filesystems (the ranged-HTTP FS) list names
     // percent-encoded ('=' → %3D); local filesystems list them raw —
     // one pattern accepts both, and the year value is digits either way
@@ -560,11 +560,9 @@ object ScanQueries {
           case _ => Array.empty[(Long, String)]
         }
       }.toSeq
-    val bc = spark.sparkContext.broadcast(
-      new graft.sources.SerializableHadoopConf(hconf))
     spark.createDataset(files).repartition(8)
       .mapPartitions { it =>
-        val conf = bc.value.value
+        val conf = graft.sources.SessionConf.hadoop(session.value, Map.empty)
         it.map { case (year, path) =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
             .fromPath(new org.apache.hadoop.fs.Path(path), conf)

@@ -818,8 +818,7 @@ object TextQueries {
       val bcConf = graft.sources.SessionConf.broadcast(s)
       warcShardDs(s, d).foreachPartition {
         it: Iterator[(Long, Array[Byte])] =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          bcConf.value.foreach { case (k, v) => conf.set(k, v) }
+          val conf = graft.sources.SessionConf.hadoop(bcConf.value, Map.empty)
           it.foreach { case (sid, bytes) =>
             val p = new org.apache.hadoop.fs.Path(s"$dir/shard-$sid.warc.gz")
             val fs = p.getFileSystem(conf)

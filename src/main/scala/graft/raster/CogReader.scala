@@ -1,8 +1,10 @@
 package graft.raster
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
+
+import graft.sources.SessionConf
 
 /** Distributed COG read-back: the source-side complement of CogWriter
   * (the reference is write-only; an engine that can't re-read its own
@@ -23,10 +25,17 @@ object CogReader {
     * legal non-COG layout common for non-GDAL writers) overflow the
     * 4 MiB probe: modest files (≤64 MiB) transparently re-read whole;
     * larger ones surface BigTiff's clear beyond-the-probe error
-    * instead of a raw index crash. */
-  def readMeta(uri: String, confEntries: Map[String, String] = Map.empty): Seq[BigTiff.PageMeta] = {
-    val fs = fileSystem(uri, confEntries)
-    val len = fs.getFileStatus(new Path(uri)).getLen
+    * instead of a raw index crash. The Hadoop conf is the active
+    * session's under `confEntries` ([[SessionConf]]). */
+  def readMeta(uri: String, confEntries: Map[String, String] = Map.empty): Seq[BigTiff.PageMeta] =
+    readHeader(uri, SessionConf.hadoop(
+      SessionConf.active.fold(Map.empty[String, String])(SessionConf.entries), confEntries))
+
+  /** [[readMeta]] over an already-built Hadoop conf. */
+  private[graft] def readHeader(uri: String, conf: Configuration): Seq[BigTiff.PageMeta] = {
+    val path = new Path(uri)
+    val fs = path.getFileSystem(conf)
+    val len = fs.getFileStatus(path).getLen
     // growing probe ladder (GDAL reads 16 KiB first and grows the same
     // way): typical COG headers are KBs, so the 64 KiB rung answers
     // almost every file — at a 10k-file mosaic that is ~640 MB of
@@ -34,7 +43,7 @@ object CogReader {
     // Headers with big external offset arrays climb to 4 MiB, then the
     // whole file (bounded: a >64 MiB "header" is rejected as before).
     def attempt(probe: Long): Seq[BigTiff.PageMeta] =
-      BigTiff.readPages(readRange(uri, 0L, math.min(len, probe).toInt, confEntries))
+      BigTiff.readPages(readRange(fs, path, 0L, math.min(len, probe).toInt))
     try attempt(64L << 10)
     catch {
       case _: BigTiff.HeaderProbeTooSmall if len > (64L << 10) =>
@@ -46,16 +55,9 @@ object CogReader {
     }
   }
 
-  private def fileSystem(uri: String, confEntries: Map[String, String]) = {
-    val conf = new Configuration()
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    new Path(uri).getFileSystem(conf)
-  }
-
-  private def readRange(uri: String, offset: Long, length: Int,
-      confEntries: Map[String, String]): Array[Byte] = {
-    val fs = fileSystem(uri, confEntries)
-    val in = fs.open(new Path(uri))
+  private def readRange(fs: FileSystem, path: Path, offset: Long,
+      length: Int): Array[Byte] = {
+    val in = fs.open(path)
     try {
       val buf = new Array[Byte](length)
       in.readFully(offset, buf, 0, length)
@@ -385,7 +387,8 @@ object CogReader {
   def readStrips(spark: SparkSession, uri: String,
       confEntries: Map[String, String] = Map.empty): Dataset[Tile] = {
     import spark.implicits._
-    val pages = readMeta(uri, confEntries)
+    val session = SessionConf.broadcast(spark)
+    val pages = readHeader(uri, SessionConf.hadoop(session.value, confEntries))
     // only the first page would be read — reject extra IFDs loudly
     // rather than silently dropping their rows
     require(pages.length == 1, s"striped TIFF has ${pages.length} IFDs — " +
@@ -418,14 +421,12 @@ object CogReader {
         Array.tabulate(planes)(b => pg.counts(b * nStrips + si)).toSeq,
         math.min(rps, height - si * rps)) // last strip may be short
     }
-    val bcConf = spark.sparkContext.broadcast(confEntries)
     spark.createDataset(plan)
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
-        val conf = new Configuration()
-        bcConf.value.foreach { case (k, v) => conf.set(k, v) }
         val path = new Path(uri)
-        val in = path.getFileSystem(conf).open(path)
+        val in = path.getFileSystem(SessionConf.hadoop(session.value, confEntries))
+          .open(path)
         val out = it.map { case (si, offs, cnts, rows) =>
           val px =
             if (planes == 1) {
@@ -449,11 +450,14 @@ object CogReader {
 
   /** Level `level` of the COG at `uri` as a Dataset[Tile]. `profile`
     * must match the written file (CogWriter's input profile); dims and
-    * page structure are cross-checked against the parsed header. */
+    * page structure are cross-checked against the parsed header. The
+    * driver and every task see the session's Hadoop conf under
+    * `confEntries` ([[SessionConf]]). */
   def read(spark: SparkSession, uri: String, profile: RasterProfile,
       level: Int = 0, confEntries: Map[String, String] = Map.empty): Dataset[Tile] = {
     import spark.implicits._
-    val pages = readMeta(uri, confEntries)
+    val session = SessionConf.broadcast(spark)
+    val pages = readHeader(uri, SessionConf.hadoop(session.value, confEntries))
     val data = pages.filter(!_.isMask)
     require(level < data.length, s"level $level beyond ${data.length} pages")
     val pg = data(level)
@@ -474,17 +478,14 @@ object CogReader {
         maskPg.map(_.offsets(i)).getOrElse(0L),
         maskPg.map(_.counts(i)).getOrElse(0L))
     }
-    val bcConf = spark.sparkContext.broadcast(confEntries)
 
     spark.createDataset(plan)
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         // one FileSystem handle per partition, ranged reads per tile
-        val conf = new Configuration()
-        bcConf.value.foreach { case (k, v) => conf.set(k, v) }
         val path = new Path(uri)
-        val fs = path.getFileSystem(conf)
-        val in = fs.open(path)
+        val in = path.getFileSystem(SessionConf.hadoop(session.value, confEntries))
+          .open(path)
         val out = it.map { case (ti, off, cnt, mOff, mCnt) =>
           materializeTile(in, profile, level, gw, ti, off, cnt, mOff, mCnt)
         }

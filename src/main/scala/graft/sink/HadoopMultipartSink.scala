@@ -1,7 +1,9 @@
 package graft.sink
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
+
+import graft.sources.SessionConf
 
 /** MultipartSink over the Hadoop FileSystem API — the cluster-real
   * implementation the LocalMultipartSink stands in for: the same code
@@ -10,17 +12,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * `dirUri`; uploads are idempotent via overwrite-create, exactly the
   * S3 MPU re-upload semantics (reference ccog/aws_tools.py:88-125).
   *
-  * `confEntries` carries any FileSystem config the executors need
-  * (serialized as strings — Configuration itself isn't serializable). */
+  * The FileSystem sees the constructing session's Hadoop conf under
+  * `confEntries`, the write's own options — the one rule every graft
+  * read and write follows ([[SessionConf]]). */
 class HadoopMultipartSink(dirUri: String,
     confEntries: Map[String, String] = Map.empty) extends MultipartSink {
 
-  @transient private lazy val conf = {
-    val c = new Configuration()
-    confEntries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  @transient private lazy val fs: FileSystem = new Path(dirUri).getFileSystem(conf)
+  // taken on the driver at construction, shipped to tasks through the
+  // one memoized broadcast; none when built outside Spark
+  private val session: Option[Broadcast[Map[String, String]]] =
+    SessionConf.active.map(SessionConf.broadcast)
+  @transient private lazy val fs: FileSystem = new Path(dirUri).getFileSystem(
+    SessionConf.hadoop(session.fold(Map.empty[String, String])(_.value), confEntries))
 
   private def partPath(n: Int) = new Path(dirUri, f"part-$n%05d.bin")
 

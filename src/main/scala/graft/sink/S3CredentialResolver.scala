@@ -9,11 +9,11 @@ package graft.sink
   *
   *   1. explicit values handed to a constructor/factory;
   *   2. `fs.<scheme>.sigv4.{access.key,secret.key,session.token,region}`
-  *      from the supplied configuration getter. Datasource options are
+  *      from the supplied configuration getter. Per-call options are
   *      merged OVER the session Hadoop configuration upstream (options
-  *      win — CogDataSource.planInputPartitions does the merge), so
-  *      per-read options already shadow `spark.hadoop.*` session keys
-  *      by the time they reach this resolver;
+  *      win — [[graft.sources.SessionConf]] builds that conf for every
+  *      read and write), so they already shadow `spark.hadoop.*`
+  *      session keys by the time they reach this resolver;
   *   3. anonymous: no credentials, requests go unsigned (sigv4-exempt
   *      endpoints), region falls back to [[DefaultRegion]].
   *

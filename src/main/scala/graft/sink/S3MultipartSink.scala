@@ -27,7 +27,8 @@ import java.time.Duration
   *  - executors each hold their own HttpClient (@transient lazy) and
   *    stream parts directly — the driver never sees part bytes, so the
   *    path scales with executor count, not driver memory;
-  *  - 5xx and connection failures retry with exponential backoff; 4xx
+  *  - 5xx, 429 and connection failures retry with exponential backoff
+  *    on the read path's [[graft.sources.RangeRetryPolicy]]; other 4xx
   *    fail fast (a NoSuchUpload/EntityTooSmall retried forever would
   *    mask a real bug);
   *  - complete() treats an HTTP-200 response whose body is an
@@ -43,7 +44,7 @@ class S3MultipartSink(endpoint: String, bucket: String, key: String,
     crc32c: Boolean = false,
     ifNoneMatch: Boolean = false) extends ResumableMultipartSink {
 
-  require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
+  private val retry = graft.sources.RangeRetryPolicy(maxAttempts, backoffMs)
   // fail at construction with the -D flag named, not per-task deep in
   // an executor with the JDK's opaque "restricted header" error
   if (virtualHost) SigV4.requireHostHeaderAllowed()
@@ -102,40 +103,21 @@ class S3MultipartSink(endpoint: String, bucket: String, key: String,
   @transient private lazy val signer: Option[SigV4.RequestSigner] =
     credentials.map(new SigV4.RequestSigner(_, region))
 
-  /** Send with bounded retry: 5xx and IOExceptions back off and retry
-    * (S3 throttling/transient contract), 4xx raise immediately. The
-    * request is RE-BUILT (and therefore re-SIGNED) per attempt — a
-    * replayed x-amz-date can drift past SigV4's 15-minute skew window
-    * under long backoffs and turn a transient outage into a
-    * misleading 403 RequestTimeTooSkewed (the read path's
-    * RangeRetryPolicy re-mints for exactly this reason).
-    * `transientBody` marks 2xx responses that must retry anyway —
-    * AWS documents CompleteMultipartUpload/UploadPartCopy answering
-    * HTTP 200 with an `<Error><Code>InternalError</Code>` body the
-    * client should treat like a 5xx; aborting there would discard a
-    * fully-uploaded MPU over a transient commit hiccup. */
+  /** Send through [[retry]] (the request is re-built, so re-signed,
+    * per attempt); a non-retried 4xx raises at once. `transientBody`
+    * marks 2xx responses that must retry anyway — AWS documents
+    * CompleteMultipartUpload/UploadPartCopy answering HTTP 200 with an
+    * `<Error><Code>InternalError</Code>` body the client should treat
+    * like a 5xx; aborting there would discard a fully-uploaded MPU
+    * over a transient commit hiccup. */
   private def send(mk: () => HttpRequest, what: String,
       transientBody: String => Boolean = _ => false): HttpResponse[String] = {
-    var attempt = 0
-    var last: Either[Throwable, HttpResponse[String]] = null
-    while (attempt < maxAttempts) {
-      if (attempt > 0) Thread.sleep(backoffMs << (attempt - 1))
-      attempt += 1
-      last =
-        try {
-          val r = http.send(mk(), HttpResponse.BodyHandlers.ofString())
-          if (r.statusCode() >= 500) Right(r)
-          else if (r.statusCode() / 100 == 2 && transientBody(r.body()))
-            Right(r)
-          else return checkedOk(r, what)
-        } catch { case e: java.io.IOException => Left(e) }
-    }
-    last match {
-      case Right(r) => throw new java.io.IOException(
-        s"$what failed after $maxAttempts attempts: HTTP ${r.statusCode()} ${r.body().take(500)}")
-      case Left(e) => throw new java.io.IOException(
-        s"$what failed after $maxAttempts attempts", e)
-    }
+    val transient = (r: HttpResponse[String]) =>
+      r.statusCode() / 100 == 2 && transientBody(r.body())
+    val r = retry.send(http, what, mk, HttpResponse.BodyHandlers.ofString(), transient)
+    if (retry.retryable(r.statusCode()) || transient(r)) throw new java.io.IOException(
+      s"$what failed after $maxAttempts attempts: HTTP ${r.statusCode()} ${r.body().take(500)}")
+    checkedOk(r, what)
   }
 
   /** The documented retry-a-200 case: an embedded Error document whose

@@ -175,9 +175,13 @@ object CogWriteSupport {
     * single ≤5 TiB object cannot hold); otherwise the single-file
     * path. */
   def insert(path: String, opts: Map[String, String], overwrite: Boolean,
-      data: DataFrame): Unit =
-    if (opts.contains("mosaic.grid")) insertMosaic(path, opts, overwrite, data)
-    else insertSingle(path, opts, overwrite, data)
+      data: DataFrame): Unit = {
+    // the write's Hadoop view — filesystem, S3 dialect and credentials
+    // alike: session conf under the write options ([[SessionConf]])
+    val hconf = SessionConf.hadoop(data.sparkSession, opts)
+    if (opts.contains("mosaic.grid")) insertMosaic(path, opts, hconf, overwrite, data)
+    else insertSingle(path, opts, hconf, overwrite, data)
+  }
 
   /** An http(s) write target is an S3 object: the writer speaks the
     * real multipart protocol straight to the endpoint — no staging
@@ -188,12 +192,12 @@ object CogWriteSupport {
       key: String, virtualHost: Boolean, scheme: String)
 
   private[sources] def s3Target(path: String,
-      opts: Map[String, String]): Option[S3Dest] = {
+      hconf: Configuration): Option[S3Dest] = {
     val u = java.net.URI.create(path)
     val scheme = u.getScheme
     if (scheme != "http" && scheme != "https") None
     else {
-      val vh = opts.get(s"fs.$scheme.s3.virtual.host").exists(_.toBoolean)
+      val vh = Option(hconf.get(s"fs.$scheme.s3.virtual.host")).exists(_.toBoolean)
       val p = Option(u.getPath).getOrElse("").stripPrefix("/")
       if (vh) {
         require(p.nonEmpty, s"S3 write target needs a key: $path")
@@ -207,12 +211,17 @@ object CogWriteSupport {
     }
   }
 
-  private def s3Sink(d: S3Dest, opts: Map[String, String],
-      ifNoneMatch: Boolean): graft.sink.S3MultipartSink =
-    graft.sink.S3MultipartSink.fromConf(d.endpoint, d.bucket, d.key, opts,
+  /** Credentials and region resolve from `hconf` exactly as the
+    * read-side FileSystem resolves them. */
+  private def s3Sink(d: S3Dest, hconf: Configuration, opts: Map[String, String],
+      ifNoneMatch: Boolean): graft.sink.S3MultipartSink = {
+    val r = graft.sink.S3CredentialResolver.resolveHadoop(hconf, d.scheme)
+    new graft.sink.S3MultipartSink(d.endpoint, d.bucket, d.key,
+      credentials = r.credentials, region = r.region,
       virtualHost = d.virtualHost,
       crc32c = opts.get("s3.crc32c").exists(_.toBoolean),
       ifNoneMatch = ifNoneMatch)
+  }
 
   /** Single-COG write straight to S3: the MPU complete IS the atomic
     * commit (the local path's temp+rename has no object-store
@@ -221,8 +230,8 @@ object CogWriteSupport {
     * writer of the same key loses with a loud 412 instead of silently
     * clobbering; overwrite completes unconditionally (atomic
     * last-writer-wins, S3's native replace). */
-  private def insertSingleS3(d: S3Dest, opts: Map[String, String],
-      overwrite: Boolean, data: DataFrame): Unit = {
+  private def insertSingleS3(d: S3Dest, hconf: Configuration,
+      opts: Map[String, String], overwrite: Boolean, data: DataFrame): Unit = {
     val (profile, tiles) = buildProfileAndTiles(opts, data)
     // crash-resume (`s3.resume=true`): adopt the key's in-flight MPU
     // and re-upload only unverified parts — the restarted-ingest path
@@ -236,7 +245,7 @@ object CogWriteSupport {
     // caller, exactly like pointing two Spark jobs at one output path.
     val resume = opts.get("s3.resume").exists(_.toBoolean)
     try CogWriter.write(tiles, profile,
-      s3Sink(d, opts, ifNoneMatch = !overwrite), resume = resume)
+      s3Sink(d, hconf, opts, ifNoneMatch = !overwrite), resume = resume)
     catch {
       case e: Exception if !overwrite &&
           Option(e.getMessage).exists(m =>
@@ -262,20 +271,18 @@ object CogWriteSupport {
     * directory assembles under a temp name and swaps in only on full
     * success. */
   private def insertMosaic(path: String, opts: Map[String, String],
-      overwrite: Boolean, data: DataFrame): Unit = {
+      hconf: Configuration, overwrite: Boolean, data: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col, floor => ffloor}
     val grid = opts("mosaic.grid").toInt
     require(grid > 0, s"mosaic.grid must be positive (got $grid)")
 
-    val hconf = new Configuration()
-    opts.foreach { case (k, v) => hconf.set(k, v) }
     val target = new Path(path)
     // direct-S3 mosaics: regions are conditional creates straight to
     // their final keys (If-None-Match — the atomic no-clobber an
     // object store offers instead of rename); the listing FileSystem
     // below is still needed for append detection, the collision
     // fast-fail, and manifest validation
-    val s3 = s3Target(path, opts)
+    val s3 = s3Target(path, hconf)
     if (s3.isDefined) require(!overwrite,
       "cog mosaic overwrite is not supported on object-store targets — " +
         "there is no atomic directory swap: write the rebuilt mosaic to a " +
@@ -287,7 +294,8 @@ object CogWriteSupport {
           throw new IllegalArgumentException(
             s"S3 mosaic writes need the listing filesystem: pass " +
               s"fs.${s3.get.scheme}.impl=graft.sources.HttpRangeFileSystem " +
-              "(and credentials/virtual-host conf) as write options", e)
+              "(and credentials/virtual-host conf) as write options or " +
+              "session Hadoop conf", e)
       }
     // append-into-existing: new regions join the directory as new
     // files. NOTE geometry inference sees only the appended frame — an
@@ -394,15 +402,15 @@ object CogWriteSupport {
               (opts - "mosaic.grid") ++ Map("blocksize" -> bs.toString,
                 "width" -> rw.toString, "height" -> rh.toString,
                 "bands" -> bands.toString) ++ geoShift,
-              overwrite = false, sub)
+              hconf, overwrite = false, sub)
           }
         }), scala.concurrent.duration.Duration.Inf)
       if (s3.isDefined) {
         // regions already committed at their final keys; the sidecar
         // rides a plain PUT (idempotent rewrite — no If-None-Match)
         val d = s3.get
-        s3Sink(d.copy(key = s"${d.key.stripSuffix("/")}/$ManifestName"), opts,
-          ifNoneMatch = false)
+        s3Sink(d.copy(key = s"${d.key.stripSuffix("/")}/$ManifestName"), hconf,
+          opts, ifNoneMatch = false)
           .putObject(manifestBytes(opts, bs, width, height, bands))
       } else if (appendInto) {
         // all region COGs staged complete — move each into the live
@@ -580,8 +588,7 @@ object CogWriteSupport {
     for (((ry, rx), part) <- Set(existing.maxBy(_._1),
         existing.maxBy { case ((ry, rx), _) => (rx, ry) })) {
       val prof =
-        try CogReader.inferProfile(
-          CogReader.readMeta(part.toString, opts.filter(_._1.startsWith("fs."))))
+        try CogReader.inferProfile(CogReader.readHeader(part.toString, fs.getConf))
         catch {
           case e: Exception => throw new IllegalArgumentException(
             s"mosaic append could not parse existing part '$part': " +
@@ -698,13 +705,11 @@ object CogWriteSupport {
   }
 
   private def insertSingle(path: String, opts: Map[String, String],
-      overwrite: Boolean, data: DataFrame): Unit = {
-    s3Target(path, opts) match {
-      case Some(d) => return insertSingleS3(d, opts, overwrite, data)
+      hconf: Configuration, overwrite: Boolean, data: DataFrame): Unit = {
+    s3Target(path, hconf) match {
+      case Some(d) => return insertSingleS3(d, hconf, opts, overwrite, data)
       case None => ()
     }
-    val hconf = new Configuration()
-    opts.foreach { case (k, v) => hconf.set(k, v) }
     val target = new Path(path)
     val fs = target.getFileSystem(hconf)
     // existence is checked up front, but the OLD file is only deleted
@@ -724,8 +729,7 @@ object CogWriteSupport {
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val partDir = new Path(target.getParent, s".${target.getName}._cog_parts_$uid")
     val tmp = new Path(target.getParent, s".${target.getName}._cog_tmp_$uid")
-    val sink = new HadoopMultipartSink(partDir.toString,
-      opts.filter(_._1.startsWith("fs.")))
+    val sink = new HadoopMultipartSink(partDir.toString, opts)
     try {
       val res = CogWriter.write(tiles, profile, sink)
       val out = fs.create(tmp, true)
@@ -961,11 +965,8 @@ case class CogInputPartition(uri: String,
     strips: Option[StripSource] = None,
     // the table's own (tiny) option map — rides the partition itself
     // while the session conf rides the memoized broadcast; options WIN
-    // over session entries when merged task-side
-    tableOpts: Map[String, String] = Map.empty) extends InputPartition {
-  /** Task-side view: session conf under table options (options win). */
-  def mergedConf: Map[String, String] = conf.value ++ tableOpts
-}
+    // over session entries when merged task-side ([[SessionConf]])
+    tableOpts: Map[String, String] = Map.empty) extends InputPartition
 
 class CogScan(paths: Seq[String], conf: Map[String, String],
     bounds: Map[String, (Option[Int], Option[Int])],
@@ -1085,15 +1086,15 @@ class CogScan(paths: Seq[String], conf: Map[String, String],
 
   private def computePartitions(): Array[InputPartition] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    // merge the SESSION's Hadoop configuration under the datasource
-    // options (options win): spark.hadoop.* credentials/endpoints must
-    // reach the executors' FileSystem creation, exactly as they do for
-    // the built-in sources — otherwise s3a:// works for parquet but
-    // not for this source
-    import scala.jdk.CollectionConverters._
-    val sessionConf = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    val merged = sessionConf ++ conf
+    // the SESSION's Hadoop configuration under the datasource options
+    // (options win): spark.hadoop.* credentials/endpoints must reach
+    // the executors' FileSystem creation, exactly as they do for the
+    // built-in sources — otherwise s3a:// works for parquet but not for
+    // this source. Session conf rides the ONE memoized broadcast per
+    // context (a fresh multi-hundred-entry broadcast per scan/re-plan
+    // was pure waste); the table's tiny option map rides each partition
+    val bcConf = SessionConf.broadcast(spark)
+    val hc = SessionConf.hadoop(bcConf.value, conf)
 
     // expand each path: single file, directory (its *.tif/*.tiff), or
     // glob — a MOSAIC of many COGs is the realistic 100 TB raster
@@ -1102,8 +1103,6 @@ class CogScan(paths: Seq[String], conf: Map[String, String],
     // non-intersecting files. Multiple paths (`load(a, b, …)`) expand
     // independently and concatenate — the listing-free mosaic shape
     // for endpoints with no directory contract (http://)
-    val hc = new Configuration()
-    merged.foreach { case (k, v) => hc.set(k, v) }
     def isTif(n: String): Boolean = {
       val l = n.toLowerCase(java.util.Locale.ROOT)
       l.endsWith(".tif") || l.endsWith(".tiff")
@@ -1143,7 +1142,7 @@ class CogScan(paths: Seq[String], conf: Map[String, String],
     // message (bad magic, truncated IFD, illegal field type) is
     // useless against a 10k-file mosaic without the path
     def metaOf(f: String): (String, Seq[BigTiff.PageMeta]) =
-      try (f, CogReader.readMeta(f, merged))
+      try (f, CogReader.readHeader(f, hc))
       catch {
         case e: Exception => throw new IllegalArgumentException(
           s"cog mosaic planning failed to parse '$f': ${e.getMessage}", e)
@@ -1162,10 +1161,6 @@ class CogScan(paths: Seq[String], conf: Map[String, String],
         finally pool.shutdown()
       }
 
-    // session conf rides the ONE memoized broadcast per context (a
-    // fresh multi-hundred-entry broadcast per scan/re-plan was pure
-    // waste); the table's tiny option map rides each partition
-    val bcConf = SessionConf.broadcast(spark)
     // NOTE (scale): the InputPartitions necessarily hold one
     // CogTileSpec per surviving tile on the driver (~40 B each — a few
     // GB at a 50M-tile grid, the same inherent-to-TIFF driver ceiling
@@ -1462,12 +1457,7 @@ class CogPartitionReaderFactory extends PartitionReaderFactory {
 class CogPartitionReader(part: CogInputPartition)
     extends PartitionReader[InternalRow] {
 
-  private val merged = part.mergedConf
-  private val hconf = {
-    val c = new Configuration()
-    merged.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  private val hconf = SessionConf.hadoop(part.conf.value, part.tableOpts)
   private val fsPath = new Path(part.uri)
   // opened only becomes true AFTER fs.open succeeds: a lazy val that
   // flipped the flag first would make close() re-attempt (and re-throw)
@@ -1485,10 +1475,8 @@ class CogPartitionReader(part: CogInputPartition)
       val ranges = part.tiles.flatMap(s =>
         Seq((s.off, s.cnt), (s.mOff, s.mCnt)) ++ s.pOff.zip(s.pCnt))
       inVar = CoalescingInput.wrap(raw, ranges,
-        merged.get("range.gap").map(_.toLong)
-          .getOrElse(CoalescingInput.DefaultGap),
-        merged.get("range.maxspan").map(_.toLong)
-          .getOrElse(CoalescingInput.DefaultMaxSpan))
+        hconf.getLong("range.gap", CoalescingInput.DefaultGap),
+        hconf.getLong("range.maxspan", CoalescingInput.DefaultMaxSpan))
       opened = true
     }
     inVar

@@ -329,18 +329,28 @@ class HttpsRangeFileSystem extends HttpRangeFileSystem {
   override def getScheme: String = "https"
 }
 
-/** Bounded retry for range requests: IOExceptions and throttle-class
-  * statuses (5xx, 429) back off exponentially and retry with a FRESH
-  * request per attempt — rebuilt through the `mk` thunk so SigV4
-  * signatures are re-minted rather than replayed. Everything else
-  * (2xx, 3xx, 4xx incl. 403 signature refusals and 404) returns to
-  * the caller immediately: retrying those masks real errors. */
+/** The one bounded HTTP retry of graft's object-store I/O (ranged
+  * reads, listings, the MPU janitor and the multipart sink):
+  * IOExceptions and throttle-class statuses (5xx, 429) back off
+  * exponentially and retry with a FRESH request per attempt — rebuilt
+  * through the `mk` thunk so SigV4 signatures are re-minted rather
+  * than replayed (a replayed x-amz-date can drift past SigV4's
+  * 15-minute skew window under long backoffs). `alsoRetry` adds a
+  * caller's own transient answers (the sink's HTTP 200 carrying an
+  * InternalError document). Everything else (2xx, 3xx, 4xx incl. 403
+  * signature refusals and 404) returns to the caller immediately:
+  * retrying those masks real errors. */
 private[graft] final case class RangeRetryPolicy(attempts: Int = 4,
     backoffMs: Long = 100L) {
   require(attempts >= 1, s"retry attempts must be >= 1: $attempts")
 
+  /** The retried statuses. */
+  def retryable(status: Int): Boolean = status >= 500 || status == 429
+
   def send[T](http: HttpClient, what: String, mk: () => HttpRequest,
-      handler: HttpResponse.BodyHandler[T]): HttpResponse[T] = {
+      handler: HttpResponse.BodyHandler[T],
+      alsoRetry: HttpResponse[T] => Boolean = (_: HttpResponse[T]) => false)
+      : HttpResponse[T] = {
     var attempt = 0
     var lastEx: java.io.IOException = null
     var lastR: HttpResponse[T] = null.asInstanceOf[HttpResponse[T]]
@@ -349,13 +359,13 @@ private[graft] final case class RangeRetryPolicy(attempts: Int = 4,
       attempt += 1
       try {
         val r = http.send(mk(), handler)
-        if (r.statusCode() < 500 && r.statusCode() != 429) return r
+        if (!retryable(r.statusCode()) && !alsoRetry(r)) return r
         lastR = r; lastEx = null
       } catch { case e: java.io.IOException => lastEx = e }
     }
     if (lastEx != null) throw new java.io.IOException(
       s"$what failed after $attempts attempts", lastEx)
-    lastR // exhausted on a retryable status: caller raises with context
+    lastR // exhausted on a retried answer: caller raises with context
   }
 }
 

@@ -1,10 +1,6 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
 
 /** Byte-verified atomic shard commit — the ONE home of the protocol
   * both WARC sinks (the batch `df.write.format("warc")` path and the
@@ -85,51 +81,6 @@ private[graft] object WarcCommit {
         s"$context: $fin holds DIFFERENT bytes after a successful " +
           s"rename — $mismatchDetail; a racing writer with " +
           "non-deterministic bytes replaced this commit")
-    }
-  }
-}
-
-/** The session `hadoopConfiguration` as a broadcast `Map` — what an
-  * executor-side `new Configuration()` must be seeded with or s3a
-  * credentials / custom filesystems silently vanish on that one code
-  * path. Memoized per SparkCONTEXT, not per session: the conf object
-  * is context-level state shared by every session clone (each
-  * streaming query's foreachBatch runs in a cloned session — keying
-  * by session would rebuild the broadcast per stream and pin every
-  * clone forever), so the map stays bounded at one entry per LIVE
-  * context — stopped contexts are swept on the next call, so a JVM
-  * that cycles contexts (test suites) never accumulates dead ones.
-  * The LIVE conf is snapshotted and fingerprinted on EVERY call —
-  * building the map is trivial; only the broadcast is skipped when
-  * nothing changed — so a caller that mutates the conf between
-  * queries (credentials rotation, a test pointing at a fresh mock
-  * endpoint) always ships current values, while the steady-state
-  * per-micro-batch cost drops from a multi-hundred-entry broadcast
-  * to a map hash. */
-private[graft] object SessionConf {
-  private final case class Snap(conf: Map[String, String],
-      bc: Broadcast[Map[String, String]])
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.SparkContext, Snap]()
-
-  def broadcast(spark: SparkSession): Broadcast[Map[String, String]] = {
-    val sc = spark.sparkContext
-    // sweep entries whose context has STOPPED: a long-lived JVM that
-    // cycles SparkContexts (test suites, repeated local runs) must not
-    // strongly retain each dead context and its broadcast forever
-    memo.keySet.removeIf(k => (k ne sc) && k.isStopped)
-    val snap = sc.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    val cur = memo.get(sc)
-    // FULL equality, not a hash: a collision would silently ship
-    // rotated-out credentials. A superseded broadcast is left to the
-    // driver GC / ContextCleaner — destroy() could kill an in-flight
-    // query still holding it in its partitions.
-    if (cur != null && cur.conf == snap) cur.bc
-    else {
-      val bc = sc.broadcast(snap)
-      memo.put(sc, Snap(snap, bc))
-      bc
     }
   }
 }

@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -168,9 +167,7 @@ object WarcWriteSupport {
     val contentType = opts.getOrElse("content.type", "text/html")
 
     val dirPath = new Path(path)
-    val hc = new Configuration(spark.sparkContext.hadoopConfiguration)
-    opts.foreach { case (k, v) => hc.set(k, v) }
-    val fs = dirPath.getFileSystem(hc)
+    val fs = dirPath.getFileSystem(SessionConf.hadoop(spark, opts))
     // refusal/overwrite operate on EVERY readable warc file (both the
     // batch writer's part-* and the streaming ingest's b*-p*-* names,
     // and foreign *.warc.gz) — counting only our own pattern would let
@@ -248,10 +245,8 @@ object WarcWriteSupport {
     normalized.foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val tc = new Configuration()
-        bcConf.value.foreach { case (k, v) => tc.set(k, v) }
-        opts.foreach { case (k, v) => tc.set(k, v) } // small map, closure-shipped
-        val tfs = new Path(path).getFileSystem(tc)
+        // opts: small map, closure-shipped
+        val tfs = new Path(path).getFileSystem(SessionConf.hadoop(bcConf.value, opts))
         var seq = 0
         it.grouped(capacity).foreach { group =>
           val records = group.map { row =>
@@ -448,9 +443,7 @@ class WarcScan(paths: Seq[String], conf: Map[String, String],
     * extra exists-probes at planning (4 RPCs/file on an object
     * store). */
   private lazy val prunedFiles: Seq[Candidate] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val hc = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.foreach { case (k, v) => hc.set(k, v) }
+    val hc = SessionConf.hadoop(org.apache.spark.sql.SparkSession.active, conf)
     def isWarc(n: String): Boolean = {
       val l = n.toLowerCase(java.util.Locale.ROOT)
       l.endsWith(".warc.gz") || l.endsWith(".warc")
@@ -574,8 +567,7 @@ class WarcScan(paths: Seq[String], conf: Map[String, String],
     val splitSize = conf.get("split.size").map(_.toLong)
       .getOrElse(WarcSplit.DefaultSplitSize)
     require(splitSize > 0, s"split.size must be positive, got $splitSize")
-    val hc = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.foreach { case (k, v) => hc.set(k, v) }
+    val hc = SessionConf.hadoop(bcConf.value, conf)
     files.flatMap { c =>
       WarcSplit.ranges(new Path(c.path), c.len, splitSize, hc, c.idxKnown)
         .map { case (s, e) =>
@@ -635,11 +627,8 @@ class WarcReaderFactory(cols: Array[String], pushed: Array[Filter],
       private var raw: Iterator[Warc.Record] = _
 
       private val records: Iterator[Warc.Record] = {
-        val hc = new Configuration()
-        part.conf.value.foreach { case (k, v) => hc.set(k, v) }
-        part.tableOpts.foreach { case (k, v) => hc.set(k, v) }
         val p = new Path(part.uri)
-        val fs = p.getFileSystem(hc)
+        val fs = p.getFileSystem(SessionConf.hadoop(part.conf.value, part.tableOpts))
         // incremental member-walk ([[Warc.streamRecords]]): task memory
         // is O(one record), never O(file) or O(member), so a foreign
         // multi-gigabyte CommonCrawl shard scans in a bounded task

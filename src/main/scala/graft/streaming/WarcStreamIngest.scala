@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
+import graft.sources.SessionConf
 import graft.text.Warc
 
 /** Streaming WARC ingest — the crawl-side twin of [[CogStreamIngest]]:
@@ -51,17 +51,15 @@ object WarcStreamIngest {
     // would drop s3a credentials / custom filesystems that work on
     // every other write path); memoized — a long-running stream pays
     // the broadcast once, not per micro-batch
-    val bcConf = graft.sources.SessionConf.broadcast(spark)
+    val bcConf = SessionConf.broadcast(spark)
     batch.select("doc_id", "source", "text")
       .repartition(partitions, org.apache.spark.sql.functions.col("doc_id"))
       .sortWithinPartitions("doc_id")
       .as[(Long, String, String)]
       .foreachPartition { (it: Iterator[(Long, String, String)]) =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val conf = new Configuration()
-        bcConf.value.foreach { case (k, v) => conf.set(k, v) }
         val dp = new Path(dir)
-        val fs = dp.getFileSystem(conf)
+        val fs = dp.getFileSystem(SessionConf.hadoop(bcConf.value, Map.empty))
         var seq = 0
         var prevId = Long.MinValue
         var first = true

@@ -76,6 +76,26 @@ class PageRankSpec extends SparkSpec {
     assert(math.abs(local.values.sum - 1.0) < 1e-9)
   }
 
+  test("superseded rounds free their checkpoints; release frees the last") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
+    ConnectedComponents.releaseCheckpoints()
+    val before = checkpointed
+    // a 200-node ring plus chords: no dangling node, so 10 iterations
+    // checkpoint every second round (5 checkpoints)
+    val rnd = new scala.util.Random(29)
+    val edges = (0L until 200L).map(v => (v, (v + 1) % 200)) ++
+      (1 to 300).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+    val ranks = PageRank.run(edges.toDF("src", "dst"), iters = 10).collect()
+    assert(ranks.length == 200)
+    val grown = checkpointed -- before
+    assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
+    ConnectedComponents.releaseCheckpoints()
+    val left = checkpointed -- before
+    assert(left.isEmpty, s"retained checkpoints not freed: $left")
+  }
+
   test("q_graph_pagerank: 20 rows, rank-ordered, sane node encoding") {
     val rows = AnalyticsQueries.graphPagerank(spark, sfDir).collect()
     assert(rows.length == 20)

@@ -65,6 +65,12 @@ class MockS3Server {
     errorBodyCompletes.set(n)
   }
   @volatile private var errorBodyCode: String = "InternalError"
+  /** Answer the next `n` part PUTs with 429 SlowDown (S3's throttle
+    * reply), storing nothing. */
+  def throttleNextPartPuts(n: Int): Unit = throttledParts.set(n)
+  def throttledPartPuts: Int = throttledPartCount.get()
+  private val throttledParts = new AtomicInteger(0)
+  private val throttledPartCount = new AtomicInteger(0)
   /** Simulate in-flight corruption of the next checksummed part body:
     * the server verifies the client's x-amz-checksum-crc32c against
     * bytes that differ from what was sent → 400 BadDigest. */
@@ -460,6 +466,10 @@ class MockS3Server {
                   Map("Content-Type" -> "application/xml"))
             }
         }
+      case ("PUT", _, Some(_), Some(_))
+          if throttledParts.getAndUpdate(n => math.max(0, n - 1)) > 0 =>
+        throttledPartCount.incrementAndGet()
+        s3Error(ex, 429, "SlowDown", "injected throttle")
       case ("PUT", _, Some(id), Some(pn)) => // upload part
         uploads.get(id) match {
           case None => s3Error(ex, 404, "NoSuchUpload", s"upload $id not found")

@@ -83,6 +83,18 @@ class S3SinkSpec extends SparkSpec {
     }
   }
 
+  test("HTTP 429 throttling of a part PUT is retried like a 5xx; upload still lands") {
+    withServer { srv =>
+      val sink = new S3MultipartSink(srv.endpoint, "b", "k", backoffMs = 1L)
+      sink.start()
+      srv.throttleNextPartPuts(3) // 3 SlowDowns, the 4th attempt lands
+      val etag = sink.uploadPart(1, Array.fill(16)(9.toByte))
+      assert(srv.throttledPartPuts == 3)
+      sink.complete(Seq(PartReceipt(1, 0L, 16L, etag)))
+      assert(srv.storedObject("b", "k").get.toSeq == Seq.fill(16)(9.toByte))
+    }
+  }
+
   test("exhausted retries surface the 5xx instead of looping forever") {
     withServer { srv =>
       val sink = new S3MultipartSink(srv.endpoint, "b", "k",
