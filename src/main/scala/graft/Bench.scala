@@ -34,14 +34,8 @@ object Bench {
         // queries from exactly this. Release every pinned cache so each
         // query is timed against a clean storage layer, like an
         // isolated rerun.
-        queries.DedupQueries.releaseClusterCheckpoints()
-        queries.DedupQueries.releaseSemanticFrames()
-        queries.PipelineQueries.evictShingleCache()
-        similarity.Ann.releaseBucketedFrames()
-        text.MinHashLSH.releaseCachedFrames()
-        text.SimHash.releaseCachedFrames()
-        spark.catalog.clearCache()
-        // the releases unpersist non-blocking; give the block manager a
+        QueryScope.release()
+        // the release unpersists non-blocking; give the block manager a
         // beat and compact the heap so the NEXT query's timer doesn't
         // absorb this query's deferred frees / promoted garbage
         System.gc()

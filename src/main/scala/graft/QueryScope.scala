@@ -1,0 +1,99 @@
+package graft
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** The one owner of what a query pins past its own return: every
+  * frame a query caches for a consumer downstream of it, every eager
+  * checkpoint an iterative loop leaves behind, and the memoized
+  * frames several queries share (the shingle universe). One
+  * [[release]] returns all of it — the reference's rule of keeping a
+  * chunk level only until the next one replaces it (ccog/ccog.py:
+  * 618-621), applied once instead of per operator.
+  *
+  * A query whose result reads pinned storage (a cached frame, or a
+  * checkpoint whose lineage is truncated and cannot recompute) leaves
+  * it registered here; the caller calls [[release]] once that result
+  * is consumed. Bench, Verify, graftbench and the specs run one query
+  * at a time, so one process-wide scope is enough: [[release]] frees
+  * what every query so far has pinned. */
+object QueryScope {
+
+  /** The blocks of one [[checkpoint]] call. A loop frees them as soon
+    * as the next round's checkpoint has materialized and nothing reads
+    * them again; blocks not freed this way wait for [[release]]. */
+  final class Checkpoint private[QueryScope] (rdds: Seq[RDD[_]]) {
+    def free(): Unit = rdds.foreach { r =>
+      pinned.remove(r)
+      r.unpersist(blocking = false)
+    }
+  }
+
+  // cached Datasets and checkpointed RDDs, unpersisted by release()
+  private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+  private val memos = new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]()
+  private val checkpointLock = new Object
+
+  /** `ds.cache()`, registered for [[release]]. Lineage stays intact, so
+    * a consumer that runs after the release just recomputes. */
+  def cache[T](ds: Dataset[T]): Dataset[T] = {
+    pinned.add(ds)
+    ds.cache()
+  }
+
+  /** Eager `localCheckpoint` of `df`, returning the checkpointed frame
+    * and its blocks, registered for [[release]]. localCheckpoint
+    * materializes AND truncates the logical plan — cache() alone keeps
+    * the full lineage, so each round's plan would embed every prior
+    * round and planning cost grows per iteration. The blocks of a
+    * truncated-lineage frame can never be recomputed; they are found by
+    * diffing getPersistentRDDs around the checkpoint (public API; no
+    * private LogicalRDD poking). Serialized under checkpointLock: a
+    * CONCURRENT localCheckpoint landing between the snapshot and the
+    * diff would otherwise be captured — and later unpersisted — by
+    * this call. */
+  def checkpoint(df: DataFrame): (DataFrame, Checkpoint) =
+    checkpointLock.synchronized {
+      val sc = df.sparkSession.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val out = df.localCheckpoint()
+      // the same job may also materialize OTHER persisted datasets the
+      // plan reads (e.g. the shared shingle cache); keep only the
+      // locally-checkpointed RDD this call created so we never free a
+      // cache someone else still uses
+      val added = (sc.getPersistentRDDs -- before).values
+        .filter(_.isCheckpointed).toSeq
+      added.foreach(pinned.add)
+      (out, new Checkpoint(added))
+    }
+
+  /** The value memoized under `key`, built on first use and dropped by
+    * [[release]]. Frames the build caches go through [[cache]], so the
+    * release that forgets the memo also unpersists them. */
+  def memo[V <: AnyRef](key: Any)(build: => V): V =
+    memos.computeIfAbsent(key, _ => build).asInstanceOf[V]
+
+  /** Unpersist everything registered and forget every memo. Call ONLY
+    * once the results read from it are consumed — a checkpoint's
+    * lineage is truncated and cannot recompute. */
+  def release(): Unit = {
+    memos.clear()
+    var p = pinned.poll()
+    while (p != null) {
+      p match {
+        case ds: Dataset[_] => ds.unpersist(blocking = false)
+        case r: RDD[_] => r.unpersist(blocking = false)
+      }
+      p = pinned.poll()
+    }
+  }
+
+  /** Run `body` with the session conf `key` set to `value`, restoring
+    * the previous value after. A plan built inside `body` sees the
+    * override; one built after it does not. */
+  def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, prev)
+  }
+}

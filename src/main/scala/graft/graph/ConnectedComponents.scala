@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.rdd.RDD
+import graft.QueryScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -27,8 +27,7 @@ object ConnectedComponents {
   /** (node, cluster) for every node in `edges(src, dst)`; cluster is
     * the MIN node id of the component — deterministic. Repeated edges
     * give the same labels. The returned frame reads the final round's
-    * checkpoint blocks, which stay pinned until
-    * [[releaseCheckpoints]]. */
+    * checkpoint blocks, which stay pinned until [[QueryScope.release]]. */
   def run(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -54,7 +53,7 @@ object ConnectedComponents {
     // statically chosen count, and unlike pagerank the loop's plans are
     // join-heavy node-scale frames where per-stage scheduling is not
     // the dominant term. Reverted; AQE stays ON for this loop.
-    var (labels, prevBlocks) = checkpointTracked(
+    var (labels, prevBlocks) = QueryScope.checkpoint(
       e.select($"src".as("node")).distinct()
         .withColumn("cluster", $"node"))
     var changed = 1L
@@ -76,7 +75,7 @@ object ConnectedComponents {
           least($"cluster", coalesce($"nbr_min", $"cluster")).as("cluster"))
         .cache()
       // pointer-jump (label compression): cluster := label(cluster)
-      val (next, nextBlocks) = checkpointTracked(adopted
+      val (next, nextBlocks) = QueryScope.checkpoint(adopted
         .join(adopted.select($"node".as("cluster"), $"cluster".as("jump")),
           Seq("cluster"), "left")
         .select($"node", $"old",
@@ -93,59 +92,16 @@ object ConnectedComponents {
       adopted.unpersist(blocking = false)
       // next is materialized: the previous round's label blocks are
       // unreachable from here on — O(1) storage across rounds
-      prevBlocks.foreach(_.unpersist(blocking = false))
+      prevBlocks.free()
       prevBlocks = nextBlocks
       labels = next.select($"node", $"cluster")
       iter += 1
     }
     // the returned DF reads only the FINAL round's blocks, which MUST
-    // stay persisted for the consumer (truncated lineage); they wait in
-    // the retained registry for releaseCheckpoints()
+    // stay persisted for the consumer (truncated lineage); they wait
+    // for QueryScope.release()
     e.unpersist(blocking = false)
-    prevBlocks.foreach(retainedBlocks.add)
     labels
-  }
-
-  /** Eager `localCheckpoint` of `df`, returning the checkpointed RDDs
-    * it created so the caller can unpersist them once provably never
-    * read again. localCheckpoint materializes AND truncates the logical
-    * plan — cache() alone keeps the full lineage, so each round's plan
-    * would embed every prior round and planning cost grows per
-    * iteration. The blocks of a truncated-lineage DF can never be
-    * recomputed; they are found by diffing getPersistentRDDs around the
-    * checkpoint (public API; no private LogicalRDD poking). Serialized
-    * under checkpointLock: a CONCURRENT localCheckpoint landing between
-    * the snapshot and the diff would otherwise be captured — and later
-    * unpersisted — by this call. */
-  private[graft] def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) =
-    checkpointLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      // the same job may also materialize OTHER persisted datasets the
-      // plan reads (e.g. the shared shingle cache); keep only the
-      // locally-checkpointed RDD this call created so we never free a
-      // cache someone else still uses
-      val added = (sc.getPersistentRDDs -- before).values
-        .filter(_.isCheckpointed).toSeq
-      (out, added)
-    }
-
-  private val checkpointLock = new Object
-
-  // final-round blocks of every run call (and of PageRank.run), pinned
-  // until the caller is done with the results
-  private[graph] val retainedBlocks = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
-
-  /** Unpersist the final-round blocks retained by prior [[run]] and
-    * [[PageRank.run]] calls. Call ONLY after those results are fully consumed — their
-    * lineage is truncated and cannot recompute. */
-  def releaseCheckpoints(): Unit = {
-    var r = retainedBlocks.poll()
-    while (r != null) {
-      r.unpersist(blocking = false)
-      r = retainedBlocks.poll()
-    }
   }
 
   /** Driver-local components for METADATA-SCALE edge lists — the

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.rdd.RDD
+import graft.QueryScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -52,8 +52,7 @@ object PageRank {
   /** Ranks after `iters` power iterations over directed `edges(src,
     * dst)`. Returns (node, rank) for every node appearing as a src or
     * dst; ranks sum to 1. The returned frame reads the final round's
-    * checkpoint blocks, which stay pinned until
-    * [[ConnectedComponents.releaseCheckpoints]]. */
+    * checkpoint blocks, which stay pinned until [[QueryScope.release]]. */
   def run(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -67,12 +66,9 @@ object PageRank {
     // plans/r22/q_graph_pagerank_iteration_after.txt iteration 1).
     // Off for the loop, restored after; measured −0.9 s at sf0.1
     // (isolated 4.2-4.8 → 3.3-3.7 s band).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try {
+    QueryScope.withConf(spark, "spark.sql.adaptive.enabled", "false") {
       runLoop(spark, edges, iters, damping)
-    } finally spark.conf.set(aqeKey, aqePrev)
+    }
   }
 
   private def runLoop(spark: SparkSession, edges: DataFrame, iters: Int,
@@ -122,7 +118,7 @@ object PageRank {
         .persist(StorageLevel.MEMORY_AND_DISK)
 
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var blocks = Seq.empty[RDD[_]]
+    var blocks = Option.empty[QueryScope.Checkpoint]
     var it = 0
     while (it < iters) {
       // mass sitting on dangling nodes (no out-edges) this round:
@@ -155,18 +151,17 @@ object PageRank {
       // aggregate above materializes the chain). A checkpoint frees the
       // one it supersedes: nothing reads those blocks again.
       if (it % 2 == 1 || it == iters - 1 || anyDangling) {
-        val (cp, cpBlocks) = ConnectedComponents.checkpointTracked(next)
-        blocks.foreach(_.unpersist(blocking = false))
+        val (cp, cpBlocks) = QueryScope.checkpoint(next)
+        blocks.foreach(_.free())
         ranks = cp
-        blocks = cpBlocks
+        blocks = Some(cpBlocks)
       } else ranks = next
       it += 1
     }
     // the loop ends on a just-materialized checkpoint (it == iters-1
     // always checkpoints), so the helper frames are safe to release;
-    // the returned ranks read its blocks, which wait in the retained
-    // registry for ConnectedComponents.releaseCheckpoints()
-    blocks.foreach(ConnectedComponents.retainedBlocks.add)
+    // the returned ranks read its blocks, which wait for
+    // QueryScope.release()
     nodes.unpersist()
     linked.unpersist()
     if (danglingNodes != null) danglingNodes.unpersist()

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Fixtures
+import graft.{Fixtures, QueryScope}
 import graft.text.{Dsir, FuzzyJoin, QualityClassifier}
 import graft.graph.PageRank
 
@@ -352,12 +352,10 @@ object AnalyticsQueries {
     // parquet-metadata count, one cheap action.
     val approxEdges = Fixtures.lineitem(spark, sfDir).count() * 2
     val parts = math.max(8L, approxEdges / 8000000L)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, parts.toString)
-    val ranks =
-      try PageRank.run(edges, iters = 8)
-      finally spark.conf.set(key, prev)
+    val ranks = QueryScope.withConf(spark, "spark.sql.shuffle.partitions",
+      parts.toString) {
+      PageRank.run(edges, iters = 8)
+    }
     ranks
       .select(
         when($"node" % 2 === 0, lit("part")).otherwise(lit("supplier"))
@@ -633,10 +631,7 @@ object AnalyticsQueries {
     val model = trainDistilled(spark, sfDir)
     val bc = spark.sparkContext.broadcast(model)
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDF().toDF("doc_id", "ts", "source", "text")
         .withWatermark("ts", "60 minutes")
         .dropDuplicatesWithinWatermark("doc_id")
@@ -655,7 +650,7 @@ object AnalyticsQueries {
         mem.addData(b2: _*)
         q.processAllAvailable()
       } finally q.stop()
-    } finally spark.conf.set(key, prev)
+    }
     spark.table("q_stream_score_out")
       .groupBy($"source", $"kept")
       .agg(count(lit(1)).as("n_docs"), round(avg($"p"), 3).as("mean_p"))
@@ -1558,17 +1553,29 @@ object AnalyticsQueries {
       // node-scale visited re-checkpoint it saved — and this graph
       // still adds nodes at hop 10, so the early exit never fires.
       // Reverted; the per-round eager checkpoint stands as measured.
-      var visited = Seq((0L, 0L)).toDF("node", "hop").localCheckpoint(true)
+      var (visited, visitedCp) =
+        QueryScope.checkpoint(Seq((0L, 0L)).toDF("node", "hop"))
       var frontier = visited
+      var frontierCp = Option.empty[QueryScope.Checkpoint]
       for (h <- 1 to 10) {
-        val next = frontier.join(edges, frontier("node") === edges("src"))
-          .select($"dst".as("node")).distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .withColumn("hop", lit(h.toLong))
-          .localCheckpoint(true)
-        visited = visited.union(next).localCheckpoint(true)
+        val (next, nextCp) = QueryScope.checkpoint(
+          frontier.join(edges, frontier("node") === edges("src"))
+            .select($"dst".as("node")).distinct()
+            .join(visited, Seq("node"), "left_anti")
+            .withColumn("hop", lit(h.toLong)))
+        val (grown, grownCp) = QueryScope.checkpoint(visited.union(next))
+        // both new rounds are materialized: nothing reads the previous
+        // visited or frontier blocks again
+        visitedCp.free()
+        frontierCp.foreach(_.free())
+        visited = grown
+        visitedCp = grownCp
         frontier = next
+        frontierCp = Some(nextCp)
       }
+      // the result reads only the final visited, pinned until
+      // QueryScope.release()
+      frontierCp.foreach(_.free())
       visited.groupBy($"hop")
         .agg(count(lit(1)).as("n_nodes"), min($"node").as("min_node"),
           max($"node").as("max_node"))

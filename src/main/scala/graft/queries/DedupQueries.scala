@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Fixtures
+import graft.{Fixtures, QueryScope}
 import graft.graph.ConnectedComponents
 import graft.text.{MinHashLSH, SimHash}
 
@@ -83,19 +83,17 @@ object DedupQueries {
     // of the edge bidirection read it, and without this the shingle
     // join + Jaccard agg would evaluate twice. Its blocks stay pinned
     // until run returns (its edge cache materializes from them).
-    val (pairs, pairsBlocks) = ConnectedComponents.checkpointTracked(
+    val (pairs, pairsBlocks) = QueryScope.checkpoint(
       PipelineQueries.dedupNgram(spark, sfDir)
         .select($"id_a".as("src"), $"id_b".as("dst")))
     val labels = ConnectedComponents.run(pairs)
-    pairsBlocks.foreach(_.unpersist(blocking = false))
+    pairsBlocks.free()
     labels.withColumnRenamed("node", "doc_id").orderBy($"doc_id")
   }
 
-  /** Unpersist the final-round label blocks retained by prior
-    * [[dedupClusters]] calls (and every other
-    * [[ConnectedComponents.run]] and [[graft.graph.PageRank.run]]). Call ONLY after those results are
-    * fully consumed — their lineage is truncated and cannot recompute. */
-  def releaseClusterCheckpoints(): Unit = ConnectedComponents.releaseCheckpoints()
+  /** [[QueryScope.release]], kept under this name for callers that
+    * free dedup results by it. */
+  def releaseClusterCheckpoints(): Unit = QueryScope.release()
 
   val dedupClustersSql: String = {
     // transitive closure over the SAME exact-Jaccard pairs; cluster =
@@ -176,19 +174,6 @@ object DedupQueries {
     * changes NOTHING about which pairs are compared (each same-cluster
     * pair meets in exactly one salt group), only bounds any single
     * task's left group at ~cap rows. */
-  // assignment frames pinned by semanticDedup (4 consumers: the salt
-  // scan, both join sides, the verdict join), registered for release —
-  // same pattern as Ann.releaseBucketedFrames
-  private val retainedSemantic =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  /** Unpersist every assignment frame semanticDedup pinned (Bench
-    * calls this between queries; long-lived sessions when done). */
-  def releaseSemanticFrames(): Unit = {
-    retainedSemantic.forEach(df => df.unpersist(blocking = false))
-    retainedSemantic.clear()
-  }
-
   private[graft] def semanticDedup(emb: DataFrame,
       model: graft.similarity.Kmeans.Model, tau: Double,
       clusterCap: Int = 100000): DataFrame = {
@@ -197,13 +182,12 @@ object DedupQueries {
     val bc = spark.sparkContext.broadcast(model)
     // cache: the salt-count scan, BOTH pair-join sides, and the final
     // verdict join all read this frame — uncached, the embeddings scan
-    // + assignment map would run four times per call
-    val assigned = emb.select($"vec_id", $"embedding")
+    // + assignment map would run four times per call; the returned
+    // frame reads it, so it stays pinned until QueryScope.release()
+    val assigned = QueryScope.cache(emb.select($"vec_id", $"embedding")
       .as[(Long, Array[Float])]
       .map { case (id, v) => (bc.value.assign(v), id, v) }
-      .toDF("cluster", "vec_id", "embedding")
-      .cache()
-    retainedSemantic.add(assigned)
+      .toDF("cluster", "vec_id", "embedding"))
     // oversize-cluster salt counts: O(k) rows to the driver
     val saltCount: Map[Int, Int] = assigned.groupBy($"cluster").count()
       .filter($"count" > clusterCap).select($"cluster", $"count")

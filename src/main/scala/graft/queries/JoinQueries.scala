@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Fixtures
+import graft.{Fixtures, QueryScope}
 
 /** Join surface (SURVEY.md §2.2 join rows).
   *
@@ -362,10 +362,7 @@ object JoinQueries {
   def joinBucketed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val sfx = ensureBucketedTables(spark, sfDir)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    QueryScope.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val perOrder = spark.table(s"graft_bktq_orders_$sfx")
         .join(spark.table(s"graft_bktq_lineitem_$sfx"),
           $"o_orderkey" === $"l_orderkey")
@@ -381,7 +378,7 @@ object JoinQueries {
         .orderBy($"o_orderstatus")
         .as[(String, Long, Double)].collect().toSeq
       rows.toDF("o_orderstatus", "n_orders", "sum_qty")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   val joinBucketedSql: String =

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Fixtures
+import graft.{Fixtures, QueryScope}
 
 /** LLM-training-data pipeline operators over documents/embeddings
   * (SURVEY.md §2.2 dedup/similarity/text rows) — the ORACLE-checkable
@@ -88,36 +88,26 @@ object PipelineQueries {
     * again by the LSH query. */
   // one cached shingle universe per (session, sfDir): dedupNgram and
   // dedupMinhash both consume it — without memoization each call would
-  // cache its own identical copy and recompute the shingling. Values
-  // hold BOTH cached frames (kept join + raw exploded) so eviction can
-  // unpersist everything the build pinned.
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
-
+  // cache its own identical copy and recompute the shingling. Both
+  // frames the build caches (kept join + raw exploded) are pinned until
+  // QueryScope.release(), which also forgets the memo.
   def keptShingles(spark: SparkSession, sfDir: String): DataFrame =
-    shingleCache.computeIfAbsent((spark, sfDir), { case (s, d) => buildKeptShingles(s, d) })._1
+    QueryScope.memo(("keptShingles", spark, sfDir))(buildKeptShingles(spark, sfDir))
 
-  /** Unpersist and drop every memoized shingle universe. The per-round
-    * harness never needs this (the JVM exits); a long-lived session
-    * embedding the library calls it when done with dedup queries. */
-  def evictShingleCache(): Unit = {
-    val it = shingleCache.values().iterator()
-    while (it.hasNext) {
-      val (kept, ex) = it.next()
-      kept.unpersist(blocking = false)
-      ex.unpersist(blocking = false)
-    }
-    shingleCache.clear()
-  }
+  /** [[QueryScope.release]], kept under this name for callers that
+    * free the shingle universe by it. */
+  def evictShingleCache(): Unit = QueryScope.release()
 
-  private def buildKeptShingles(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+  private def buildKeptShingles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // Shingling is a typed flatMap (the Generator surface, SURVEY §2.2
     // row 33), NOT a SQL transform(sequence(...), lambda) expression:
     // higher-order-function lambdas evaluate interpreted per element —
     // measured 14.4s of the 16s dedup path at sf0.1, vs <1s for this
-    // flatMap doing identical work.
-    val ex = Fixtures.documents(spark, sfDir)
+    // flatMap doing identical work. (doc, shingle) rows are reused 3×
+    // (pairs a/b + sizes): cache once instead of re-shingling the
+    // corpus per use.
+    val ex = QueryScope.cache(Fixtures.documents(spark, sfDir)
       .select($"doc_id", $"text").as[(Long, String)]
       .flatMap { case (id, text) =>
         val w = text.trim.toLowerCase(java.util.Locale.ROOT).split(" ")
@@ -130,15 +120,12 @@ object PipelineQueries {
             .map(sh => (id, sh))
         }
       }
-      .toDF("doc_id", "shingle")
-      // (doc, shingle) rows are reused 3× (pairs a/b + sizes): cache
-      // once instead of re-shingling the corpus per use.
-      .cache()
+      .toDF("doc_id", "shingle"))
     val kept = ex.groupBy($"shingle")
       .agg(count(lit(1)).as("df"))
       .filter($"df" <= NgramDfCap)
       .select($"shingle")
-    (ex.join(kept, Seq("shingle")).cache(), ex)
+    QueryScope.cache(ex.join(kept, Seq("shingle")))
   }
 
   /** Co-occurrence counts (id_a < id_b, n_common) over the kept

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.QueryScope
 import graft.raster._
 
 /** NATIVE raster operator surface (SURVEY §2.2 rows 34-36 + the sink
@@ -50,7 +51,7 @@ object RasterQueries {
 
   private[graft] def pyramidRollup(spark: SparkSession, sfDir: String,
       kernel: String): DataFrame =
-    WindowQueries.withShufflePartitions(spark, 8) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
       pyramidRollupBody(spark, sfDir, kernel)
     }
 
@@ -81,8 +82,10 @@ object RasterQueries {
         round(sum($"sum_v".cast("decimal(38,10)")).cast("double") /
           sum($"valid_px"), 4).as("mean_valid"))
       .orderBy($"level")
-    val materialized = out.cache()
-    materialized.count() // force before unpersisting the levels
+    // the result is cached and forced before the levels it reads are
+    // unpersisted; it stays pinned until QueryScope.release()
+    val materialized = QueryScope.cache(out)
+    materialized.count()
     levels.foreach(_.unpersist())
     materialized
   }
@@ -125,7 +128,7 @@ object RasterQueries {
     * the reference's parts_info table (ccog/ccog.py:717-773). */
   def rasterAssemble(spark: SparkSession, sfDir: String): DataFrame =
     // size-to-grid shuffle partitions, same rationale as mosaic_write
-    WindowQueries.withShufflePartitions(spark, 8) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
       rasterAssembleBody(spark, sfDir)
     }
 
@@ -141,7 +144,8 @@ object RasterQueries {
       .map(p => (p.level, p.ty, p.tx, p.offset, p.nbytes))
       .toDF("level", "ty", "tx", "offset", "nbytes")
       .orderBy($"level".desc, $"ty", $"tx")
-    val materialized = out.cache()
+    // pinned until QueryScope.release(), like pyramidRollup's result
+    val materialized = QueryScope.cache(out)
     materialized.count()
     placement.cached.unpersist()
     levels.foreach(_.unpersist())
@@ -152,7 +156,7 @@ object RasterQueries {
     * the local multipart sink; returns the file's structural fingerprint
     * (deflate is deterministic, so sha256 is a golden). */
   def cogWriteBytes(spark: SparkSession, sfDir: String): DataFrame =
-    WindowQueries.withShufflePartitions(spark, 8) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
       cogWriteBytesBody(spark, sfDir)
     }
 
@@ -274,7 +278,7 @@ object RasterQueries {
     * columns), then the new file is read back and rolled up with the
     * same per-level invariant as the read queries. */
   def rasterDsv2Write(spark: SparkSession, sfDir: String): DataFrame =
-    WindowQueries.withShufflePartitions(spark, 8) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
       rasterDsv2WriteBody(spark, sfDir)
     }
 
@@ -403,7 +407,7 @@ object RasterQueries {
     // and stats agg inside each region's CogWriter job otherwise fan
     // 48-tile regions across 32 near-empty tasks) — the same
     // size-to-volume discipline as the streaming demos and PageRank
-    WindowQueries.withShufflePartitions(spark, 8) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
       rasterMosaicWriteBody(spark, sfDir)
     }
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Fixtures
+import graft.{Fixtures, QueryScope}
 import graft.text.{Bpe, LangId, Winnowing}
 
 /** Text-analysis operators of the LLM-data pipeline: quality scoring
@@ -947,7 +947,7 @@ object TextQueries {
     // the wrapper must cover the WHOLE run (micro-batches plan during
     // processAllAvailable, not at start()) — the sibling streaming
     // queries' discipline
-    WindowQueries.withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDF().toDF("doc_id", "source", "text")
         .writeStream
         .foreachBatch(graft.streaming.WarcStreamIngest.stageBatch(dir) _)

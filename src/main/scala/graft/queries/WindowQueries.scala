@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Fixtures
+import graft.{Fixtures, QueryScope}
 
 /** Window-function surface + batch forms of the streaming time windows
   * (SURVEY.md §2.2). The time-window expressions are streaming-compatible
@@ -22,22 +22,15 @@ object WindowQueries {
 
   private val fmtS = "yyyy-MM-dd HH:mm:ss"
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the previous value after. The stateful streaming
-    * demo queries use this: a streaming query materializes one state
-    * store PER shuffle partition per stateful operator per micro-batch
-    * (a stream-stream join keeps four stores per partition), so at the
-    * session default of 32 partitions a 300-row demo pays ~hundreds of
-    * store commits of pure fixed overhead. The demos carry hundreds of
-    * rows by design — the operator SEMANTICS are what's exercised; a
-    * production stream would size partitions to its volume exactly the
-    * same way. */
-  private[queries] def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  // The stateful streaming demo queries below run with
+  // spark.sql.shuffle.partitions at 4 (QueryScope.withConf): a
+  // streaming query materializes one state store PER shuffle partition
+  // per stateful operator per micro-batch (a stream-stream join keeps
+  // four stores per partition), so at the session default of 32
+  // partitions a 300-row demo pays ~hundreds of store commits of pure
+  // fixed overhead. The demos carry hundreds of rows by design — the
+  // operator SEMANTICS are what's exercised; a production stream would
+  // size partitions to its volume exactly the same way.
 
   /** Ranking: top-3 orders per customer by totalprice (unique tiebreak). */
   def winRank(spark: SparkSession, sfDir: String): DataFrame = {
@@ -354,7 +347,7 @@ object WindowQueries {
         if (i % 4 == 0) "click" else "view", (i % 13) + 0.5)
     }
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = tumbleAgg(mem.toDF().toDF("ts", "event_type", "value")
           .withWatermark("ts", "10 minutes"))
         .writeStream.format("memory").queryName("q_stream_watermark_out")
@@ -390,7 +383,7 @@ object WindowQueries {
     // whose first occurrence is still inside the watermark
     val b2 = (150 until 300).map(ev)
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDF().toDF("event_id", "ts", "kind")
         .withWatermark("ts", "60 minutes")
         .dropDuplicatesWithinWatermark("event_id")
@@ -443,7 +436,7 @@ object WindowQueries {
     val b3 = for (u <- users; k <- 25 until 30) yield ev(u, k)
     val sentinel = SEvent(999L, new java.sql.Timestamp(base + 10 * 3600000L), 0.0)
     val mem = MemoryStream[SEvent]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDS().withWatermark("ts", "10 minutes")
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append(),
@@ -481,7 +474,7 @@ object WindowQueries {
     implicit val sqlCtx = spark.sqlContext
     val feed = streamQuantileFeed()
     val mem = MemoryStream[(java.sql.Timestamp, Double)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDF().toDF("ts", "value")
         .withWatermark("ts", "30 minutes")
         .groupBy(window($"ts", "10 minutes"),
@@ -545,7 +538,7 @@ object WindowQueries {
     implicit val sqlCtx = spark.sqlContext
     val (b1, b2, b3) = streamUpsertFeed()
     val mem = MemoryStream[Change]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDS()
         .groupByKey(_.key)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout())(CdcState.apply)
@@ -642,7 +635,7 @@ object WindowQueries {
       """ad_id = c_ad_id AND
         |click_ts >= imp_ts AND
         |click_ts <= imp_ts + interval 10 minutes""".stripMargin))
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = joined
         .writeStream.format("memory").queryName("q_stream_join_out")
         .outputMode("append").start()
@@ -691,7 +684,7 @@ object WindowQueries {
         .writeStream.format("memory").queryName("q_stream_recovery_out")
         .option("checkpointLocation", ckpt)
         .outputMode("complete").start()
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q1 = start()
       try { mem.addData(b1: _*); q1.processAllAvailable() } finally q1.stop()
       // restart from the same checkpoint: batch 1 is NOT replayed
@@ -744,7 +737,7 @@ object WindowQueries {
     val b1 = (0 until 150).flatMap(i => if (i % 10 == 0) Seq(doc(i), doc(i)) else Seq(doc(i)))
     val b2 = (120 until 250).map(doc)
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDF().toDF("doc_id", "ts", "source", "text")
         .withWatermark("ts", "60 minutes")
         .dropDuplicatesWithinWatermark("doc_id")
@@ -860,7 +853,7 @@ object WindowQueries {
       .as[(Long, String, String)].collect().sortBy(_._1)
     val half = docs.length / 2
     val mem = MemoryStream[(Long, String, String)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDS()
         .flatMap { case (id, src, text) => StreamMinHash.bandRows(id, src, text) }
         .groupByKey(r => (r._1, r._2))
@@ -909,7 +902,7 @@ object WindowQueries {
       .map(r => (r._3, r._4))
     val half = ev.length / 2
     val mem = MemoryStream[(String, Long)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDS()
         .groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout())(HeavyHitters.matcher)
@@ -958,7 +951,7 @@ object WindowQueries {
         if (r._2 % 97 == 0) r._4 * 8.0 else r._4))
     val third = ev.length / 3
     val mem = MemoryStream[(String, Long, Long, Double)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDS()
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append(),
@@ -1012,7 +1005,7 @@ object WindowQueries {
       .collect().sortBy(r => (r._2, r._3))
     val third = ev.length / 3
     val mem = MemoryStream[(Long, Long, Long, Double)]
-    withShufflePartitions(spark, 4) {
+    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
       val q = mem.toDS()
         .groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout())(Scd2State.matcher)

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.QueryScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -180,9 +181,8 @@ object Ann {
     * RIGHT side replicates each member to all S salts. Every
     * same-bucket pair therefore meets in exactly one salt group, in
     * both orientations, exactly as in the unsalted join. cache(): the
-    * size scan + both sides read the bucketed frame; registered for
-    * release so a long-lived session can return the storage (same
-    * pattern as the CC label blocks). Package-visible so EmbedIvfSpec
+    * size scan + both sides read the bucketed frame, which stays pinned
+    * until [[QueryScope.release]]. Package-visible so EmbedIvfSpec
     * can assert the split structure directly. */
   private[similarity] def saltedSides(emb: DataFrame, nCentroids: Int,
       nProbe: Int, bucketCap: Int): (DataFrame, DataFrame) = {
@@ -190,11 +190,10 @@ object Ann {
     import spark.implicits._
     val typed = emb.select($"vec_id", $"embedding").as[(Long, Array[Float])]
     val bcCent = spark.sparkContext.broadcast(sampleCentroids(emb, nCentroids))
-    val bucketed = typed.flatMap { case (id, raw) =>
+    val bucketed = QueryScope.cache(typed.flatMap { case (id, raw) =>
       val v = normalize(raw)
       topCentroids(bcCent.value, v, nProbe).iterator.map(b => (b, id, raw))
-    }.toDF("bucket", "id", "embedding").cache()
-    retainedBucketFrames.add(bucketed)
+    }.toDF("bucket", "id", "embedding"))
 
     // salt counts per oversize bucket: O(nCentroids) rows to the driver
     val saltCount: Map[Int, Int] = bucketed.groupBy($"bucket").count()
@@ -213,23 +212,6 @@ object Ann {
       explode(sequence(lit(0), salts - 1)).as("salt"),
       $"id".as("id_b"), $"embedding".as("vb"))
     (a, b)
-  }
-
-  // bucketed frames pinned by ivfNearDupPairs calls, released once the
-  // caller is done with the results (the same long-lived-session
-  // registry pattern as DedupQueries.retainedClusterBlocks)
-  private val retainedBucketFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist the bucketed frames cached by prior [[ivfNearDupPairs]]
-    * calls. Lineage is intact (plain cache), so this is safe at any
-    * point; results consumed later just recompute. */
-  def releaseBucketedFrames(): Unit = {
-    var f = retainedBucketFrames.poll()
-    while (f != null) {
-      f.unpersist(blocking = false)
-      f = retainedBucketFrames.poll()
-    }
   }
 
   /** Top-k probed-bucket neighbors for each query id.

@@ -375,29 +375,6 @@ class S3MultipartSink(endpoint: String, bucket: String, key: String,
   }
 }
 
-object S3MultipartSink {
-  /** Conf-driven factory: credentials/region resolve through
-    * [[S3CredentialResolver]] (explicit args → `fs.<scheme>.sigv4.*`
-    * keys → anonymous), so a sink built from a session's merged
-    * configuration signs exactly like the read-side FileSystem does.
-    * `conf` is the already-merged map (datasource options over
-    * `spark.hadoop.*`); the scheme is taken from the endpoint. */
-  def fromConf(endpoint: String, bucket: String, key: String,
-      conf: Map[String, String],
-      credentials: Option[SigV4.Credentials] = None,
-      region: Option[String] = None,
-      virtualHost: Boolean = false,
-      crc32c: Boolean = false,
-      ifNoneMatch: Boolean = false): S3MultipartSink = {
-    val scheme = java.net.URI.create(endpoint).getScheme
-    val r = S3CredentialResolver.resolve(conf.get, scheme,
-      explicitCreds = credentials, explicitRegion = region)
-    new S3MultipartSink(endpoint, bucket, key,
-      credentials = r.credentials, region = r.region,
-      virtualHost = virtualHost, crc32c = crc32c, ifNoneMatch = ifNoneMatch)
-  }
-}
-
 /** S3 object-integrity checksums (public algorithm spec): per-part
   * CRC32C as base64 of the 4 big-endian value bytes; the multipart
   * object's composite is base64(crc32c(concat(part checksum bytes)))

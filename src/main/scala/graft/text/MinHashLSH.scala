@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.QueryScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,39 +82,23 @@ object MinHashLSH {
     * (band, key), distinct, then two small joins back to the sets for
     * exact verification. Every shuffle is keyed — nothing quadratic in
     * corpus size. */
-  // cached frames pinned by nearDupPairs, registered for release so a
-  // long-lived session can return the storage (same pattern as
-  // similarity.Ann.releaseBucketedFrames)
-  private val retained =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  /** Unpersist every frame nearDupPairs pinned. Per-round harnesses
-    * never need this (the JVM exits); long-lived sessions call it when
-    * done with dedup. */
-  def releaseCachedFrames(): Unit = {
-    retained.forEach(df => df.unpersist(blocking = false))
-    retained.clear()
-  }
-
   def nearDupPairs(shingles: DataFrame, threshold: Double): DataFrame = {
     val spark = shingles.sparkSession
     import spark.implicits._
-    val docSets = shingles.groupBy($"doc_id")
-      .agg(collect_set($"shingle").as("sh"))
-      .cache()
-    retained.add(docSets)
+    // cached frames stay pinned until QueryScope.release()
+    val docSets = QueryScope.cache(shingles.groupBy($"doc_id")
+      .agg(collect_set($"shingle").as("sh")))
 
     // cache the SIGNATURE output too: the self-join consumes bandRows
     // on both sides, and the 192-permutation signature pass is the
     // dominant CPU cost — without the cache it runs twice
-    val bandRows = docSets.select($"doc_id", $"sh").as[(Long, Seq[String])]
-      .flatMap { case (id, sh) =>
-        val sig = signature(sh.map(hash64))
-        (0 until Bands).iterator.map(b => (b, bandKey(sig, b), id))
-      }
-      .toDF("band", "bkey", "doc_id")
-      .cache()
-    retained.add(bandRows)
+    val bandRows = QueryScope.cache(
+      docSets.select($"doc_id", $"sh").as[(Long, Seq[String])]
+        .flatMap { case (id, sh) =>
+          val sig = signature(sh.map(hash64))
+          (0 until Bands).iterator.map(b => (b, bandKey(sig, b), id))
+        }
+        .toDF("band", "bkey", "doc_id"))
 
     val cands = bandRows.as("x")
       .join(bandRows.as("y"),

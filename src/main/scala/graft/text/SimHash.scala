@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.QueryScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -62,27 +63,16 @@ object SimHash {
   def bandKey(pairIdx: Int, cvI: Int, cvJ: Int): Long =
     (pairIdx.toLong << 26) | (cvI.toLong << 13) | cvJ.toLong
 
-  // cached fingerprint frames, registered for release (same pattern as
-  // MinHashLSH.releaseCachedFrames / Ann.releaseBucketedFrames)
-  private val retained =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  /** Unpersist every frame nearDupPairs pinned (long-lived sessions). */
-  def releaseCachedFrames(): Unit = {
-    retained.forEach(df => df.unpersist(blocking = false))
-    retained.clear()
-  }
-
   /** All pairs with Hamming(fp) <= MaxDist over (doc_id, tokens) rows.
     * Output (id_a, id_b, hamming), id_a < id_b, totally ordered. */
   def nearDupPairs(docTokens: DataFrame): DataFrame = {
     val spark = docTokens.sparkSession
     import spark.implicits._
-    val fps = docTokens.as[(Long, Seq[String])]
+    // both sides of the banded self-join read it; pinned until
+    // QueryScope.release()
+    val fps = QueryScope.cache(docTokens.as[(Long, Seq[String])]
       .map { case (id, toks) => (id, fingerprint(toks)) }
-      .toDF("doc_id", "fp")
-      .cache() // both sides of the banded self-join read it
-    retained.add(fps)
+      .toDF("doc_id", "fp"))
     val keys = fps.as[(Long, Long)]
       .flatMap { case (id, fp) =>
         chunkPairs.iterator.zipWithIndex.map { case ((i, j), p) =>

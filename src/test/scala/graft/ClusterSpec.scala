@@ -28,7 +28,7 @@ class ClusterSpec extends SparkSpec {
     assert(got == want, s"got $got")
     val local = ConnectedComponents.runLocal(pairs)
     assert(local == want, s"runLocal got $local")
-    ConnectedComponents.releaseCheckpoints()
+    QueryScope.release()
   }
 
   test("cluster loop keeps O(1) checkpoint blocks and rebuilds after cache eviction") {
@@ -42,14 +42,14 @@ class ClusterSpec extends SparkSpec {
     val after = sc.getPersistentRDDs.count(_._2.isCheckpointed)
     assert(after - before <= 1, s"leaked checkpoint block sets: $before -> $after")
 
-    // shingle-cache eviction hook: drops the memoized frames and the
-    // next call rebuilds them from scratch
-    graft.queries.PipelineQueries.evictShingleCache()
+    // release drops the memoized shingle frames and the next call
+    // rebuilds them from scratch
+    QueryScope.release()
     assert(graft.queries.PipelineQueries.keptShingles(spark, sfDir).count() > 0)
 
-    // release hook frees the retained final-round blocks of every call
-    // made so far (results consumed above)
-    graft.queries.DedupQueries.releaseClusterCheckpoints()
+    // release frees the retained final-round blocks of every call made
+    // so far (results consumed above)
+    QueryScope.release()
     val released = sc.getPersistentRDDs.count(_._2.isCheckpointed)
     assert(released == 0, s"retained cluster checkpoints not freed: $released")
   }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.SparkSpec
+import graft.{QueryScope, SparkSpec}
 import graft.queries.AnalyticsQueries
 
 /** Generic connected-components laws + the entity-resolution
@@ -65,7 +65,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     import spark.implicits._
     val sc = spark.sparkContext
     def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
-    ConnectedComponents.releaseCheckpoints()
+    QueryScope.release()
     val before = checkpointed
     // a 40-node chain takes 6 rounds (5 that move a label, 1 that
     // confirms), each with its own label checkpoint
@@ -74,7 +74,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.forall(_.getLong(1) == 0L))
     val grown = checkpointed -- before
     assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
-    ConnectedComponents.releaseCheckpoints()
+    QueryScope.release()
     val left = checkpointed -- before
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
   }

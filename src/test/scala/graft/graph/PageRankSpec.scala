@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.SparkSpec
+import graft.{QueryScope, SparkSpec}
 import graft.queries.AnalyticsQueries
 
 /** PageRank correctness: closed-form graphs, exact equality with a
@@ -80,7 +80,7 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     val sc = spark.sparkContext
     def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
-    ConnectedComponents.releaseCheckpoints()
+    QueryScope.release()
     val before = checkpointed
     // a 200-node ring plus chords: no dangling node, so 10 iterations
     // checkpoint every second round (5 checkpoints)
@@ -91,7 +91,7 @@ class PageRankSpec extends SparkSpec {
     assert(ranks.length == 200)
     val grown = checkpointed -- before
     assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
-    ConnectedComponents.releaseCheckpoints()
+    QueryScope.release()
     val left = checkpointed -- before
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
   }

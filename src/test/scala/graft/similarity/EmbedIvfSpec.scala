@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.SparkSpec
+import graft.{QueryScope, SparkSpec}
 
 /** Unbanded IVF near-dup pairs vs exact all-pairs on PLANTED clusters
   * (same generator shape as AnnSpec: the fixture embeddings are
@@ -127,19 +127,19 @@ class EmbedIvfSpec extends SparkSpec {
     }
     val recall = got.count { case (a, b, _) => truth.contains((a, b)) }.toDouble / truth.size
     assert(recall >= 0.9, s"capped recall $recall over ${truth.size} true pairs")
-    Ann.releaseBucketedFrames()
+    QueryScope.release()
   }
 
-  test("releaseBucketedFrames returns the pinned storage to zero") {
+  test("QueryScope.release returns the pinned storage to zero") {
     val s = spark
     import s.implicits._
     val sc = s.sparkContext
-    Ann.releaseBucketedFrames() // drain anything earlier tests pinned
+    QueryScope.release() // drain anything earlier tests pinned
     val before = sc.getPersistentRDDs.size
     val df = planted.toDF("vec_id", "embedding")
     Ann.ivfNearDupPairs(df, minCos = 0.9, nCentroids = 20).count()
     assert(sc.getPersistentRDDs.size > before, "expected pinned bucket frame")
-    Ann.releaseBucketedFrames()
+    QueryScope.release()
     assert(sc.getPersistentRDDs.size == before, "bucket frames not released")
   }
 

@@ -60,10 +60,15 @@ class S3CredentialResolverSpec extends AnyFunSuite {
     val srv = new MockS3Server
     srv.requireSigV4(creds, "us-west-2")
     try {
-      val sink = S3MultipartSink.fromConf(srv.endpoint, "b", "conf/made.bin",
-        Map("fs.http.sigv4.access.key" -> creds.accessKey,
-          "fs.http.sigv4.secret.key" -> creds.secretKey,
-          "fs.http.sigv4.region" -> "us-west-2"))
+      // the cog write's resolution: credentials and region from the
+      // Hadoop conf the write sees, into the sink's constructor
+      val hconf = new org.apache.hadoop.conf.Configuration(false)
+      hconf.set("fs.http.sigv4.access.key", creds.accessKey)
+      hconf.set("fs.http.sigv4.secret.key", creds.secretKey)
+      hconf.set("fs.http.sigv4.region", "us-west-2")
+      val r = S3CredentialResolver.resolveHadoop(hconf, "http")
+      val sink = new S3MultipartSink(srv.endpoint, "b", "conf/made.bin",
+        credentials = r.credentials, region = r.region)
       sink.start()
       val e = sink.uploadPart(1, Array[Byte](4, 2))
       sink.complete(Seq(PartReceipt(1, 0L, 2L, e)))
