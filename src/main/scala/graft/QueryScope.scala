@@ -73,6 +73,12 @@ object QueryScope {
   def memo[V <: AnyRef](key: Any)(build: => V): V =
     memos.computeIfAbsent(key, _ => build).asInstanceOf[V]
 
+  /** How many frames and checkpointed RDDs are registered now. The
+    * scope holds them strongly, so unlike a count over
+    * `sc.getPersistentRDDs` (weak values, which GC may clear) this
+    * figure is exact. */
+  private[graft] def held: Int = pinned.size
+
   /** Unpersist everything registered and forget every memo. Call ONLY
     * once the results read from it are consumed — a checkpoint's
     * lineage is truncated and cannot recompute. */

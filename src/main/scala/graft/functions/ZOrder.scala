@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, GraftColumns}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 /** Z-order (Morton) curve encoding as a pure Column expression.
   *
@@ -16,7 +17,9 @@ import org.apache.spark.sql.functions._
   * read-time half is the COG source's planning-time bbox pruning);
   * Delta's OPTIMIZE ZORDER applies the same idea, here expressed with
   * nothing but codegen'd bitwise built-ins (shiftleft/&/|) — no UDF, no
-  * boxing, whole-stage codegen keeps it in the scan's fused loop.
+  * boxing, whole-stage codegen keeps it in the scan's fused loop. One
+  * Catalyst tree ([[ZOrder.expression]]) serves both the Column API and
+  * SQL.
   *
   * The spread uses the standard magic-mask doubling (each step doubles
   * the gap between occupied bits): 0x00FF00FF, 0x0F0F0F0F, 0x33333333,
@@ -24,57 +27,31 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Spread the low 16 bits of `c` so bit i lands at position 2i. */
-  private def spread16(c: Column): Column = {
-    val masked = c.bitwiseAND(lit(0xFFFFL))
-    val s1 = (masked.bitwiseOR(shiftleft(masked, 8))).bitwiseAND(lit(0x00FF00FFL))
-    val s2 = (s1.bitwiseOR(shiftleft(s1, 4))).bitwiseAND(lit(0x0F0F0F0FL))
-    val s3 = (s2.bitwiseOR(shiftleft(s2, 2))).bitwiseAND(lit(0x33333333L))
-    (s3.bitwiseOR(shiftleft(s3, 1))).bitwiseAND(lit(0x55555555L))
-  }
-
-  /** Morton key of (x, y): x's bits at even positions, y's at odd.
+  /** Morton key of (x, y): x's bits at even positions, y's at odd —
+    * [[expression]] as a Column.
     * Inputs outside [0, 65535] — or NON-INTEGRAL inputs, whose long
     * cast would silently alias distinct coordinates — RAISE rather
     * than aliasing under the 16-bit mask (which would destroy the
     * locality property file skipping depends on); NULLs propagate, and propagation wins
     * over the range check — `morton(70000, NULL)` is NULL, not an
-    * error, matching SQL's null-in/null-out convention for builtins.
+    * error, matching SQL's null-in/null-out convention for builtins. */
+  def morton(x: Column, y: Column): Column =
+    GraftColumns.column(expression(GraftColumns.expression(x),
+      GraftColumns.expression(y))).as("zorder")
+
+  /** The interleave as a raw Catalyst expression tree: [[morton]]'s
+    * body, and the SQL function [[GraftExtensions]] injects as
+    * `morton(x, y)` so plain `spark.sql` users can Z-order too.
     * The guard sits ONCE above the interleave — the magic-mask
     * doubling references its operand 16x, so guarding inside the
     * spread would inflate the expression tree and generated code
-    * 32-fold. Everything stays codegen'd builtins (`when`/
-    * `raise_error` included). */
-  def morton(x: Column, y: Column): Column = {
-    val lx = x.cast("long")
-    val ly = y.cast("long")
-    // the cast must be VALUE-PRESERVING: morton(1.7, y) and
-    // morton(1.2, y) would both truncate to (1, y) and silently alias
-    // distinct coordinates — the exact corruption the range guard
-    // exists to raise on
-    def ok(orig: Column, l: Column) =
-      l >= 0L && l <= 0xFFFFL && orig.cast("double") === l.cast("double")
-    when(lx.isNull.or(ly.isNull), lit(null).cast("long"))
-      .when(ok(x, lx).and(ok(y, ly)),
-        spread16(lx).bitwiseOR(shiftleft(spread16(ly), 1)))
-      .otherwise(raise_error(concat(
-        lit("morton() input out of range [0, 65535] or non-integral: ("),
-        x.cast("string"), lit(", "), y.cast("string"), lit(")"))).cast("long"))
-      .as("zorder")
-  }
-
-  /** The same interleave as a raw Catalyst expression tree, for the
-    * SQL function registry ([[GraftExtensions]] injects it as
-    * `morton(x, y)` so plain `spark.sql` users can Z-order too).
-    * Identical magic-mask steps; everything stays codegen'd builtins. */
-  def expression(x: org.apache.spark.sql.catalyst.expressions.Expression,
-      y: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.LongType
+    * 32-fold. Everything stays codegen'd builtins (`If`/`RaiseError`
+    * included). */
+  def expression(x: Expression, y: Expression): Expression = {
     def and(a: Expression, m: Long) = BitwiseAnd(a, Literal(m))
     def or(a: Expression, b: Expression) = BitwiseOr(a, b)
     def shl(a: Expression, n: Int) = ShiftLeft(a, Literal(n))
+    /** Spread the low 16 bits of `c` so bit i lands at position 2i. */
     def spread(c: Expression): Expression = {
       val masked = and(c, 0xFFFFL)
       val s1 = and(or(masked, shl(masked, 8)), 0x00FF00FFL)
@@ -82,13 +59,12 @@ object ZOrder {
       val s3 = and(or(s2, shl(s2, 2)), 0x33333333L)
       and(or(s3, shl(s3, 1)), 0x55555555L)
     }
-    // same single top-level range guard as the Column helper (see
-    // [[morton]]'s scaladoc for why it must not sit inside the spread,
-    // and why NULL propagation precedes the range raise)
-    import org.apache.spark.sql.types.StringType
     val lx = Cast(x, LongType)
     val ly = Cast(y, LongType)
-    import org.apache.spark.sql.types.DoubleType
+    // the cast must be VALUE-PRESERVING: morton(1.7, y) and
+    // morton(1.2, y) would both truncate to (1, y) and silently alias
+    // distinct coordinates — the exact corruption the range guard
+    // exists to raise on
     def ok(orig: Expression, l: Expression) =
       And(And(GreaterThanOrEqual(l, Literal(0L)),
         LessThanOrEqual(l, Literal(0xFFFFL))),

@@ -1,25 +1,25 @@
 package graft.raster
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
 import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWriter, PartReceipt}
 
 /** End-to-end COG write — the engine form of the reference's only
   * public API, `write_ccog` (reference ccog/ccog.py:801-971):
   *
-  *   pyramid (level loop, persist per level, SURVEY §4.1)
-  *   → per-tile encode, ONCE, into a persisted frame (narrow map,
-  *     fused stats partials)
+  *   pyramid and per-tile encode in one pass ([[PyramidEncode]]):
+  *     each task encodes the tiles it builds, every page ONCE, with
+  *     fused stats partials; only 2×-shrunk quadrants cross the wire
   *   → ONE collect: every tile's size plus exact per-partition band
   *     stats partials (grid×~20 B + bands×~100 B per partition)
   *   → driver layout (Offsets.layout, R25: the prefix sum IS the
   *     header's TileOffsets array) and header emit (BigTiff, R22)
-  *   → narrow placement map over the persisted frame (broadcast
+  *   → narrow placement map over the persisted pages (broadcast
   *     offsets) → ordered multipart sink (OrderedMultipartWriter,
   *     R28/R36).
   *
-  * One shuffle per pyramid level + one for packing: encoded bytes
-  * cross the wire once, into their parts.
+  * A halo-free write is three jobs: the collect (one stage per
+  * quadrant exchange, a few for the whole pyramid) and the sink's
+  * two. Encoded bytes cross the wire once, into their parts.
   */
 object CogWriter {
 
@@ -55,31 +55,16 @@ object CogWriter {
     val spark = level0.sparkSession
     import spark.implicits._
 
-    // 1. pyramid: every level persisted (Pyramid.build)
-    val levels = Pyramid.build(level0, profile)
-
-    // 2. encode every level ONCE; union is a plan-level concat, no
-    // shuffle. With maskPages each tile emits its 1-bit validity plane
-    // too — the reference's data+mask interleave (ccog/ccog.py:409-422).
-    val encoded = levels
-      .map(_.flatMap { t =>
-        if (profile.maskPages)
-          Seq(TileCodec.encode(t, profile), TileCodec.encodeMask(t, profile))
-        else Seq(TileCodec.encode(t, profile))
-      })
-      .reduce(_ union _)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // 1-2. pyramid + encode of every page, ONCE, persisted
+    val encoded = PyramidEncode.encode(level0, profile)
 
     try {
-      // 3. one collect of metadata only (the bytes column is never
-      // read): per partition, its tiles' sizes and the masked PER-BAND
-      // stats partials of its level-0 data pages — no second pass over
-      // pixels (the reference pays a full extra pass,
+      // 3. one collect of metadata only (the bytes stay on the
+      // executors): per partition, its tiles' sizes and the masked
+      // PER-BAND stats partials of its level-0 data pages — no second
+      // pass over pixels (the reference pays a full extra pass,
       // ccog/ccog.py:38,511-541)
-      val perPartition = encoded
-        .select($"level", $"ty", $"tx", $"page", $"nbytes", $"pxTotal", $"bandValid",
-          $"bandSum", $"bandSumSq", $"bandMin", $"bandMax")
-        .as[TileMeta].rdd
+      val perPartition = encoded.pages
         .mapPartitions { it =>
           val sizes = Array.newBuilder[Offsets.TileSize]
           var stats = Seq.empty[BandPartial]
@@ -128,9 +113,10 @@ object CogWriter {
       val maxBlob = math.max(maxTile, headerBlobs.map(_.bytes.length.toLong).max)
 
       // 6. one ordered blob stream: header ++ non-sparse tiles, each
-      // placed by a narrow map over the persisted encode
+      // placed by a narrow map over the persisted pages
       val blobs = spark.createDataset(headerBlobs)
-        .union(Offsets.placedWith(encoded, layout).filter(_.nbytes > 0)
+        .union(Offsets.placedWith(spark.createDataset(encoded.pages), layout)
+          .filter(_.nbytes > 0)
           .map(p => Blob(p.offset, p.bytes)))
       val totalLen = layout.fileLen
       val receipts =
@@ -142,10 +128,7 @@ object CogWriter {
 
       Result(headerLen, totalLen, tileBytes, nTiles, nSparse,
         receipts.size, nLevels, stats, receipts)
-    } finally {
-      encoded.unpersist()
-      levels.foreach(_.unpersist())
-    }
+    } finally encoded.free()
   }
 
   /** Bytes-in-memory path for small outputs / tests — the reference's
@@ -157,12 +140,6 @@ object CogWriter {
     (sink.assembled, res)
   }
 }
-
-/** An encoded tile without its bytes — what the writer's one driver
-  * collect reads off the persisted encode. */
-private[raster] case class TileMeta(level: Int, ty: Int, tx: Int, page: Int,
-    nbytes: Int, pxTotal: Long, bandValid: Array[Long], bandSum: Array[Double],
-    bandSumSq: Array[Double], bandMin: Array[Double], bandMax: Array[Double])
 
 /** Exact partial of one band's level-0 stats. Per-tile partials are
   * deterministic (fixed row-major loops); the cross-tile reduction must
@@ -201,7 +178,7 @@ private[raster] object BandPartial {
   def merge(a: Seq[BandPartial], b: Seq[BandPartial]): Seq[BandPartial] =
     if (a.isEmpty) b else if (b.isEmpty) a else a.zip(b).map { case (x, y) => x + y }
 
-  def of(m: TileMeta, b: Int): BandPartial = {
+  def of(m: EncodedTile, b: Int): BandPartial = {
     val valid = m.bandValid(b) > 0
     BandPartial(m.pxTotal, m.bandValid(b), decimal(m.bandSum(b)), decimal(m.bandSumSq(b)),
       if (valid) m.bandMin(b) else Double.PositiveInfinity,

@@ -3,9 +3,9 @@ package graft.raster
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
-/** Resolution-pyramid driver — the engine form of the reference's core
-  * dataflow loop (reference ccog/ccog.py:558-666): per level, every tile
-  * is downsampled 2× (narrow map), then the four shrunken quadrants that
+/** Per-level resolution pyramid — the reference's core dataflow loop
+  * (reference ccog/ccog.py:558-666) one level at a time: every tile is
+  * downsampled 2× (narrow map), then the four shrunken quadrants that
   * land in the same next-level tile meet in one `groupByKey` (a single
   * shuffle per level — the analog of the reference's mosaic+rechunk,
   * ccog/ccog.py:652-657).
@@ -16,35 +16,76 @@ import org.apache.spark.storage.StorageLevel
   * `to_delayed(optimize_graph=False)` (ccog/ccog.py:618-621, SURVEY
   * §4.1); Spark expresses it as persist/unpersist.
   *
+  * [[build]] is the reference form of the pyramid: the raster queries
+  * and the specs read its levels, and [[CogWriter]] takes it for halo
+  * kernels ([[HaloExchange]]). Halo-free COG writes go through
+  * [[PyramidEncode]], which builds the same tiles from the same
+  * [[quadrant]] and [[stitch]] without caching any raw level.
+  *
   * Scale shape: the shuffle payload at level L+1 is 1/4 of level L's
   * pixel volume, so total shuffle over the whole pyramid is bounded by
-  * 1/3 of the source volume regardless of depth — this holds unchanged
-  * on a 1000-executor cluster.
+  * 1/3 of the source volume regardless of depth.
   */
 object Pyramid {
+
+  /** Tile `t` shrunk 2× by the profile's halo-free kernel, addressed to
+    * its quadrant of the next-level tile. */
+  def quadrant(t: Tile, profile: RasterProfile): Quadrant = {
+    val (px, mk) =
+      if (TileCodec.isComplex(profile.dtype))
+        Kernels.downsampleComplex2x(profile.resampling, t, profile.nodata)
+      else Kernels.downsample2x(profile.resampling, t, profile.nodata)
+    Quadrant(t.level + 1, t.ty / 2, t.tx / 2, t.ty % 2, t.tx % 2,
+      (t.h + 1) / 2, (t.w + 1) / 2, px, mk)
+  }
+
+  /** Mosaic the ≤4 quadrants of tile (level, ty, tx) into that tile:
+    * the one stitch loop of every pyramid path. Cells no quadrant
+    * covers stay nodata and masked out. */
+  def stitch(level: Int, ty: Int, tx: Int, qs: Iterator[Quadrant],
+      profile: RasterProfile): Tile = {
+    val half = profile.blockSize / 2
+    val bands = profile.bands
+    // complex planes carry (re, im) pairs — stitch moves sample UNITS
+    val spu = if (TileCodec.isComplex(profile.dtype)) 2 else 1
+    val (th, tw) = profile.tileDims(level, ty, tx)
+    val pixels = new Array[Double](bands * th * tw * spu)
+    java.util.Arrays.fill(pixels, profile.nodata)
+    val mask = new Array[Byte](th * tw)
+    qs.foreach { q =>
+      val offY = q.qy * half
+      val offX = q.qx * half
+      var b = 0
+      while (b < bands) {
+        val srcBase = b * q.h * q.w * spu
+        val dstBase = b * th * tw * spu
+        var y = 0
+        while (y < q.h) {
+          System.arraycopy(q.pixels, srcBase + y * q.w * spu,
+            pixels, dstBase + ((offY + y) * tw + offX) * spu, q.w * spu)
+          y += 1
+        }
+        b += 1
+      }
+      if (q.mask != null) {
+        var y = 0
+        while (y < q.h) {
+          System.arraycopy(q.mask, y * q.w, mask, (offY + y) * tw + offX, q.w)
+          y += 1
+        }
+      }
+    }
+    Tile(level, ty, tx, th, tw, pixels, mask)
+  }
 
   /** Downsample + regroup one level: tiles at `level` → tiles at
     * `level+1`. Pure function of the input Dataset — no persist here. */
   def nextLevel(tiles: Dataset[Tile], profile: RasterProfile): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val bs = profile.blockSize
-    val half = bs / 2
-    val kernel = profile.resampling
-    val nodata = profile.nodata
-    require(Kernels.haloWidth(kernel) == 0,
-      s"halo kernel '$kernel' must go through HaloExchange.nextLevel")
-
-    val complexPx = TileCodec.isComplex(profile.dtype)
-    val quads = tiles.map { t =>
-      val (px, mk) =
-        if (complexPx) Kernels.downsampleComplex2x(kernel, t, nodata)
-        else Kernels.downsample2x(kernel, t, nodata)
-      // quadrant of the next-level tile this shrunken block lands in
-      Quadrant(t.level + 1, t.ty / 2, t.tx / 2, t.ty % 2, t.tx % 2,
-        (t.h + 1) / 2, (t.w + 1) / 2, px, mk)
-    }
-    regroup(quads, profile)
+    require(Kernels.haloWidth(profile.resampling) == 0,
+      s"halo kernel '${profile.resampling}' must go through HaloExchange.nextLevel")
+    regroup(tiles.map(quadrant(_, profile)), profile)
   }
 
   /** Mosaic step shared by the halo-free and halo paths: group the ≤4
@@ -52,51 +93,10 @@ object Pyramid {
   def regroup(quads: Dataset[Quadrant], profile: RasterProfile): Dataset[Tile] = {
     val spark = quads.sparkSession
     import spark.implicits._
-    val half = profile.blockSize / 2
-    val nodata = profile.nodata
-    val bands = profile.bands
-    // complex planes carry (re, im) pairs — stitch moves sample UNITS
-    val spu = if (TileCodec.isComplex(profile.dtype)) 2 else 1
     quads
       .groupByKey(q => (q.level, q.ty, q.tx))
       .mapGroups { (key: (Int, Int, Int), qs: Iterator[Quadrant]) =>
-        val (level, ty, tx) = key
-        val (th, tw) = profile.tileDims(level, ty, tx)
-        val pixels = new Array[Double](bands * th * tw * spu)
-        java.util.Arrays.fill(pixels, nodata)
-        val mask = new Array[Byte](th * tw)
-        qs.foreach { q =>
-          val offY = q.qy * half
-          val offX = q.qx * half
-          var b = 0
-          while (b < bands) {
-            val srcBase = b * q.h * q.w * spu
-            val dstBase = b * th * tw * spu
-            var y = 0
-            while (y < q.h) {
-              var x = 0
-              while (x < q.w * spu) {
-                pixels(dstBase + ((offY + y) * tw + offX) * spu + x) =
-                  q.pixels(srcBase + (y * q.w) * spu + x)
-                x += 1
-              }
-              y += 1
-            }
-            b += 1
-          }
-          if (q.mask != null) {
-            var y = 0
-            while (y < q.h) {
-              var x = 0
-              while (x < q.w) {
-                mask((offY + y) * tw + (offX + x)) = q.mask(y * q.w + x)
-                x += 1
-              }
-              y += 1
-            }
-          }
-        }
-        Tile(level, ty, tx, th, tw, pixels, mask)
+        stitch(key._1, key._2, key._3, qs, profile)
       }
   }
 

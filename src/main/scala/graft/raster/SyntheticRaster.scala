@@ -46,9 +46,8 @@ object SyntheticRaster {
     * PURPOSE: the downstream per-tile ENCODE (deflate) inherits this
     * width, and shrinking it to "a few tiles per task" serialized the
     * CPU-heavy codec (q_cog_write_bytes 3.2 s → 9.4 s measured).
-    * Shuffle-side task-count overhead is handled where it belongs —
-    * the write queries set spark.sql.shuffle.partitions to the grid
-    * scale around their prefix-sum/stats shuffles. */
+    * The writer encodes level 0 in the task that generated it, with no
+    * shuffle in between, so this width is the encode's width too. */
   def generate(spark: SparkSession, profile: RasterProfile, seed: Long,
       withMask: Boolean = true): Dataset[Tile] = {
     import spark.implicits._

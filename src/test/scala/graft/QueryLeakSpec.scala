@@ -9,12 +9,17 @@ class QueryLeakSpec extends SparkSpec {
     val sc = spark.sparkContext
     def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
     QueryScope.release()
+    assert(QueryScope.held == 0)
     val before = checkpointed
     // 10 hops, two checkpoints per hop (frontier and visited)
     assert(queries.AnalyticsQueries.graphBfs(spark, sfDir).count() > 0)
     val grown = checkpointed -- before
     assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
+    // the sweep above is a lower bound (getPersistentRDDs holds its RDDs
+    // weakly); the scope's own count is exact: the last round's blocks
+    assert(QueryScope.held == 1, s"scope holds ${QueryScope.held}")
     QueryScope.release()
+    assert(QueryScope.held == 0)
     val left = checkpointed -- before
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
   }

@@ -66,6 +66,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val sc = spark.sparkContext
     def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
     QueryScope.release()
+    assert(QueryScope.held == 0)
     val before = checkpointed
     // a 40-node chain takes 6 rounds (5 that move a label, 1 that
     // confirms), each with its own label checkpoint
@@ -74,7 +75,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.forall(_.getLong(1) == 0L))
     val grown = checkpointed -- before
     assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
+    // the sweep above is a lower bound (getPersistentRDDs holds its RDDs
+    // weakly); the scope's own count is exact: the last round's blocks
+    assert(QueryScope.held == 1, s"scope holds ${QueryScope.held}")
     QueryScope.release()
+    assert(QueryScope.held == 0)
     val left = checkpointed -- before
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
   }

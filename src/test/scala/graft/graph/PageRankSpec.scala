@@ -81,6 +81,7 @@ class PageRankSpec extends SparkSpec {
     val sc = spark.sparkContext
     def checkpointed = sc.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
     QueryScope.release()
+    assert(QueryScope.held == 0)
     val before = checkpointed
     // a 200-node ring plus chords: no dangling node, so 10 iterations
     // checkpoint every second round (5 checkpoints)
@@ -91,7 +92,11 @@ class PageRankSpec extends SparkSpec {
     assert(ranks.length == 200)
     val grown = checkpointed -- before
     assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")
+    // the sweep above is a lower bound (getPersistentRDDs holds its RDDs
+    // weakly); the scope's own count is exact: the last round's blocks
+    assert(QueryScope.held == 1, s"scope holds ${QueryScope.held}")
     QueryScope.release()
+    assert(QueryScope.held == 0)
     val left = checkpointed -- before
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
   }

@@ -5,10 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.collection.mutable.ArrayBuffer
 
-/** Pins the Spark work of one `CogWriter.write`: the encode runs once,
-  * the encoded bytes cross the shuffle once (into their parts), all
-  * driver-sized facts (tile sizes, band stats) arrive in one collect,
-  * and the band stats stay exact. */
+/** Pins the Spark work of one `CogWriter.write`: three jobs, the
+  * pyramid's quadrants cross the wire once per round and the encoded
+  * bytes once (into their parts), all driver-sized facts (tile sizes,
+  * band stats) arrive in one collect, and the band stats stay exact. */
 class CogWriteWorkSpec extends SparkSpec {
 
   val ND = -9999.0
@@ -27,24 +27,24 @@ class CogWriteWorkSpec extends SparkSpec {
     }
   }
 
-  /** A started job: its stages' RDD scopes, outermost last. */
-  case class Job(id: Int, scopes: Seq[String]) {
-    // the tile encode is the union of the per-level encodes: every job
-    // before the first one that reads it belongs to the pyramid
-    def readsEncode: Boolean = scopes.contains("Union")
-  }
+  /** A started job: its stage ids, their RDD names and scopes, and the
+    * shuffle bytes its tasks wrote. (No default arguments: the listener
+    * thread must not initialize the companion while the test thread
+    * holds the suite's lock in a lazy val.) */
+  case class Job(id: Int, stages: Seq[Int], scopes: Seq[String], var shuffleWrite: Long)
 
-  /** Jobs started and shuffle bytes written while `f` runs. */
-  def traced[A](f: => A): (A, Seq[Job], Long) = {
+  /** Jobs started while `f` runs, in id order. */
+  def traced[A](f: => A): (A, Seq[Job]) = {
     val jobs = ArrayBuffer.empty[Job]
-    var shuffleWrite = 0L
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs += Job(e.jobId, e.stageInfos.sortBy(_.stageId).flatMap(_.rddInfos.sortBy(_.id))
-          .map(r => r.scope.map(_.name).getOrElse(r.name)).distinct)
+        jobs += Job(e.jobId, e.stageIds, e.stageInfos.sortBy(_.stageId)
+          .flatMap(_.rddInfos.sortBy(_.id))
+          .map(r => r.scope.map(_.name).getOrElse(r.name)).distinct, 0L)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
-        if (e.taskMetrics != null) shuffleWrite += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        if (e.taskMetrics != null) jobs.find(_.stages.contains(e.stageId))
+          .foreach(_.shuffleWrite += e.taskMetrics.shuffleWriteMetrics.bytesWritten)
       }
     }
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
@@ -52,7 +52,7 @@ class CogWriteWorkSpec extends SparkSpec {
     try {
       val a = f
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.synchronized((a, jobs.sortBy(_.id).toSeq, shuffleWrite))
+      jobs.synchronized((a, jobs.sortBy(_.id).toSeq))
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -60,41 +60,44 @@ class CogWriteWorkSpec extends SparkSpec {
     CogWriter.write(level0, prof,
       new graft.sink.LocalMultipartSink(Files.createTempDirectory("graft-work").toString))
 
-  lazy val pyramidShuffle: Long = traced {
+  /** Shuffle bytes the per-level reference pyramid writes. */
+  lazy val perLevelShuffle: Long = traced {
     val levels = Pyramid.build(level0, prof)
     levels.foreach(_.count())
     levels.foreach(_.unpersist(blocking = true))
-  }._3
+  }._2.map(_.shuffleWrite).sum
 
-  lazy val (result, jobs, shuffleWrite) = {
+  lazy val (result, jobs) = {
     write() // warm-up: first-use planning must not change the counts below
     traced(write())
   }
 
+  def show: String = jobs.map(j => s"job ${j.id}: ${j.stages.size} stages, " +
+    s"${j.shuffleWrite} B shuffled: ${j.scopes.mkString(" <- ")}").mkString("\n")
+
   test("encoded bytes cross the shuffle once: beyond the pyramid, <= 1.25x tile bytes") {
-    assert(pyramidShuffle > 0)
-    val beyond = shuffleWrite - pyramidShuffle
+    // the pyramid's quadrants cross in the collect's job, the encoded
+    // bytes in the sink's; the quadrants are under the per-level
+    // pyramid's traffic (1/4 + 1/64 + ... of the source, not 1/3)
+    val pyramid = jobs.head.shuffleWrite
+    val beyond = jobs.tail.map(_.shuffleWrite).sum
+    assert(pyramid > 0 && pyramid < perLevelShuffle,
+      s"quadrants $pyramid B vs per-level pyramid $perLevelShuffle B\n$show")
     assert(beyond <= 1.25 * result.tileBytes,
-      s"shuffle write $shuffleWrite B - pyramid $pyramidShuffle B = $beyond B " +
-        s"vs ${result.tileBytes} tile bytes")
+      s"sink shuffle $beyond B vs ${result.tileBytes} tile bytes\n$show")
   }
 
-  test("one write runs an exact job count once the pyramid is built") {
-    val (pyramid, writer) = jobs.span(!_.readsEncode)
-    def show = jobs.map(j => s"job ${j.id}: ${j.scopes.mkString(" <- ")}").mkString("\n")
-    // the pyramid, unchanged by the writer: under AQE each level's cache
-    // is built by its own job (4) and each quadrant shuffle's map side is
-    // one more (3); when two query stages reach one level's cache at once
-    // both submit its build job, a race, so up to one duplicate per level
+  test("one write runs exactly three jobs") {
+    // 150x130 at 16 px: level 1 is 5x5 tiles, so at 4 shuffle
+    // partitions one round of 4x4-tile blocks builds levels 1-3
     assert(prof.maxLevel == 3)
-    assert(pyramid.size >= 7 && pyramid.size <= 11, show)
-    // the writer's own jobs, exactly:
-    //   1. encode every tile once, into the persisted frame (cache build)
-    //   2. the one collect: tile sizes + band-stats partials
-    //   3. the sink's byte shuffle, map side (header + placed tiles)
-    //   4. part packing + upload, receipts back to the driver
-    assert(writer.size == 4, show)
-    assert(writer.forall(_.readsEncode), show)
+    assert(PyramidEncode.blockLog(prof, 1, 4) == 2)
+    //   1. the one collect: step 0 (encode level 0, emit quadrants),
+    //      the one round's exchange, then tile sizes + band-stats partials
+    //   2. the sink's byte shuffle, map side (header + placed tiles)
+    //   3. part packing + upload, receipts back to the driver
+    assert(jobs.size == 3, show)
+    assert(jobs.head.stages.size == 2, show)
   }
 
   test("band stats equal a driver-side BigDecimal reference and the decimal(38,12) SQL") {
