@@ -1,6 +1,6 @@
 package graft.raster
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWriter, PartReceipt}
 
 /** End-to-end COG write — the engine form of the reference's only
@@ -15,11 +15,12 @@ import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWrit
   *     header's TileOffsets array) and header emit (BigTiff, R22)
   *   → narrow placement map over the persisted pages (broadcast
   *     offsets) → ordered multipart sink (OrderedMultipartWriter,
-  *     R28/R36).
+  *     R28/R36), an RDD job outside the SQL planner.
   *
-  * A halo-free write is three jobs: the collect (one stage per
-  * quadrant exchange, a few for the whole pyramid) and the sink's
-  * two. Encoded bytes cross the wire once, into their parts.
+  * A halo-free write is two jobs: the collect (one stage per
+  * quadrant exchange, a few for the whole pyramid), then the sink's
+  * one shuffle, whose tasks pack and upload the parts. Encoded bytes
+  * cross the wire once, into their parts.
   */
 object CogWriter {
 
@@ -38,10 +39,10 @@ object CogWriter {
     * target key instead of restarting from byte 0 (the sink must be a
     * [[graft.sink.ResumableMultipartSink]]): the whole encode pipeline
     * is deterministic (fixed tile loops, decimal stats, deflate), so a
-    * restarted writer re-derives byte-identical parts and
-    * [[OrderedMultipartWriter.writeResuming]] verifies + skips the
-    * ones the store already holds. `partTarget` is the packing target
-    * passed through to the part planner — the default matches
+    * restarted writer re-derives byte-identical parts and the resume
+    * path ([[OrderedMultipartWriter.writeResuming]]) verifies + skips
+    * the ones the store already holds. `partTarget` is the packing
+    * target passed through to the part planner — the default matches
     * [[OrderedMultipartWriter.write]]'s; a resume must use the SAME
     * value as the crashed attempt or no part verifies. */
   def write(level0: Dataset[Tile], profile: RasterProfile,
@@ -53,7 +54,6 @@ object CogWriter {
       s"cog resume requested but sink ${sink.getClass.getName} cannot " +
         "adopt in-flight uploads (ResumableMultipartSink)")
     val spark = level0.sparkSession
-    import spark.implicits._
 
     // 1-2. pyramid + encode of every page, ONCE, persisted
     val encoded = PyramidEncode.encode(level0, profile)
@@ -113,18 +113,13 @@ object CogWriter {
       val maxBlob = math.max(maxTile, headerBlobs.map(_.bytes.length.toLong).max)
 
       // 6. one ordered blob stream: header ++ non-sparse tiles, each
-      // placed by a narrow map over the persisted pages
-      val blobs = spark.createDataset(headerBlobs)
-        .union(Offsets.placedWith(spark.createDataset(encoded.pages), layout)
-          .filter(_.nbytes > 0)
-          .map(p => Blob(p.offset, p.bytes)))
+      // placed by a narrow map over the persisted pages; the sink packs
+      // it in one RDD job
+      val blobs = spark.sparkContext.parallelize(headerBlobs, headerBlobs.size)
+        .union(Offsets.blobs(encoded.pages, layout))
       val totalLen = layout.fileLen
-      val receipts =
-        if (resume)
-          OrderedMultipartWriter.writeResuming(blobs, totalLen, maxBlob,
-            sink.asInstanceOf[graft.sink.ResumableMultipartSink], partTarget)
-        else OrderedMultipartWriter.write(blobs, totalLen, maxBlob, sink,
-          partTarget)
+      val receipts = OrderedMultipartWriter.writeBlobs(blobs, totalLen, maxBlob, sink,
+        partTarget, OrderedMultipartWriter.shufflePartitions(spark), resume)
 
       Result(headerLen, totalLen, tileBytes, nTiles, nSparse,
         receipts.size, nLevels, stats, receipts)

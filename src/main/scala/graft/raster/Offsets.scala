@@ -1,5 +1,8 @@
 package graft.raster
 
+import graft.sink.Blob
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
@@ -13,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * costs no shuffle: [[layout]] walks the grids in file order and
   * returns the header-shaped offset arrays; executors look each tile's
   * offset up in a broadcast of those arrays, a narrow map over the
-  * persisted encoded frame ([[placedWith]]). The encoded frame is
-  * computed once and never crosses the wire before the sink.
+  * persisted encoded tiles ([[placedWith]], or [[blobs]] for the
+  * writer's RDD sink). The encoded tiles are computed once and never
+  * cross the wire before the sink.
   *
   * Sparse tiles contribute 0 bytes and keep offset 0 in the header
   * (reference ccog/ccog.py:754).
@@ -72,11 +76,23 @@ object Offsets {
   def placedWith(cached: Dataset[EncodedTile], layout: Layout): Dataset[PlacedTile] = {
     val spark = cached.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast((layout.gridWidths, layout.offsets))
-    cached.map { e =>
+    val at = offsetOf(spark.sparkContext, layout)
+    cached.map(e => PlacedTile(e.level, e.ty, e.tx, e.page, at(e), e.nbytes, e.bytes))
+  }
+
+  /** The non-sparse tiles of `pages` as blobs at their file offsets —
+    * [[placedWith]]'s narrow map over an RDD, for the RDD sink. */
+  def blobs(pages: RDD[EncodedTile], layout: Layout): RDD[Blob] = {
+    val at = offsetOf(pages.sparkContext, layout)
+    pages.filter(_.nbytes > 0).map(e => Blob(at(e), e.bytes))
+  }
+
+  /** A tile's offset, looked up in one broadcast of the offset arrays. */
+  private def offsetOf(sc: SparkContext, layout: Layout): EncodedTile => Long = {
+    val bc = sc.broadcast((layout.gridWidths, layout.offsets))
+    e => {
       val (gw, offs) = bc.value
-      PlacedTile(e.level, e.ty, e.tx, e.page,
-        offs((e.level, e.page))(e.ty * gw(e.level) + e.tx), e.nbytes, e.bytes)
+      offs((e.level, e.page))(e.ty * gw(e.level) + e.tx)
     }
   }
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * the engine's stand-in for the reference's ingest of a chunked
   * dask/xarray array (reference ccog/ccog.py:936). /root/testdata is
   * read-only and has no raster fixtures, so raster tests and NATIVE
-  * queries generate their input in-engine; one Spark task per tile, so
-  * generation scales exactly like the downstream pipeline. */
+  * queries generate their input in-engine, over defaultParallelism
+  * partitions — the width the writer's level-0 encode inherits. */
 object SyntheticRaster {
 
   /** splitmix64 — tiny, seedable, high-quality mixer; value depends
@@ -40,7 +40,8 @@ object SyntheticRaster {
     if ((h & 31) == 0) 0 else 1
   }
 
-  /** Level-0 tile grid, one Spark task per tile; band-major planes
+  /** Level-0 tile grid, one row per tile in defaultParallelism
+    * partitions (`spark.range`'s default); band-major planes
     * (band b uses seed+1000003*b so bands differ but stay coupled to
     * the shared mask). Partitioning stays at defaultParallelism ON
     * PURPOSE: the downstream per-tile ENCODE (deflate) inherits this

@@ -1,10 +1,12 @@
 package graft.sink
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** A contiguous byte range of the output object. The whole file is a
-  * Dataset[Blob] covering [0, totalBytes) with no gaps or overlaps —
+  * set of Blobs covering [0, totalBytes) with no gaps or overlaps —
   * order lives in the offsets, so the sink is agnostic to what the
   * bytes mean (COG header, tiles, anything). This mirrors the
   * reference's generic ordered-parts sink, callable on any ordered
@@ -32,7 +34,7 @@ trait MultipartSink extends Serializable {
     * reference (each part is hashed once, for the upload header AND
     * the receipt), so callers must pass a part's OWN array and must
     * not mutate or reuse it between uploadPart and partChecksum —
-    * OrderedMultipartWriter allocates per part via toByteArray. A
+    * OrderedMultipartWriter copies each part once into a new array. A
     * violated contract fails loudly: the server refuses the part's
     * stale checksum with 400 BadDigest. */
   def partChecksum(bytes: Array[Byte]): Option[String] = None
@@ -160,11 +162,16 @@ class LocalMultipartSink(dir: String) extends ResumableMultipartSink {
   * holds every blob starting inside its window: size ∈
   * (target − maxBlob, target + maxBlob), and with
   * target ≥ 5 MiB + maxBlob every non-final part clears the S3 minimum
-  * (reference constraint table ccog/aws_tools.py:20-28). The part count
-  * is (totalBytes − 1)/target + 1, so part p goes to partition
-  * (p − 1)·slices/nParts of min(nParts, spark.sql.shuffle.partitions)
-  * slices: contiguous part ranges, a part never split across two
-  * partitions, so each part is uploaded exactly once, whole.
+  * (reference constraint table ccog/aws_tools.py:20-28).
+  *
+  * The packing is one RDD job, outside the SQL planner: blobs keyed by
+  * offset go through `repartitionAndSortWithinPartitions` with a
+  * [[PartRangePartitioner]] (contiguous part ranges, a part never split
+  * across two partitions), and the same tasks pack and upload each
+  * part, whole, exactly once. The part number never decreases as the
+  * offset grows, so sorting by offset alone orders each partition by
+  * part. The Dataset entries ([[write]], [[writeResuming]]) adapt onto
+  * that one path ([[writeBlobs]]).
   */
 object OrderedMultipartWriter {
 
@@ -185,23 +192,9 @@ object OrderedMultipartWriter {
 
   /** Pack + upload + finalize. Returns receipts sorted by partNumber. */
   def write(blobs: Dataset[Blob], totalBytes: Long, maxBlob: Long,
-      sink: MultipartSink, defaultPart: Long = 16L << 20): Seq[PartReceipt] = {
-    val target = targetPartSize(totalBytes, maxBlob, defaultPart)
-    sink.start()
-    // from here on the upload is live: any failure — job error or a
-    // failed placement audit — must abort it, or the half-uploaded MPU
-    // leaks (on S3 proper, incomplete uploads accrue storage until
-    // aborted; the reference aborts on failure too,
-    // ccog/aws_tools.py:168-175)
-    try {
-      writeStarted(blobs, totalBytes, target, sink, Map.empty)
-    } catch {
-      case e: Throwable =>
-        try sink.abort()
-        catch { case a: Throwable => e.addSuppressed(a) }
-        throw e
-    }
-  }
+      sink: MultipartSink, defaultPart: Long = 16L << 20): Seq[PartReceipt] =
+    writeBlobs(blobs.rdd, totalBytes, maxBlob, sink, defaultPart,
+      shufflePartitions(blobs.sparkSession), resume = false)
 
   /** Crash-resume variant: adopt the key's in-flight upload, verify
     * every already-stored part against the locally re-derived plan
@@ -217,9 +210,41 @@ object OrderedMultipartWriter {
     * the janitor's job, [[S3MpuJanitor.reap]]). */
   def writeResuming(blobs: Dataset[Blob], totalBytes: Long, maxBlob: Long,
       sink: ResumableMultipartSink,
-      defaultPart: Long = 16L << 20): Seq[PartReceipt] = {
+      defaultPart: Long = 16L << 20): Seq[PartReceipt] =
+    writeBlobs(blobs.rdd, totalBytes, maxBlob, sink, defaultPart,
+      shufflePartitions(blobs.sparkSession), resume = true)
+
+  /** The session's spark.sql.shuffle.partitions: the sink's task cap. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** The one packing path: [[write]] when `resume` is false,
+    * [[writeResuming]] (the sink must be a [[ResumableMultipartSink]])
+    * when it is true. The blobs go to min(parts, `maxSlices`) tasks. */
+  def writeBlobs(blobs: RDD[Blob], totalBytes: Long, maxBlob: Long,
+      sink: MultipartSink, defaultPart: Long, maxSlices: Int,
+      resume: Boolean): Seq[PartReceipt] = {
     val target = targetPartSize(totalBytes, maxBlob, defaultPart)
-    writeStarted(blobs, totalBytes, target, sink, sink.startOrResume())
+    if (resume) {
+      require(sink.isInstanceOf[ResumableMultipartSink],
+        s"resume needs a ResumableMultipartSink, not ${sink.getClass.getName}")
+      writeStarted(blobs, totalBytes, target, maxSlices, sink,
+        sink.asInstanceOf[ResumableMultipartSink].startOrResume())
+    } else {
+      sink.start()
+      // from here on the upload is live: any failure — job error or a
+      // failed placement audit — must abort it, or the half-uploaded MPU
+      // leaks (on S3 proper, incomplete uploads accrue storage until
+      // aborted; the reference aborts on failure too,
+      // ccog/aws_tools.py:168-175)
+      try writeStarted(blobs, totalBytes, target, maxSlices, sink, Map.empty)
+      catch {
+        case e: Throwable =>
+          try sink.abort()
+          catch { case a: Throwable => e.addSuppressed(a) }
+          throw e
+      }
+    }
   }
 
   /** True iff the locally assembled bytes are byte-identical to what
@@ -240,57 +265,51 @@ object OrderedMultipartWriter {
     }
   }
 
-  private def writeStarted(blobs: Dataset[Blob], totalBytes: Long,
-      target: Long, sink: MultipartSink,
+  private def writeStarted(blobs: RDD[Blob], totalBytes: Long, target: Long,
+      maxSlices: Int, sink: MultipartSink,
       preUploaded: Map[Int, PartReceipt]): Seq[PartReceipt] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
     // the part count is known up front, so contiguous partNumber
     // ranges map onto partitions arithmetically — no range sampling job
     val nParts = (totalBytes - 1) / target + 1
-    val slices = math.max(1L, math.min(nParts,
-      spark.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
+    val slices = math.max(1L, math.min(nParts, maxSlices.toLong)).toInt
     val receipts = blobs
-      .map { b =>
-        val pn = b.offset / target + 1
-        // clamped so a stray offset reaches the contiguity audit below
-        // instead of failing the shuffle
-        val slice = math.min(slices - 1L, math.max(0L, (pn - 1) * slices / nParts))
-        (slice.toInt, pn.toInt, b.offset, b.bytes)
-      }
-      .toDF("slice", "partNumber", "offset", "bytes")
-      .repartitionById(slices, $"slice")
-      .sortWithinPartitions($"partNumber", $"offset")
-      .drop("slice")
-      .as[(Int, Long, Array[Byte])]
+      .map(b => (b.offset, b.bytes))
+      .repartitionAndSortWithinPartitions(new PartRangePartitioner(target, nParts, slices))
       .mapPartitions { it =>
         val out = Seq.newBuilder[PartReceipt]
-        var curPart = -1
+        var curPart = -1L
         var curOffset = 0L
-        var buf: java.io.ByteArrayOutputStream = null
-        def flush(): Unit = if (curPart != -1 && buf.size() > 0) {
-          val bytes = buf.toByteArray
-          out += (preUploaded.get(curPart) match {
+        var size = 0L
+        val held = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+        def flush(): Unit = if (size > 0) {
+          // one copy, into an array of the part's exact size that
+          // belongs to this part alone (the partChecksum contract);
+          // toIntExact refuses a part past the JVM's array limit
+          val bytes = new Array[Byte](Math.toIntExact(size))
+          var at = 0
+          held.foreach { b => System.arraycopy(b, 0, bytes, at, b.length); at += b.length }
+          val pn = curPart.toInt
+          out += (preUploaded.get(pn) match {
             case Some(remote) if verifiedSame(remote, bytes, sink) =>
               // the store already holds these exact bytes: reuse the
               // remote receipt, zero bytes re-uploaded
-              PartReceipt(curPart, curOffset, bytes.length.toLong,
-                remote.etag, sink.partChecksum(bytes))
+              PartReceipt(pn, curOffset, size, remote.etag, sink.partChecksum(bytes))
             case _ =>
-              PartReceipt(curPart, curOffset, bytes.length.toLong,
-                sink.uploadPart(curPart, bytes), sink.partChecksum(bytes))
+              PartReceipt(pn, curOffset, size, sink.uploadPart(pn, bytes),
+                sink.partChecksum(bytes))
           })
         }
-        it.foreach { case (pn, off, bytes) =>
+        it.foreach { case (off, bytes) =>
+          val pn = off / target + 1
           if (pn != curPart) {
             flush()
+            held.clear()
             curPart = pn
             curOffset = off
-            // careful: target can exceed Int.MaxValue (up to 5 GiB) —
-            // min in Long space BEFORE narrowing
-            buf = new java.io.ByteArrayOutputStream(math.min(target, 1L << 26).toInt)
+            size = 0L
           }
-          buf.write(bytes)
+          held += bytes
+          size += bytes.length
         }
         flush()
         out.result().iterator
@@ -310,5 +329,23 @@ object OrderedMultipartWriter {
     require(receipts.size <= S3MaxPartCount, s"part count ${receipts.size} > 10000")
     sink.complete(receipts)
     receipts
+  }
+}
+
+/** Contiguous part ranges onto `slices` partitions, keyed by byte
+  * offset: the blob at offset o is in part p = o/target + 1, and part p
+  * goes to slice (p − 1)·slices/nParts. The slice never decreases as
+  * the offset grows, and every offset of a part maps to the part's one
+  * slice. A stray offset (negative, or past the object) is clamped to
+  * the first or last part's slice, so it reaches the writer's
+  * contiguity audit instead of failing the shuffle. */
+private[sink] final class PartRangePartitioner(target: Long, nParts: Long, slices: Int)
+    extends Partitioner {
+  require(target > 0 && nParts > 0 && slices > 0,
+    s"target $target, $nParts parts, $slices slices")
+  override def numPartitions: Int = slices
+  override def getPartition(key: Any): Int = {
+    val pn = math.min(nParts, math.max(1L, key.asInstanceOf[Long] / target + 1))
+    ((pn - 1) * slices / nParts).toInt
   }
 }

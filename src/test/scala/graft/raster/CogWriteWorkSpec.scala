@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.collection.mutable.ArrayBuffer
 
-/** Pins the Spark work of one `CogWriter.write`: three jobs, the
+/** Pins the Spark work of one `CogWriter.write`: two jobs, the
   * pyramid's quadrants cross the wire once per round and the encoded
   * bytes once (into their parts), all driver-sized facts (tile sizes,
   * band stats) arrive in one collect, and the band stats stay exact. */
@@ -27,11 +27,14 @@ class CogWriteWorkSpec extends SparkSpec {
     }
   }
 
-  /** A started job: its stage ids, their RDD names and scopes, and the
-    * shuffle bytes its tasks wrote. (No default arguments: the listener
-    * thread must not initialize the companion while the test thread
-    * holds the suite's lock in a lazy val.) */
-  case class Job(id: Int, stages: Seq[Int], scopes: Seq[String], var shuffleWrite: Long)
+  /** A started job: its stage ids, their RDD names and scopes, the
+    * stages that ran tasks (a stage whose shuffle output is reused is
+    * listed but skipped), and the shuffle bytes its tasks wrote. (No
+    * default arguments: the listener thread must not initialize the
+    * companion while the test thread holds the suite's lock in a lazy
+    * val.) */
+  case class Job(id: Int, stages: Seq[Int], scopes: Seq[String], var ran: Set[Int],
+      var shuffleWrite: Long)
 
   /** Jobs started while `f` runs, in id order. */
   def traced[A](f: => A): (A, Seq[Job]) = {
@@ -40,11 +43,13 @@ class CogWriteWorkSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         jobs += Job(e.jobId, e.stageIds, e.stageInfos.sortBy(_.stageId)
           .flatMap(_.rddInfos.sortBy(_.id))
-          .map(r => r.scope.map(_.name).getOrElse(r.name)).distinct, 0L)
+          .map(r => r.scope.map(_.name).getOrElse(r.name)).distinct, Set.empty, 0L)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
-        if (e.taskMetrics != null) jobs.find(_.stages.contains(e.stageId))
-          .foreach(_.shuffleWrite += e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        if (e.taskMetrics != null) jobs.find(_.stages.contains(e.stageId)).foreach { j =>
+          j.ran += e.stageId
+          j.shuffleWrite += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        }
       }
     }
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
@@ -72,7 +77,8 @@ class CogWriteWorkSpec extends SparkSpec {
     traced(write())
   }
 
-  def show: String = jobs.map(j => s"job ${j.id}: ${j.stages.size} stages, " +
+  def show: String = jobs.map(j => s"job ${j.id}: ${j.stages.size} stages " +
+    s"(${j.ran.size} ran), " +
     s"${j.shuffleWrite} B shuffled: ${j.scopes.mkString(" <- ")}").mkString("\n")
 
   test("encoded bytes cross the shuffle once: beyond the pyramid, <= 1.25x tile bytes") {
@@ -87,17 +93,19 @@ class CogWriteWorkSpec extends SparkSpec {
       s"sink shuffle $beyond B vs ${result.tileBytes} tile bytes\n$show")
   }
 
-  test("one write runs exactly three jobs") {
+  test("one write runs exactly two jobs") {
     // 150x130 at 16 px: level 1 is 5x5 tiles, so at 4 shuffle
     // partitions one round of 4x4-tile blocks builds levels 1-3
     assert(prof.maxLevel == 3)
     assert(PyramidEncode.blockLog(prof, 1, 4) == 2)
     //   1. the one collect: step 0 (encode level 0, emit quadrants),
     //      the one round's exchange, then tile sizes + band-stats partials
-    //   2. the sink's byte shuffle, map side (header + placed tiles)
-    //   3. part packing + upload, receipts back to the driver
-    assert(jobs.size == 3, show)
+    //   2. the sink: its one byte shuffle (header + placed tiles), then
+    //      part packing + upload, receipts back to the driver — an RDD
+    //      job, so no AQE map-stage job runs before it
+    assert(jobs.size == 2, show)
     assert(jobs.head.stages.size == 2, show)
+    assert(jobs(1).ran.size == 2, show)
   }
 
   test("band stats equal a driver-side BigDecimal reference and the decimal(38,12) SQL") {

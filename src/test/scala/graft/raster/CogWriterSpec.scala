@@ -236,6 +236,32 @@ class CogWriterSpec extends SparkSpec {
     assert(row.getAs[Long]("header_len") == 2699L)
   }
 
+  test("multi-part write: identical bytes at 1 and 4 shuffle partitions, reads back") {
+    // partTarget 0 packs at the 5 MiB + maxBlob floor: >= 2 parts, so
+    // at 4 shuffle partitions the sink runs several slices
+    val p = RasterProfile(1024, 1024, blockSize = 128, nodata = ND,
+      resampling = "average", minOverviewSize = 128, dtype = "float64")
+    val src = SyntheticRaster.generate(spark, p, seed = 8L)
+    def written(parts: String) = graft.QueryScope.withConf(spark,
+      "spark.sql.shuffle.partitions", parts) {
+      CogWriter.writeBytes(src, p, tmpDir(), partTarget = 0L)
+    }
+    val (one, oneRes) = written("1")
+    val (four, fourRes) = written("4")
+    assert(fourRes.nParts >= 2, fourRes.receipts)
+    assert(oneRes.receipts == fourRes.receipts)
+    assert(java.util.Arrays.equals(one, four), "bytes differ between 1 and 4 partitions")
+
+    val f = Files.createTempFile(Files.createTempDirectory("graft-cog"), "multi", ".tif")
+    Files.write(f, four)
+    // masked pixels are stored as nodata
+    val want = src.collect().map(t => (t.ty, t.tx) -> t.pixels.indices.map(i =>
+      if (t.mask(i) == 0) ND else t.pixels(i))).toMap
+    val got = CogReader.read(spark, "file://" + f, p).collect()
+    assert(got.length == want.size)
+    for (t <- got) assert(t.pixels.toSeq == want((t.ty, t.tx)), s"tile (${t.ty}, ${t.tx})")
+  }
+
   test("int16 with predictor: integer-valued raster round-trips exactly") {
     val s = spark
     import s.implicits._

@@ -122,6 +122,49 @@ class SinkSpec extends SparkSpec {
       OrderedMultipartWriter.targetPartSize(expect.length.toLong, maxBlob, 0L)))
     assert(java.util.Arrays.equals(sink.assembled, expect))
   }
+
+  test("part-range partitioner: monotone slices, one slice per part, strays clamped") {
+    val target = 1000L
+    val rnd = new scala.util.Random(3)
+    for (nParts <- Seq(1L, 3L, 4L, 7L, 9000L); slices <- Seq(1, 2, 4, 8)) {
+      val p = new PartRangePartitioner(target, nParts, slices)
+      val total = nParts * target - target / 3 // the last part is short
+      val offsets = (Seq(-1L, -target, 0L, total - 1, total, total + target, Long.MaxValue) ++
+        (1L until nParts).flatMap(pn => Seq(pn * target - 1, pn * target)) ++
+        Seq.fill(2000)((rnd.nextDouble() * total).toLong)).sorted
+      val slice = offsets.map(p.getPartition)
+      val what = s"$nParts parts, $slices slices"
+      assert(slice.forall(s => s >= 0 && s < slices), what)
+      assert(slice == slice.sorted, s"$what: the slice decreases as the offset grows")
+      val inRange = offsets.zip(slice).filter { case (o, _) => o >= 0 && o < total }
+      val slicesOfPart = inRange.groupBy(_._1 / target).map(_._2.map(_._2).distinct)
+      assert(slicesOfPart.size == nParts && slicesOfPart.forall(_.size == 1),
+        s"$what: a part split across slices")
+      if (nParts >= slices) assert(slice.distinct.size == slices, s"$what: an empty slice")
+      // strays clamp onto the first and last parts' slices
+      assert(p.getPartition(-1L) == 0 && p.getPartition(Long.MinValue) == 0, what)
+      assert(p.getPartition(total) == p.getPartition(total - 1), what)
+      assert(p.getPartition(Long.MaxValue) == p.getPartition(total - 1), what)
+    }
+  }
+
+  test("a stray blob offset is refused by the contiguity audit and the upload aborted") {
+    val s = spark
+    import s.implicits._
+    val (blobs, expect) = SinkSpec.alignedBlobs(3)
+    val total = expect.length.toLong
+    for (stray <- Seq(Blob(-10L, new Array[Byte](10)), Blob(total, new Array[Byte](10)))) {
+      val dir = tmp()
+      val sink = new LocalMultipartSink(dir)
+      val e = intercept[IllegalArgumentException](OrderedMultipartWriter.write(
+        s.createDataset(blobs :+ stray), total, SinkSpec.AlignedBlob, sink, defaultPart = 0L))
+      assert(e.getMessage.contains("missing first part") || e.getMessage.contains("!= expected"),
+        e.getMessage)
+      // the parts were uploaded, then the abort dropped every one
+      assert(sink.partNumbers.isEmpty, s"offset ${stray.offset}")
+      assert(!Files.exists(java.nio.file.Paths.get(dir, "manifest.json")))
+    }
+  }
 }
 
 object SinkSpec {
