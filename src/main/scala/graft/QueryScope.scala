@@ -4,12 +4,12 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The one owner of what a query pins past its own return: every
-  * frame a query caches for a consumer downstream of it, every eager
-  * checkpoint an iterative loop leaves behind, and the memoized
-  * frames several queries share (the shingle universe). One
-  * [[release]] returns all of it — the reference's rule of keeping a
-  * chunk level only until the next one replaces it (ccog/ccog.py:
-  * 618-621), applied once instead of per operator.
+  * frame a query caches for a consumer downstream of it, every
+  * checkpoint (of a frame or an RDD) an iterative loop leaves behind,
+  * and the memoized frames several queries share (the shingle
+  * universe). One [[release]] returns all of it — the reference's
+  * rule of keeping a chunk level only until the next one replaces it
+  * (ccog/ccog.py: 618-621), applied once instead of per operator.
   *
   * A query whose result reads pinned storage (a cached frame, or a
   * checkpoint whose lineage is truncated and cannot recompute) leaves
@@ -66,6 +66,19 @@ object QueryScope {
       added.foreach(pinned.add)
       (out, new Checkpoint(added))
     }
+
+  /** Marks `rdd` for `localCheckpoint` and registers its blocks for
+    * [[release]]. Unlike the frame overload this is lazy: the next
+    * action over `rdd` (or over anything derived from it) materializes
+    * the blocks and truncates the lineage. An RDD checkpoint keeps its
+    * partitioner, so a join against a co-partitioned RDD stays narrow;
+    * a checkpointed frame drops its output partitioning and the next
+    * join re-exchanges it. */
+  def checkpoint(rdd: RDD[_]): Checkpoint = {
+    rdd.localCheckpoint()
+    pinned.add(rdd)
+    new Checkpoint(Seq(rdd))
+  }
 
   /** The value memoized under `key`, built on first use and dropped by
     * [[release]]. Frames the build caches go through [[cache]], so the

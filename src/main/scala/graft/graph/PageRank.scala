@@ -10,8 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * Crawl's domain ranking, OPIC-style crawl prioritization; Page et
   * al. 1998, public).
   *
-  * DataFrame-first dataflow, same discipline as the connected-
-  * components operator ([[ConnectedComponents.run]]):
+  * DataFrame-first dataflow:
   *
   *  - `edges(src, dst)` is deduped once; out-degrees come from ONE
   *    groupBy and ride along as an `(src, dst, deg)` frame cached for

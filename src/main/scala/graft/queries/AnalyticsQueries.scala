@@ -1001,9 +1001,9 @@ object AnalyticsQueries {
       .select($"src", $"dst")
     // GATED local components (r22, the crawlLinksGated pattern): the
     // variant graph is bounded by real spelling variation — thousands
-    // of edges at web scale — while the distributed CC loop pays
-    // multiple driver actions per round (ShuffleProbe measured this
-    // query at 43 jobs for 6.7 KB of total shuffle). ONE action
+    // of edges at web scale — while the distributed CC loop pays one
+    // job per round, each with its own scheduling and shuffle overhead,
+    // for what is a few kilobytes of graph. ONE action
     // collects at most maxLocal+1 edges; within the gate the identical
     // min-id union-find labels locally (pinned ≡ ConnectedComponents.run
     // in ConnectedComponentsSpec), past it the distributed loop runs

@@ -79,15 +79,10 @@ object DedupQueries {
     * recursive-CTE transitive closure over the same pairs. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // checkpoint the expensive dedupNgram subplan ONCE: both branches
-    // of the edge bidirection read it, and without this the shingle
-    // join + Jaccard agg would evaluate twice. Its blocks stay pinned
-    // until run returns (its edge cache materializes from them).
-    val (pairs, pairsBlocks) = QueryScope.checkpoint(
-      PipelineQueries.dedupNgram(spark, sfDir)
-        .select($"id_a".as("src"), $"id_b".as("dst")))
-    val labels = ConnectedComponents.run(pairs)
-    pairsBlocks.free()
+    // the unsorted pairs: the loop reads its input once, into its edge
+    // cache, so neither dedupNgram's sort nor a checkpoint buys anything
+    val labels = ConnectedComponents.run(PipelineQueries.jaccardPairs(spark, sfDir)
+      .select($"id_a".as("src"), $"id_b".as("dst")))
     labels.withColumnRenamed("node", "doc_id").orderBy($"doc_id")
   }
 

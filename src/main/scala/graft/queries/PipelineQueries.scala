@@ -84,8 +84,8 @@ object PipelineQueries {
     * boilerplate shingles (df > NgramDfCap) dropped — the shared
     * shingle universe of the exact-Jaccard oracle AND the MinHash-LSH
     * path (graft.text.MinHashLSH), so LSH recall is measured against
-    * the identical definition. Cached: reused 3× within dedupNgram and
-    * again by the LSH query. */
+    * the identical definition. Cached: [[pairSizes]] reads it twice
+    * (the pair stage and the doc sizes), and the LSH query again. */
   // one cached shingle universe per (session, sfDir): dedupNgram and
   // dedupMinhash both consume it — without memoization each call would
   // cache its own identical copy and recompute the shingling. Both
@@ -162,19 +162,23 @@ object PipelineQueries {
       .agg(count(lit(1)).as("n_common"))
   }
 
-  /** Exact n-gram (word trigram) Jaccard near-dup pairs — the
-    * hash-free oracle for the MinHash path: J(a,b) >= 0.35 on distinct
-    * shingle sets with df <= NgramDfCap. Shuffle key = shingle, so the
-    * pair stage is equi at scale, and the df cap bounds every bucket
-    * (see [[shingleCooccur]]). */
-  def dedupNgram(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Columns id_a, id_b, n_common, n_a, n_b, unsorted: every co-occurring
+    * pair of [[shingleCooccur]] with both docs' kept-shingle counts —
+    * the one frame the Jaccard and containment verdicts (and the
+    * clusters' edges) filter. */
+  private[queries] def pairSizes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val keptEx = keptShingles(spark, sfDir)
     val sizes = keptEx.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
-    val pairs = shingleCooccur(keptEx)
-    pairs
+    shingleCooccur(keptEx)
       .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), Seq("id_a"))
       .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), Seq("id_b"))
+  }
+
+  /** The rows of [[dedupNgram]], unsorted. */
+  private[queries] def jaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    pairSizes(spark, sfDir)
       // Filter on the UNROUNDED ratio (the oracle does too); round only
       // in the projected column — a ratio in [0.34995, 0.35) must be
       // dropped by both engines, not kept by one.
@@ -182,8 +186,15 @@ object PipelineQueries {
       .withColumn("jaccard", round($"n_common".cast("double") /
         ($"n_a" + $"n_b" - $"n_common"), 4))
       .select($"id_a", $"id_b", $"n_common", $"jaccard")
-      .orderBy($"id_a", $"id_b")
   }
+
+  /** Exact n-gram (word trigram) Jaccard near-dup pairs — the
+    * hash-free oracle for the MinHash path: J(a,b) >= 0.35 on distinct
+    * shingle sets with df <= NgramDfCap. Shuffle key = shingle, so the
+    * pair stage is equi at scale, and the df cap bounds every bucket
+    * (see [[shingleCooccur]]). */
+  def dedupNgram(spark: SparkSession, sfDir: String): DataFrame =
+    jaccardPairs(spark, sfDir).orderBy("id_a", "id_b")
 
   val dedupNgramSql: String =
     """WITH sh AS (
@@ -877,14 +888,7 @@ object PipelineQueries {
     * and the contained side is named (the smaller set). */
   def dedupContainment(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val keptEx = keptShingles(spark, sfDir)
-    val sizes = keptEx.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
-    val pairs = shingleCooccur(keptEx)
-    pairs
-      .join(sizes.withColumnRenamed("doc_id", "id_a")
-        .withColumnRenamed("n_sh", "n_a"), Seq("id_a"))
-      .join(sizes.withColumnRenamed("doc_id", "id_b")
-        .withColumnRenamed("n_sh", "n_b"), Seq("id_b"))
+    pairSizes(spark, sfDir)
       .filter($"n_common".cast("double") / least($"n_a", $"n_b") >= 0.6)
       .withColumn("containment",
         round($"n_common".cast("double") / least($"n_a", $"n_b"), 4))

@@ -53,4 +53,26 @@ class QueryScopeSpec extends SparkSpec {
     QueryScope.release()
     assert((sc.getPersistentRDDs -- before).isEmpty)
   }
+
+  test("an RDD checkpoint keeps its partitioner, so a co-partitioned join stays narrow") {
+    val sc = spark.sparkContext
+    QueryScope.release()
+    val part = new org.apache.spark.HashPartitioner(4)
+    val rdd = sc.parallelize(1L to 100L).map(x => (x, x)).partitionBy(part)
+    val handle = QueryScope.checkpoint(rdd)
+    assert(QueryScope.held == 1)
+    assert(rdd.count() == 100)
+    assert(rdd.isCheckpointed && rdd.partitioner.contains(part))
+    // the lineage is truncated, so any shuffle left would be the join's
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map {
+      case _: org.apache.spark.ShuffleDependency[_, _, _] => 1
+      case d => shuffles(d.rdd)
+    }.sum
+    val joined = rdd.join(rdd.mapValues(_ + 1), part)
+    assert(shuffles(joined) == 0, joined.toDebugString)
+    assert(joined.values.map { case (a, b) => b - a }.sum() == 100.0)
+    handle.free()
+    assert(QueryScope.held == 0)
+    assert(rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.{QueryScope, SparkSpec}
-import graft.queries.AnalyticsQueries
+import graft.queries.{AnalyticsQueries, DedupQueries}
 
 /** Generic connected-components laws + the entity-resolution
   * composition pinned against brute force. */
@@ -82,6 +82,84 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(QueryScope.held == 0)
     val left = checkpointed -- before
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
+  }
+
+  /** Rounds the loop runs on `edges`: min-label adoption plus one
+    * pointer jump per round, until a round changes no label (that last
+    * round counts). */
+  private def rounds(edges: Seq[(Long, Long)]): Int = {
+    val nbrs = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+    var labels = nbrs.keys.map(v => v -> v).toMap
+    var r = 0
+    var changed = true
+    while (changed) {
+      val adopted = labels.map { case (v, c) => v -> math.min(c, nbrs(v).map(labels).min) }
+      val next = adopted.map { case (v, c) => v -> math.min(c, adopted(c)) }
+      changed = next != labels
+      labels = next
+      r += 1
+    }
+    r
+  }
+
+  /** Jobs started while `f` runs. */
+  private def jobsOf(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      n.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("one job per round: a chain taking r rounds runs r jobs, plus the consumer's collect") {
+    import spark.implicits._
+    // the one job outside the loop: the collect that reads the final
+    // round's labels (building the edges and the initial labels, and
+    // the returned frame, run nothing)
+    val consumerJobs = 1
+    val chain = (0L until 40L).sliding(2).map(s => (s(0), s(1))).toSeq
+    val r = rounds(chain)
+    assert(r == 6)
+    ConnectedComponents.run(chain.toDF("src", "dst")).collect() // warm-up
+    QueryScope.release()
+    var got: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsOf { got = ConnectedComponents.run(chain.toDF("src", "dst")).collect() }
+    assert(got.length == 40 && got.forall(_.getLong(1) == 0L))
+    assert(jobs == r + consumerJobs, s"$jobs jobs for $r rounds")
+    QueryScope.release()
+  }
+
+  test("labels are identical at 1 and 4 shuffle partitions, with AQE on and off") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val edges = (1 to 150).map(_ =>
+      (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter(e => e._1 != e._2)
+    def labels(parts: Int, aqe: Boolean): (Map[Long, Long], Seq[(Long, Long)]) = {
+      QueryScope.release() // rebuild the memoized shingles under these confs
+      val out = QueryScope.withConf(spark, "spark.sql.shuffle.partitions", parts.toString) {
+        QueryScope.withConf(spark, "spark.sql.adaptive.enabled", aqe.toString) {
+          (ConnectedComponents.run(edges.toDF("src", "dst"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toMap,
+            DedupQueries.dedupClusters(spark, sfDir)
+              .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+        }
+      }
+      QueryScope.release()
+      out
+    }
+    val want = labels(4, aqe = true)
+    assert(want._1 == ccRef(edges))
+    assert(want._2.nonEmpty)
+    for ((parts, aqe) <- Seq((1, true), (1, false), (4, false)))
+      assert(labels(parts, aqe) == want, s"shuffle partitions $parts, AQE $aqe")
   }
 
   test("q_entity_resolve equals brute-force components of brute-force pairs") {
