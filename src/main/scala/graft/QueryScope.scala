@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The one owner of what a query pins past its own return: every
-  * frame a query caches for a consumer downstream of it, every
-  * checkpoint (of a frame or an RDD) an iterative loop leaves behind,
+  * frame a query caches for a consumer downstream of it, every RDD
+  * checkpoint an iterative loop leaves behind,
   * and the memoized frames several queries share (the shingle
   * universe). One [[release]] returns all of it — the reference's
   * rule of keeping a chunk level only until the next one replaces it
@@ -22,17 +22,16 @@ object QueryScope {
   /** The blocks of one [[checkpoint]] call. A loop frees them as soon
     * as the next round's checkpoint has materialized and nothing reads
     * them again; blocks not freed this way wait for [[release]]. */
-  final class Checkpoint private[QueryScope] (rdds: Seq[RDD[_]]) {
-    def free(): Unit = rdds.foreach { r =>
-      pinned.remove(r)
-      r.unpersist(blocking = false)
+  final class Checkpoint private[QueryScope] (rdd: RDD[_]) {
+    def free(): Unit = {
+      pinned.remove(rdd)
+      rdd.unpersist(blocking = false)
     }
   }
 
   // cached Datasets and checkpointed RDDs, unpersisted by release()
   private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
   private val memos = new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]()
-  private val checkpointLock = new Object
 
   /** `ds.cache()`, registered for [[release]]. Lineage stays intact, so
     * a consumer that runs after the release just recomputes. */
@@ -41,43 +40,18 @@ object QueryScope {
     ds.cache()
   }
 
-  /** Eager `localCheckpoint` of `df`, returning the checkpointed frame
-    * and its blocks, registered for [[release]]. localCheckpoint
-    * materializes AND truncates the logical plan — cache() alone keeps
-    * the full lineage, so each round's plan would embed every prior
-    * round and planning cost grows per iteration. The blocks of a
-    * truncated-lineage frame can never be recomputed; they are found by
-    * diffing getPersistentRDDs around the checkpoint (public API; no
-    * private LogicalRDD poking). Serialized under checkpointLock: a
-    * CONCURRENT localCheckpoint landing between the snapshot and the
-    * diff would otherwise be captured — and later unpersisted — by
-    * this call. */
-  def checkpoint(df: DataFrame): (DataFrame, Checkpoint) =
-    checkpointLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      // the same job may also materialize OTHER persisted datasets the
-      // plan reads (e.g. the shared shingle cache); keep only the
-      // locally-checkpointed RDD this call created so we never free a
-      // cache someone else still uses
-      val added = (sc.getPersistentRDDs -- before).values
-        .filter(_.isCheckpointed).toSeq
-      added.foreach(pinned.add)
-      (out, new Checkpoint(added))
-    }
-
   /** Marks `rdd` for `localCheckpoint` and registers its blocks for
-    * [[release]]. Unlike the frame overload this is lazy: the next
-    * action over `rdd` (or over anything derived from it) materializes
-    * the blocks and truncates the lineage. An RDD checkpoint keeps its
-    * partitioner, so a join against a co-partitioned RDD stays narrow;
-    * a checkpointed frame drops its output partitioning and the next
-    * join re-exchanges it. */
+    * [[release]]. This is lazy: the next action over `rdd` (or over
+    * anything derived from it) materializes the blocks and truncates
+    * the lineage, so a loop's plan stops growing round by round. An
+    * RDD checkpoint keeps its partitioner, so a join against a
+    * co-partitioned RDD stays narrow. The handle names only `rdd`'s
+    * blocks: freeing it never touches storage that some other query
+    * or thread pinned, even one the same job materialized. */
   def checkpoint(rdd: RDD[_]): Checkpoint = {
     rdd.localCheckpoint()
     pinned.add(rdd)
-    new Checkpoint(Seq(rdd))
+    new Checkpoint(rdd)
   }
 
   /** The value memoized under `key`, built on first use and dropped by
@@ -87,9 +61,9 @@ object QueryScope {
     memos.computeIfAbsent(key, _ => build).asInstanceOf[V]
 
   /** How many frames and checkpointed RDDs are registered now. The
-    * scope holds them strongly, so unlike a count over
-    * `sc.getPersistentRDDs` (weak values, which GC may clear) this
-    * figure is exact. */
+    * scope holds them strongly, so unlike a count over the
+    * SparkContext's persistent-RDD map (weak values, which GC may
+    * clear) this figure is exact. */
   private[graft] def held: Int = pinned.size
 
   /** Unpersist everything registered and forget every memo. Call ONLY

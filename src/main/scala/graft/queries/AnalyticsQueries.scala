@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -369,10 +371,11 @@ object AnalyticsQueries {
   /** Fixed-iteration power method as a DuckDB recursive CTE: the
     * working table holds exactly the previous iteration's (node,
     * rank) rows (UNION ALL semantics), so each recursive step is one
-    * join-onto-edges + group-by-dst — the same single shuffle pair
-    * the distributed loop runs. Iteration count and damping match
-    * [[graphPagerank]] exactly; base term (1-d)/n only, because the
-    * bidirectional graph has no dangling mass. */
+    * join-onto-edges + group-by-dst — the rank join and the one
+    * contributions shuffle each distributed round runs. Iteration
+    * count and damping match [[graphPagerank]] exactly; base term
+    * (1-d)/n only, because the bidirectional graph has no dangling
+    * mass. */
   val graphPagerankSql: String =
     """WITH RECURSIVE
       |e AS MATERIALIZED (
@@ -1526,57 +1529,53 @@ object AnalyticsQueries {
 
   /** Iterative BFS — min-hop levels from node 0 over a deterministic
     * arithmetic graph (two out-edges per node), proven against a
-    * DuckDB RECURSIVE CTE oracle: the driver loop (frontier join →
-    * anti-join vs visited → union, `localCheckpoint` per round, NO
-    * convergence count() action — the fixed 10-hop budget bounds the
-    * loop and empty frontiers join for free) must reproduce the
-    * recursive fixpoint's min(hop) exactly. The iterative-loop
-    * discipline of PageRank/CC, with cross-engine semantics instead
-    * of a spec replica. Shape at 100 TB: each round is one keyed
-    * join + one anti-join on node ids; frontier and visited are
-    * node-scale, lineage capped per round. */
+    * DuckDB RECURSIVE CTE oracle: the driver loop must reproduce the
+    * recursive fixpoint's min(hop) exactly. An RDD loop shaped like
+    * [[graft.graph.ConnectedComponents.run]]: the edges are partitioned
+    * by src over ONE hash partitioner and cached once, and the visited
+    * (node, hop) set leaves every hop partitioned the same way, so the
+    * frontier join onto the edges and the merge of the reached nodes
+    * into the visited set are narrow. A hop is one job: the reached
+    * nodes' dedup `reduceByKey` is its one exchange, and the count
+    * that materializes the hop's visited set is its only action. Each
+    * hop's visited set is local-checkpointed and freed once the next
+    * hop supersedes it. The fixed 10-hop budget bounds the loop; an
+    * empty frontier joins for free. Shape at 100 TB: one keyed join +
+    * one node-scale merge per hop, lineage capped per hop. */
   def graphBfs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val n = 150L
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val base = Fixtures.documents(spark, sfDir)
       .select($"doc_id").filter($"doc_id" < n)
     val edges = base.select($"doc_id".as("src"))
       .withColumn("dst", explode(array(
         ($"src" * 2 + 3) % n, ($"src" * 5 + 7) % n)))
+      .as[(Long, Long)].rdd
+      .partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // r22 NOTE: a "lazy visited union + empty-frontier early exit"
-      // variant was built and PAIRED-MEASURED SLOWER in 0/4 pairs
-      // (2.86 → 5.16 s mean, BENCH_r22_paired_batch2.json): the lazy
-      // union makes round h's anti-join re-scan h separate checkpointed
-      // RDDs and the plan grows per round, which costs more than the
-      // node-scale visited re-checkpoint it saved — and this graph
-      // still adds nodes at hop 10, so the early exit never fires.
-      // Reverted; the per-round eager checkpoint stands as measured.
-      var (visited, visitedCp) =
-        QueryScope.checkpoint(Seq((0L, 0L)).toDF("node", "hop"))
-      var frontier = visited
-      var frontierCp = Option.empty[QueryScope.Checkpoint]
-      for (h <- 1 to 10) {
-        val (next, nextCp) = QueryScope.checkpoint(
-          frontier.join(edges, frontier("node") === edges("src"))
-            .select($"dst".as("node")).distinct()
-            .join(visited, Seq("node"), "left_anti")
-            .withColumn("hop", lit(h.toLong)))
-        val (grown, grownCp) = QueryScope.checkpoint(visited.union(next))
-        // both new rounds are materialized: nothing reads the previous
-        // visited or frontier blocks again
-        visitedCp.free()
-        frontierCp.foreach(_.free())
-        visited = grown
-        visitedCp = grownCp
-        frontier = next
-        frontierCp = Some(nextCp)
+      var visited: RDD[(Long, Long)] =
+        spark.sparkContext.parallelize(Seq((0L, 0L))).partitionBy(part)
+      var prev: QueryScope.Checkpoint = null
+      for (h <- 1L to 10L) {
+        val frontier = visited.filter(_._2 == h - 1)
+        val reached = edges.join(frontier, part)
+          .map { case (_, (dst, _)) => (dst, h) }
+          .reduceByKey(part, (a, _) => a)
+        // a node already visited keeps its earlier hop
+        val next = visited.fullOuterJoin(reached, part)
+          .mapValues { case (old, now) => old.orElse(now).get }
+        val cp = QueryScope.checkpoint(next)
+        next.count()
+        // next is materialized: nothing reads the previous hop's
+        // blocks; the result reads the last one, pinned until
+        // QueryScope.release()
+        if (prev != null) prev.free()
+        prev = cp
+        visited = next
       }
-      // the result reads only the final visited, pinned until
-      // QueryScope.release()
-      frontierCp.foreach(_.free())
-      visited.groupBy($"hop")
+      visited.toDF("node", "hop").groupBy($"hop")
         .agg(count(lit(1)).as("n_nodes"), min($"node").as("min_node"),
           max($"node").as("max_node"))
         .orderBy($"hop")

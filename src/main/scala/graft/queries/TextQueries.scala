@@ -1326,7 +1326,7 @@ object TextQueries {
     * degrees AND the rank fixed point ([[graft.graph.PageRank.runLocal]],
     * pinned ≡ the distributed operator in PageRankSpec) — is
     * driver-side arithmetic on that metadata-scale matrix, so the
-    * rank iterations cost microseconds instead of 2·iters shuffles —
+    * rank iterations cost microseconds instead of a job per iteration —
     * GATED on the matrix's measured size ([[crawlLinksGated]]): past
     * 10⁶ pairs (a real web-host graph) the identical math runs
     * through the distributed operator instead of the driver.

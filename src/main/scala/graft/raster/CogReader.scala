@@ -292,6 +292,24 @@ object CogReader {
       case (b, s) => sys.error(s"unsupported bits/sampleFormat $b/$s")
     }
 
+  /** The codec name of a TIFF Compression tag value. Strips never
+    * decode JPEG, so a `striped` page refuses it with the rest of the
+    * unknown codes. */
+  def codecOf(compression: Int, striped: Boolean = false): String =
+    compression match {
+      case 1 => "none"
+      case 5 => "lzw"
+      case 7 if !striped => "jpeg"
+      // 8 = Adobe deflate; 32946 = legacy old-style Deflate (the JDK
+      // writer's "Deflate" type, pre-TIFF-TechNote files) — both are
+      // the same zlib stream, only the tag value differs
+      case 8 | 32946 => "deflate"
+      case 32773 => "packbits"
+      case 50000 => "zstd"
+      case c => sys.error(
+        s"unsupported ${if (striped) "strip " else ""}compression code $c")
+    }
+
   /** Reconstruct a read-capable [[RasterProfile]] from the parsed
     * header alone — the DSv2 path needs no writer-side profile. Fields
     * that only affect WRITING (resampling kernel, zlevel, jpegQuality,
@@ -303,18 +321,6 @@ object CogReader {
     require(data.nonEmpty, "no data pages in header")
     val p0 = data.head
     val dtype = dtypeOf(p0.bits, p0.sampleFormat)
-    def codec(c: Int): String = c match {
-      case 1 => "none"
-      case 5 => "lzw"
-      case 7 => "jpeg"
-      // 8 = Adobe deflate; 32946 = legacy old-style Deflate (the JDK
-      // writer's "Deflate" type, pre-TIFF-TechNote files) — both are
-      // the same zlib stream, only the tag value differs
-      case 8 | 32946 => "deflate"
-      case 32773 => "packbits"
-      case 50000 => "zstd"
-      case c => sys.error(s"unsupported compression code $c")
-    }
     require(!p0.isStriped,
       "strip-organized TIFF (no tiles): use CogReader.readStrips")
     // materializeTile strides rows by the profile's single blockSize:
@@ -324,13 +330,13 @@ object CogReader {
       s"unsupported non-square tiles ${p0.tileW}x${p0.tileH}")
     data.foreach(pg => require(pg.tileW == p0.tileW && pg.tileH == p0.tileH,
       s"mixed tile sizes across pages: ${pg.tileW}x${pg.tileH} vs ${p0.tileW}x${p0.tileH}"))
-    val comp = codec(p0.compression)
-    val ovComp = data.lift(1).map(pg => codec(pg.compression)).filter(_ != comp)
+    val comp = codecOf(p0.compression)
+    val ovComp = data.lift(1).map(pg => codecOf(pg.compression)).filter(_ != comp)
     // decode applies ONE codec + predictor to every overview level: a
     // foreign file mixing codecs (or deflate predictors) per level
     // would decode deeper overviews wrongly — reject loudly
     data.drop(1).foreach { pg =>
-      require(codec(pg.compression) == ovComp.getOrElse(comp),
+      require(codecOf(pg.compression) == ovComp.getOrElse(comp),
         s"mixed overview compressions: ${pg.compression} vs first overview")
     }
     // predictor only applies under deflate/lzw/zstd (jpeg/none/packbits
@@ -353,7 +359,7 @@ object CogReader {
     // Checked PER PAGE: a jpeg-compressed YCbCr OVERVIEW under a
     // deflate base level must not slip through.
     data.foreach(pg => require(
-      pg.planar == 1 || codec(pg.compression) != "jpeg" || pg.photometric != 6,
+      pg.planar == 1 || codecOf(pg.compression) != "jpeg" || pg.photometric != 6,
       "planar YCbCr jpeg pages are unsupported"))
     val nodata = nodataOf(p0, dtype)
     // geo-referencing back from the tags (the read-side answer to the
@@ -395,14 +401,7 @@ object CogReader {
       "multi-page striped files are unsupported")
     val pg = pages.head
     require(pg.isStriped, s"not strip-organized (tileW=${pg.tileW})")
-    val codec = pg.compression match {
-      case 1 => "none"
-      case 5 => "lzw"
-      case 8 | 32946 => "deflate" // 32946 = legacy old-style Deflate
-      case 32773 => "packbits"
-      case 50000 => "zstd"
-      case c => sys.error(s"unsupported strip compression code $c")
-    }
+    val codec = codecOf(pg.compression, striped = true)
     val dtype = dtypeOf(pg.bits, pg.sampleFormat)
     val width = pg.width.toInt
     val height = pg.height.toInt

@@ -1178,14 +1178,7 @@ class CogScan(paths: Seq[String], conf: Map[String, String],
     var remaining = limit.getOrElse(Int.MaxValue)
 
     def planStriped(uri: String, pg: BigTiff.PageMeta): Seq[InputPartition] = {
-      val codec = pg.compression match {
-        case 1 => "none"
-        case 5 => "lzw"
-        case 8 | 32946 => "deflate" // 32946 = legacy old-style Deflate
-        case 32773 => "packbits"
-        case 50000 => "zstd"
-        case c => sys.error(s"unsupported strip compression code $c")
-      }
+      val codec = CogReader.codecOf(pg.compression, striped = true)
       // shared layout derivation: strip count from the geometry (not
       // the offsets array), 2^32-1 RowsPerStrip sentinel clamped,
       // offsets/counts lengths cross-checked

@@ -351,6 +351,36 @@ class AnalyticsQuerySpec extends SparkSpec {
     }
   }
 
+  test("q_graph_bfs: one job per hop; levels equal a driver BFS") {
+    val s = spark
+    import s.implicits._
+    QueryScope.release()
+    // opening the fixture may run a parquet schema job of its own
+    val readJobs = jobsOf { Fixtures.documents(spark, sfDir) }
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { out = AnalyticsQueries.graphBfs(spark, sfDir) }
+    assert(jobs == readJobs + 10, s"$jobs jobs for 10 hops ($readJobs to open the fixture)")
+    // the same arithmetic graph: only docs with an id below 150 have
+    // out-edges
+    val ids = Fixtures.documents(spark, sfDir).select($"doc_id").as[Long]
+      .collect().filter(_ < 150L).toSet
+    val hop = scala.collection.mutable.Map(0L -> 0L)
+    var frontier = Set(0L)
+    for (h <- 1L to 10L) {
+      frontier = frontier.filter(ids)
+        .flatMap(v => Seq((v * 2 + 3) % 150, (v * 5 + 7) % 150))
+        .filterNot(hop.contains)
+      frontier.foreach(hop(_) = h)
+    }
+    val want = hop.groupBy(_._2).toSeq.sortBy(_._1).map { case (h, ns) =>
+      (h, ns.size.toLong, ns.keys.min, ns.keys.max)
+    }
+    val got = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == want)
+    QueryScope.release()
+  }
+
   test("q_mix_dsir: per-source rollup is complete and weights are finite") {
     val rows = AnalyticsQueries.mixDsir(spark, sfDir).collect()
     val docs = Fixtures.documents(spark, sfDir)

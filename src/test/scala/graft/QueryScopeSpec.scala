@@ -2,7 +2,7 @@ package graft
 
 /** The one owner of query-pinned storage: a memo lives until
   * [[QueryScope.release]], and freeing one checkpoint early frees
-  * exactly its own blocks. */
+  * exactly its own blocks, even while another thread's loop runs. */
 class QueryScopeSpec extends SparkSpec {
 
   test("memo returns the same frame for a key until release, then rebuilds it") {
@@ -38,12 +38,13 @@ class QueryScopeSpec extends SparkSpec {
     // the checkpoint job is the first action over `cached`, so it
     // materializes the cache's blocks too
     val cached = QueryScope.cache((1L to 200L).toDF("x").filter($"x" % 3 =!= 0))
-    val (cp, handle) = QueryScope.checkpoint(cached.select(($"x" * 2).as("y")))
+    val doubled = cached.as[Long].rdd.map(_ * 2)
+    val handle = QueryScope.checkpoint(doubled)
+    assert(doubled.count() == 134)
     val grown = sc.getPersistentRDDs -- before
     val (cpRdds, cacheRdds) = grown.values.partition(_.isCheckpointed)
-    assert(cpRdds.size == 1, s"checkpoint blocks: $grown")
+    assert(cpRdds.map(_.id).toSeq == Seq(doubled.id), s"checkpoint blocks: $grown")
     assert(cacheRdds.size == 1, s"cache blocks: $grown")
-    assert(cp.count() == 134)
     handle.free()
     val left = sc.getPersistentRDDs -- before
     assert(left.keySet == cacheRdds.map(_.id).toSet,
@@ -52,6 +53,41 @@ class QueryScopeSpec extends SparkSpec {
     assert(cached.count() == 134)
     QueryScope.release()
     assert((sc.getPersistentRDDs -- before).isEmpty)
+  }
+
+  test("two threads' loops on one session each free only their own checkpoints") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val s = spark
+    import s.implicits._
+    QueryScope.release()
+    // a 40-node chain (six rounds) and a random graph on other ids
+    val chain = (0L until 40L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val rnd = new scala.util.Random(37)
+    val random = (1 to 150).map(_ =>
+      (100L + rnd.nextInt(80), 100L + rnd.nextInt(80))).filter(e => e._1 != e._2)
+    val graphs = Seq(chain, random).map(_.toDF("src", "dst"))
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val serial = graphs.map { g =>
+      val l = labels(graph.ConnectedComponents.run(g))
+      QueryScope.release()
+      l
+    }
+    assert(QueryScope.held == 0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val runs = graphs.map(g => Future { start.await(); graph.ConnectedComponents.run(g) })
+      val results = runs.map(Await.result(_, 5.minutes))
+      // both loops are done: every free() either ran has happened, and
+      // each result still reads its own final checkpoint's blocks
+      assert(QueryScope.held == 2, s"scope holds ${QueryScope.held}")
+      assert(results.map(labels) == serial)
+      QueryScope.release()
+      assert(QueryScope.held == 0)
+    } finally pool.shutdown()
   }
 
   test("an RDD checkpoint keeps its partitioner, so a co-partitioned join stays narrow") {

@@ -17,6 +17,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
+  /** Jobs started while `f` runs. */
+  def jobsOf(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      n.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Plan with AQE off so BatchScanExec is reachable in the tree (the
     * PlanShapeSpec discipline) — the ONE home of the AQE-toggle
     * helper every DSv2 plan-pin spec needs. */

@@ -102,22 +102,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     r
   }
 
-  /** Jobs started while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      n.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("one job per round: a chain taking r rounds runs r jobs, plus the consumer's collect") {
     import spark.implicits._
     // the one job outside the loop: the collect that reads the final

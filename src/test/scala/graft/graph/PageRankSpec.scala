@@ -101,6 +101,58 @@ class PageRankSpec extends SparkSpec {
     assert(left.isEmpty, s"retained checkpoints not freed: $left")
   }
 
+  /** The dangling-free 200-node ring plus chords. */
+  private def ring: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(29)
+    (0L until 200L).map(v => (v, (v + 1) % 200)) ++
+      (1 to 300).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+  }
+
+  test("one job per iteration: the setup count, one per round, plus the consumer's collect") {
+    import spark.implicits._
+    // the jobs outside the loop: one that counts the nodes and the
+    // dangling nodes before the first round, and the collect that
+    // reads the final round's ranks
+    val setupJobs = 1
+    val consumerJobs = 1
+    PageRank.run(ring.toDF("src", "dst"), iters = 10).collect() // warm-up
+    QueryScope.release()
+    var got: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsOf { got = PageRank.run(ring.toDF("src", "dst"), iters = 10).collect() }
+    assert(got.length == 200)
+    assert(jobs == setupJobs + 10 + consumerJobs, s"$jobs jobs for 10 iterations")
+    QueryScope.release()
+  }
+
+  test("ranks are equal within 1e-12 at 1 and 4 shuffle partitions, with AQE on and off") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(41)
+    // nodes 60..69 have no out-edges: the dangling mass moves every round
+    val edges = (1 to 250).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(70).toLong))
+      .filter(e => e._1 != e._2)
+    def ranks(parts: Int, aqe: Boolean): Map[Long, Double] = {
+      val out = QueryScope.withConf(spark, "spark.sql.shuffle.partitions", parts.toString) {
+        QueryScope.withConf(spark, "spark.sql.adaptive.enabled", aqe.toString) {
+          PageRank.run(edges.toDF("src", "dst"), iters = 10)
+            .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+        }
+      }
+      QueryScope.release()
+      out
+    }
+    val want = ranks(4, aqe = true)
+    assert(want.keySet == (edges.map(_._1) ++ edges.map(_._2)).toSet)
+    assert(want.keySet.exists(_ >= 60))
+    for ((parts, aqe) <- Seq((1, true), (1, false), (4, false))) {
+      val got = ranks(parts, aqe)
+      assert(got.keySet == want.keySet, s"shuffle partitions $parts, AQE $aqe")
+      got.foreach { case (v, r) =>
+        assert(math.abs(r - want(v)) < 1e-12,
+          s"shuffle partitions $parts, AQE $aqe, node $v: $r vs ${want(v)}")
+      }
+    }
+  }
+
   test("q_graph_pagerank: 20 rows, rank-ordered, sane node encoding") {
     val rows = AnalyticsQueries.graphPagerank(spark, sfDir).collect()
     assert(rows.length == 20)

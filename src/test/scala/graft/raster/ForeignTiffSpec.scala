@@ -372,6 +372,16 @@ class ForeignTiffSpec extends SparkSpec {
     assert(ex2.getMessage.contains("SampleFormat"))
   }
 
+  test("one compression-code table: tiles decode JPEG, strips refuse it") {
+    assert(Seq(1, 5, 7, 8, 32946, 32773, 50000).map(CogReader.codecOf(_)) ==
+      Seq("none", "lzw", "jpeg", "deflate", "deflate", "packbits", "zstd"))
+    assert(CogReader.codecOf(8, striped = true) == "deflate")
+    val strip = intercept[RuntimeException](CogReader.codecOf(7, striped = true))
+    assert(strip.getMessage == "unsupported strip compression code 7")
+    val tile = intercept[RuntimeException](CogReader.codecOf(2))
+    assert(tile.getMessage == "unsupported compression code 2")
+  }
+
   test("IFD or tag payload beyond the header probe raises the clear layout error") {
     // IFD pointer way past the buffer: trailing-IFD (non-COG) layout
     val b = java.nio.ByteBuffer.allocate(8)
