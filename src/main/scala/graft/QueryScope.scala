@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** The one owner of what a query pins past its own return: every
   * frame a query caches for a consumer downstream of it, every RDD
@@ -79,14 +79,5 @@ object QueryScope {
       }
       p = pinned.poll()
     }
-  }
-
-  /** Run `body` with the session conf `key` set to `value`, restoring
-    * the previous value after. A plan built inside `body` sees the
-    * override; one built after it does not. */
-  def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try body finally spark.conf.set(key, prev)
   }
 }

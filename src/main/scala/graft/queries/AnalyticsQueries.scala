@@ -342,7 +342,7 @@ object AnalyticsQueries {
       .union(li.select(($"l_suppkey" * 2 + 1).as("src"),
         ($"l_partkey" * 2).as("dst")))
     // iterative jobs pay fixed per-task scheduling cost 8× over; size
-    // shuffle partitions TO THE GRAPH, not to a constant (guide §2.2:
+    // the loop's partitions TO THE GRAPH, not to a constant (guide §2.2:
     // partitions in the ~128 MB range — ≈8M 16-byte edge rows — never
     // one hard-coded local number). Floored at 8, the measured optimum
     // wherever scheduling overhead dominates: the r22 10×-workload
@@ -353,11 +353,8 @@ object AnalyticsQueries {
     // run sizes them to edge volume. The lineitem row count is a
     // parquet-metadata count, one cheap action.
     val approxEdges = Fixtures.lineitem(spark, sfDir).count() * 2
-    val parts = math.max(8L, approxEdges / 8000000L)
-    val ranks = QueryScope.withConf(spark, "spark.sql.shuffle.partitions",
-      parts.toString) {
-      PageRank.run(edges, iters = 8)
-    }
+    val parts = math.max(8L, approxEdges / 8000000L).toInt
+    val ranks = PageRank.run(edges, iters = 8, parts = parts)
     ranks
       .select(
         when($"node" % 2 === 0, lit("part")).otherwise(lit("supplier"))
@@ -629,32 +626,31 @@ object AnalyticsQueries {
   def streamScore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = WindowQueries.demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val dim = 256
     val model = trainDistilled(spark, sfDir)
     val bc = spark.sparkContext.broadcast(model)
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDF().toDF("doc_id", "ts", "source", "text")
-        .withWatermark("ts", "60 minutes")
-        .dropDuplicatesWithinWatermark("doc_id")
-        .as[(Long, java.sql.Timestamp, String, String)]
-        .map { case (id, _, src, text) =>
-          (id, src, bc.value.score(QualityClassifier.featurize(text, dim)))
-        }
-        .toDF("doc_id", "source", "p")
-        .withColumn("kept", $"p" >= 0.5)
-        .writeStream.format("memory").queryName("q_stream_score_out")
-        .outputMode("append").start()
-      try {
-        val (b1, b2) = streamScoreDocs()
-        mem.addData(b1: _*)
-        q.processAllAvailable()
-        mem.addData(b2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("q_stream_score_out")
+    val q = mem.toDF().toDF("doc_id", "ts", "source", "text")
+      .withWatermark("ts", "60 minutes")
+      .dropDuplicatesWithinWatermark("doc_id")
+      .as[(Long, java.sql.Timestamp, String, String)]
+      .map { case (id, _, src, text) =>
+        (id, src, bc.value.score(QualityClassifier.featurize(text, dim)))
+      }
+      .toDF("doc_id", "source", "p")
+      .withColumn("kept", $"p" >= 0.5)
+      .writeStream.format("memory").queryName("q_stream_score_out")
+      .outputMode("append").start()
+    try {
+      val (b1, b2) = streamScoreDocs()
+      mem.addData(b1: _*)
+      q.processAllAvailable()
+      mem.addData(b2: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    demo.table("q_stream_score_out")
       .groupBy($"source", $"kept")
       .agg(count(lit(1)).as("n_docs"), round(avg($"p"), 3).as("mean_p"))
       .orderBy($"source", $"kept")

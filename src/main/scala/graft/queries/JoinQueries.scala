@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Fixtures, QueryScope}
+import graft.Fixtures
 
 /** Join surface (SURVEY.md §2.2 join rows).
   *
@@ -318,10 +318,10 @@ object JoinQueries {
     * aggregation then run with ZERO shuffle Exchanges (asserted here
     * at execution, not just in BucketingSpec) — the pre-partitioning
     * strategy a 100 TB star schema uses so its hot join pays its
-    * shuffle once at write time, never per query. Broadcast is
-    * disabled for the duration so the plan exercises the bucketed
-    * sort-merge path (at real scale neither side broadcasts anyway);
-    * executed eagerly so the conf toggle and plan assertion stay
+    * shuffle once at write time, never per query. A sort-merge hint
+    * keeps the plan on the bucketed scans, where a broadcast of either
+    * side would plan a BroadcastExchange (at real scale neither side
+    * broadcasts anyway); executed eagerly so the plan assertion stays
     * inside this call. The DuckDB oracle runs the plain join — the
     * hash match proves bucketing is pure layout, zero semantics. */
   // one bucketed warehouse per (session, sfDir): the bucketed tables
@@ -362,23 +362,21 @@ object JoinQueries {
   def joinBucketed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val sfx = ensureBucketedTables(spark, sfDir)
-    QueryScope.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val perOrder = spark.table(s"graft_bktq_orders_$sfx")
-        .join(spark.table(s"graft_bktq_lineitem_$sfx"),
-          $"o_orderkey" === $"l_orderkey")
-        .groupBy($"o_orderkey", $"o_orderstatus")
-        .agg(sum(dec($"l_quantity")).as("qty"))
-      val plan = perOrder.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange"),
-        s"bucketed join planned a shuffle:\n$plan")
-      val rows = perOrder
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum($"qty").cast("double").as("sum_qty"))
-        .orderBy($"o_orderstatus")
-        .as[(String, Long, Double)].collect().toSeq
-      rows.toDF("o_orderstatus", "n_orders", "sum_qty")
-    }
+    val perOrder = spark.table(s"graft_bktq_orders_$sfx").hint("merge")
+      .join(spark.table(s"graft_bktq_lineitem_$sfx"),
+        $"o_orderkey" === $"l_orderkey")
+      .groupBy($"o_orderkey", $"o_orderstatus")
+      .agg(sum(dec($"l_quantity")).as("qty"))
+    val plan = perOrder.queryExecution.executedPlan.toString
+    require(!plan.contains("Exchange"),
+      s"bucketed join planned a shuffle:\n$plan")
+    val rows = perOrder
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n_orders"),
+        sum($"qty").cast("double").as("sum_qty"))
+      .orderBy($"o_orderstatus")
+      .as[(String, Long, Double)].collect().toSeq
+    rows.toDF("o_orderstatus", "n_orders", "sum_qty")
   }
 
   val joinBucketedSql: String =

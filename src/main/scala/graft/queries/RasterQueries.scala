@@ -50,12 +50,6 @@ object RasterQueries {
     pyramidRollup(spark, sfDir, "lanczos")
 
   private[graft] def pyramidRollup(spark: SparkSession, sfDir: String,
-      kernel: String): DataFrame =
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      pyramidRollupBody(spark, sfDir, kernel)
-    }
-
-  private def pyramidRollupBody(spark: SparkSession, sfDir: String,
       kernel: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -126,13 +120,7 @@ object RasterQueries {
   /** Encode + distributed prefix-sum placement WITHOUT the sink: the
     * (level, ty, tx, offset, nbytes) plan rows, file-ordered — directly
     * the reference's parts_info table (ccog/ccog.py:717-773). */
-  def rasterAssemble(spark: SparkSession, sfDir: String): DataFrame =
-    // size-to-grid shuffle partitions, same rationale as mosaic_write
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      rasterAssembleBody(spark, sfDir)
-    }
-
-  private def rasterAssembleBody(spark: SparkSession, sfDir: String): DataFrame = {
+  def rasterAssemble(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = edge(sfDir)
     val prof = RasterProfile(e, e, blockSize = 128, nodata = ND,
@@ -155,12 +143,7 @@ object RasterQueries {
   /** Full write_ccog analog: synthetic raster → assembled COG bytes via
     * the local multipart sink; returns the file's structural fingerprint
     * (deflate is deterministic, so sha256 is a golden). */
-  def cogWriteBytes(spark: SparkSession, sfDir: String): DataFrame =
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      cogWriteBytesBody(spark, sfDir)
-    }
-
-  private def cogWriteBytesBody(spark: SparkSession, sfDir: String): DataFrame = {
+  def cogWriteBytes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = edge(sfDir)
     val prof = RasterProfile(e, e, blockSize = 128, nodata = ND,
@@ -277,12 +260,7 @@ object RasterQueries {
     * pipeline via the SQL surface (geometry inferred from the tile
     * columns), then the new file is read back and rolled up with the
     * same per-level invariant as the read queries. */
-  def rasterDsv2Write(spark: SparkSession, sfDir: String): DataFrame =
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      rasterDsv2WriteBody(spark, sfDir)
-    }
-
-  private def rasterDsv2WriteBody(spark: SparkSession, sfDir: String): DataFrame = {
+  def rasterDsv2Write(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val (uri, prof) = writeReadbackCog(spark)
     val dir = graft.TmpDirs.create("graft-dsv2w")
@@ -389,28 +367,6 @@ object RasterQueries {
       .orderBy($"file")
   }
 
-  /** Partitioned mosaic WRITE (the write-side half of q_raster_mosaic):
-    * a generated raster's level-0 tiles go through
-    * `df.write.format("cog")` with `mosaic.grid`, producing one COG per
-    * region under a directory (per-file geo origins shifted so world
-    * coordinates are preserved), then the directory mosaic-reads back
-    * and rolls up per file. Region count stays 2×2 across SFs (the
-    * per-file size grows instead) so the bench measures pixel
-    * throughput, not job-launch overhead. The write arrives in TWO
-    * batches — western regions create the mosaic, eastern regions
-    * APPEND to it in place (round 9) — the incremental-ingest shape:
-    * each batch of new spatial regions lands as new immutable COG
-    * files, and appends carry explicit geometry because inference
-    * would clip to the partial extent (CogWriteSupport scaladoc). */
-  def rasterMosaicWrite(spark: SparkSession, sfDir: String): DataFrame =
-    // shuffle partitions sized to the tile grid (the prefix-sum sort
-    // and stats agg inside each region's CogWriter job otherwise fan
-    // 48-tile regions across 32 near-empty tasks) — the same
-    // size-to-volume discipline as the streaming demos and PageRank
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "8") {
-      rasterMosaicWriteBody(spark, sfDir)
-    }
-
   // the mosaic-write INPUT staged once per (session, sfDir) as parquet:
   // each region sub-write re-filters its source on purpose (at 100 TB
   // that re-scan is a pruned parquet/cog read — the right trade), and
@@ -434,7 +390,20 @@ object RasterQueries {
       dir
     }
 
-  private def rasterMosaicWriteBody(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Partitioned mosaic WRITE (the write-side half of q_raster_mosaic):
+    * a generated raster's level-0 tiles go through
+    * `df.write.format("cog")` with `mosaic.grid`, producing one COG per
+    * region under a directory (per-file geo origins shifted so world
+    * coordinates are preserved), then the directory mosaic-reads back
+    * and rolls up per file. Region count stays 2×2 across SFs (the
+    * per-file size grows instead) so the bench measures pixel
+    * throughput, not job-launch overhead. The write arrives in TWO
+    * batches — western regions create the mosaic, eastern regions
+    * APPEND to it in place (round 9) — the incremental-ingest shape:
+    * each batch of new spatial regions lands as new immutable COG
+    * files, and appends carry explicit geometry because inference
+    * would clip to the partial extent (CogWriteSupport scaladoc). */
+  def rasterMosaicWrite(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val e = edge(sfDir)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Fixtures, QueryScope}
+import graft.Fixtures
 import graft.text.{Bpe, LangId, Winnowing}
 
 /** Text-analysis operators of the LLM-data pipeline: quality scoring
@@ -938,28 +938,24 @@ object TextQueries {
   def streamWarc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = WindowQueries.demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val docs = Fixtures.documents(spark, sfDir)
       .select($"doc_id", $"source", $"text").as[(Long, String, String)]
       .collect().sortBy(_._1)
     val dir = graft.TmpDirs.create("warc_stream")
     val mem = MemoryStream[(Long, String, String)]
-    // the wrapper must cover the WHOLE run (micro-batches plan during
-    // processAllAvailable, not at start()) — the sibling streaming
-    // queries' discipline
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDF().toDF("doc_id", "source", "text")
-        .writeStream
-        .foreachBatch(graft.streaming.WarcStreamIngest.stageBatch(dir) _)
-        .start()
-      try {
-        val half = docs.length / 2
-        mem.addData(docs.take(half): _*)
-        q.processAllAvailable()
-        mem.addData(docs.drop(half): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
+    val q = mem.toDF().toDF("doc_id", "source", "text")
+      .writeStream
+      .foreachBatch(graft.streaming.WarcStreamIngest.stageBatch(dir) _)
+      .start()
+    try {
+      val half = docs.length / 2
+      mem.addData(docs.take(half): _*)
+      q.processAllAvailable()
+      mem.addData(docs.drop(half): _*)
+      q.processAllAvailable()
+    } finally q.stop()
     // restart semantics: replay batch 0 out-of-band — byte-identical
     // files overwrite themselves, the read below must see no dupes
     graft.streaming.WarcStreamIngest.stageBatch(dir)(

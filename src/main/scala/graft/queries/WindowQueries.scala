@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Fixtures, QueryScope}
+import graft.Fixtures
 
 /** Window-function surface + batch forms of the streaming time windows
   * (SURVEY.md §2.2). The time-window expressions are streaming-compatible
@@ -22,15 +22,36 @@ object WindowQueries {
 
   private val fmtS = "yyyy-MM-dd HH:mm:ss"
 
-  // The stateful streaming demo queries below run with
-  // spark.sql.shuffle.partitions at 4 (QueryScope.withConf): a
-  // streaming query materializes one state store PER shuffle partition
-  // per stateful operator per micro-batch (a stream-stream join keeps
-  // four stores per partition), so at the session default of 32
-  // partitions a 300-row demo pays ~hundreds of store commits of pure
-  // fixed overhead. The demos carry hundreds of rows by design — the
-  // operator SEMANTICS are what's exercised; a production stream would
-  // size partitions to its volume exactly the same way.
+  /** The session the streaming demos run in: a child of `spark` (same
+    * SparkContext and cached data, its own SQL conf and temp views)
+    * holding, as of this call, exactly the modifiable entries of
+    * `spark`'s runtime conf, at a shuffle width of 4. The width is 4
+    * because a streaming query keeps one state store per shuffle
+    * partition per stateful operator (a stream-stream join keeps four
+    * per partition) and commits every store each micro-batch: at a
+    * core-sized width the demos' few hundred rows would pay hundreds of
+    * fixed-cost commits. The demos carry hundreds of rows by design —
+    * the operator SEMANTICS are what's exercised; a production stream
+    * sizes its width to its volume the same way. A demo binds its
+    * MemoryStream, its stream and its memory-sink read to the child, so
+    * neither the width nor the `q_stream_*_out` view reaches the
+    * caller's session. There is one child per caller session, because
+    * each session's streaming query manager adds a listener to the
+    * SparkContext's bus that is never removed: a child per call would
+    * leak one session per demo run. */
+  private[graft] def demoSession(spark: SparkSession): SparkSession = {
+    val child = demoSessions.computeIfAbsent(spark, _.newSession())
+    val want = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) } +
+      ("spark.sql.shuffle.partitions" -> "4")
+    child.conf.getAll.keys
+      .filter(k => child.conf.isModifiable(k) && !want.contains(k))
+      .foreach(child.conf.unset)
+    want.foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
+  private val demoSessions =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
 
   /** Ranking: top-3 orders per customer by totalprice (unique tiebreak). */
   def winRank(spark: SparkSession, sfDir: String): DataFrame = {
@@ -340,24 +361,23 @@ object WindowQueries {
   def streamWatermark(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val base = 1700000000000L
     val rows = (0 until 300).map { i =>
       (new java.sql.Timestamp(base + i * 53000L),
         if (i % 4 == 0) "click" else "view", (i % 13) + 0.5)
     }
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = tumbleAgg(mem.toDF().toDF("ts", "event_type", "value")
-          .withWatermark("ts", "10 minutes"))
-        .writeStream.format("memory").queryName("q_stream_watermark_out")
-        .outputMode("complete").start()
-      try {
-        mem.addData(rows: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("q_stream_watermark_out")
+    val q = tumbleAgg(mem.toDF().toDF("ts", "event_type", "value")
+        .withWatermark("ts", "10 minutes"))
+      .writeStream.format("memory").queryName("q_stream_watermark_out")
+      .outputMode("complete").start()
+    try {
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    demo.table("q_stream_watermark_out")
       .orderBy($"w_start", $"event_type")
   }
 
@@ -373,7 +393,8 @@ object WindowQueries {
   def streamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val base = 1700000000000L
     def ev(i: Int) = (i.toLong, new java.sql.Timestamp(base + i * 41000L),
       if (i % 3 == 0) "doc" else "img")
@@ -383,20 +404,18 @@ object WindowQueries {
     // whose first occurrence is still inside the watermark
     val b2 = (150 until 300).map(ev)
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDF().toDF("event_id", "ts", "kind")
-        .withWatermark("ts", "60 minutes")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName("q_stream_dedup_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(b1: _*)
-        q.processAllAvailable()
-        mem.addData(b2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("q_stream_dedup_out")
+    val q = mem.toDF().toDF("event_id", "ts", "kind")
+      .withWatermark("ts", "60 minutes")
+      .dropDuplicatesWithinWatermark("event_id")
+      .writeStream.format("memory").queryName("q_stream_dedup_out")
+      .outputMode("append").start()
+    try {
+      mem.addData(b1: _*)
+      q.processAllAvailable()
+      mem.addData(b2: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    demo.table("q_stream_dedup_out")
       .groupBy($"kind").agg(count(lit(1)).as("n_unique"))
       .orderBy($"kind")
   }
@@ -419,7 +438,8 @@ object WindowQueries {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import graft.streaming.StatefulSession
     import graft.streaming.StatefulSession.SEvent
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val (gapMs, cap) = (30 * 60 * 1000L, 12)
     val base = 1700000000000L
     // per user: 20 events 5 min apart (splits 12-cap + 8), then a 2 h
@@ -436,20 +456,18 @@ object WindowQueries {
     val b3 = for (u <- users; k <- 25 until 30) yield ev(u, k)
     val sentinel = SEvent(999L, new java.sql.Timestamp(base + 10 * 3600000L), 0.0)
     val mem = MemoryStream[SEvent]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDS().withWatermark("ts", "10 minutes")
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout)(
-          StatefulSession.sessionize(gapMs, cap))
-        .writeStream.format("memory").queryName("q_stream_custom_state_out")
-        .outputMode("append").start()
-      try {
-        for (b <- Seq(b1, b2, b3)) { mem.addData(b: _*); q.processAllAvailable() }
-        mem.addData(sentinel); q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("q_stream_custom_state_out")
+    val q = mem.toDS().withWatermark("ts", "10 minutes")
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout)(
+        StatefulSession.sessionize(gapMs, cap))
+      .writeStream.format("memory").queryName("q_stream_custom_state_out")
+      .outputMode("append").start()
+    try {
+      for (b <- Seq(b1, b2, b3)) { mem.addData(b: _*); q.processAllAvailable() }
+      mem.addData(sentinel); q.processAllAvailable()
+    } finally q.stop()
+    demo.table("q_stream_custom_state_out")
       .filter($"user_id" =!= 999L)
       .select($"user_id",
         date_format($"session_start", "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -471,24 +489,23 @@ object WindowQueries {
   def streamQuantile(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val feed = streamQuantileFeed()
     val mem = MemoryStream[(java.sql.Timestamp, Double)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDF().toDF("ts", "value")
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window($"ts", "10 minutes"),
-          round($"value" * 100).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName("q_stream_quantile_out")
-        .outputMode("complete").start()
-      try {
-        val (b1, b2) = feed.splitAt(feed.length / 2)
-        mem.addData(b1: _*); q.processAllAvailable()
-        mem.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    val hist = spark.table("q_stream_quantile_out")
+    val q = mem.toDF().toDF("ts", "value")
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window($"ts", "10 minutes"),
+        round($"value" * 100).cast("long").as("bin"))
+      .agg(count(lit(1)).as("n"))
+      .writeStream.format("memory").queryName("q_stream_quantile_out")
+      .outputMode("complete").start()
+    try {
+      val (b1, b2) = feed.splitAt(feed.length / 2)
+      mem.addData(b1: _*); q.processAllAvailable()
+      mem.addData(b2: _*); q.processAllAvailable()
+    } finally q.stop()
+    val hist = demo.table("q_stream_quantile_out")
       .select(date_format($"window.start", fmtS).as("window_start"),
         $"bin", $"n")
     val byW = Window.partitionBy($"window_start")
@@ -535,26 +552,25 @@ object WindowQueries {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import graft.streaming.CdcState
     import graft.streaming.CdcState.Change
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val (b1, b2, b3) = streamUpsertFeed()
     val mem = MemoryStream[Change]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDS()
-        .groupByKey(_.key)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout())(CdcState.apply)
-        .writeStream.format("memory").queryName("q_stream_upsert_out")
-        .outputMode("update").start()
-      try {
-        for (b <- Seq(b1, b2, b3)) { mem.addData(b: _*); q.processAllAvailable() }
-      } finally q.stop()
-    }
+    val q = mem.toDS()
+      .groupByKey(_.key)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(CdcState.apply)
+      .writeStream.format("memory").queryName("q_stream_upsert_out")
+      .outputMode("update").start()
+    try {
+      for (b <- Seq(b1, b2, b3)) { mem.addData(b: _*); q.processAllAvailable() }
+    } finally q.stop()
     // the key's CURRENT row = its LAST EMISSION, picked by the
     // per-key emission counter CdcState maintains: ordering by
     // (ts, deleted) instead would prefer the tombstone when a delete
     // and an equal-ts upsert land in different batches, the opposite
     // of the fold's delete-then-upsert LWW resolution
     val w = Window.partitionBy($"key").orderBy(desc("seq"))
-    spark.table("q_stream_upsert_out")
+    demo.table("q_stream_upsert_out")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"key", round($"value", 4).as("value"),
@@ -612,7 +628,8 @@ object WindowQueries {
   def streamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val base = 1700000000000L
     def ts(ms: Long) = new java.sql.Timestamp(base + ms)
     // 120 ads, one impression each, 30 s apart
@@ -635,21 +652,19 @@ object WindowQueries {
       """ad_id = c_ad_id AND
         |click_ts >= imp_ts AND
         |click_ts <= imp_ts + interval 10 minutes""".stripMargin))
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = joined
-        .writeStream.format("memory").queryName("q_stream_join_out")
-        .outputMode("append").start()
-      try {
-        // impressions and first-wave clicks in batch 1; second-wave and
-        // late clicks in batch 2 — the join must match across batches
-        impStream.addData(imps: _*)
-        clkStream.addData(inWin: _*)
-        q.processAllAvailable()
-        clkStream.addData((second ++ late): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("q_stream_join_out")
+    val q = joined
+      .writeStream.format("memory").queryName("q_stream_join_out")
+      .outputMode("append").start()
+    try {
+      // impressions and first-wave clicks in batch 1; second-wave and
+      // late clicks in batch 2 — the join must match across batches
+      impStream.addData(imps: _*)
+      clkStream.addData(inWin: _*)
+      q.processAllAvailable()
+      clkStream.addData((second ++ late): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    demo.table("q_stream_join_out")
       .groupBy($"ad_id")
       .agg(count(lit(1)).as("n_attributed"),
         round(first($"cost"), 4).as("cost"))
@@ -670,7 +685,8 @@ object WindowQueries {
   def streamRecovery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val base = 1700000000000L
     def ev(i: Int) = (new java.sql.Timestamp(base + i * 47000L),
       if (i % 3 == 0) "click" else "view", (i % 11) + 0.25)
@@ -684,16 +700,14 @@ object WindowQueries {
         .writeStream.format("memory").queryName("q_stream_recovery_out")
         .option("checkpointLocation", ckpt)
         .outputMode("complete").start()
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q1 = start()
-      try { mem.addData(b1: _*); q1.processAllAvailable() } finally q1.stop()
-      // restart from the same checkpoint: batch 1 is NOT replayed
-      // (offsets committed), its aggregates ARE present (state
-      // recovered)
-      val q2 = start()
-      try { mem.addData(b2: _*); q2.processAllAvailable() } finally q2.stop()
-    }
-    spark.table("q_stream_recovery_out")
+    val q1 = start()
+    try { mem.addData(b1: _*); q1.processAllAvailable() } finally q1.stop()
+    // restart from the same checkpoint: batch 1 is NOT replayed
+    // (offsets committed), its aggregates ARE present (state
+    // recovered)
+    val q2 = start()
+    try { mem.addData(b2: _*); q2.processAllAvailable() } finally q2.stop()
+    demo.table("q_stream_recovery_out")
       .orderBy($"w_start", $"event_type")
   }
 
@@ -728,7 +742,8 @@ object WindowQueries {
   def streamPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val base = 1700000000000L
     val sources = Seq("web", "books", "code")
     def doc(i: Int) = pipelineDoc(i, base, sources)
@@ -737,26 +752,24 @@ object WindowQueries {
     val b1 = (0 until 150).flatMap(i => if (i % 10 == 0) Seq(doc(i), doc(i)) else Seq(doc(i)))
     val b2 = (120 until 250).map(doc)
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDF().toDF("doc_id", "ts", "source", "text")
-        .withWatermark("ts", "60 minutes")
-        .dropDuplicatesWithinWatermark("doc_id")
-        .withColumn("w", split(lower(trim($"text")), " "))
-        .withColumn("n_words", size($"w"))
-        .withColumn("dup_frac",
-          lit(1.0) - size(array_distinct($"w")).cast("double") / size($"w"))
-        .withColumn("kept", $"n_words" >= 5 && $"dup_frac" <= 0.3)
-        .select($"doc_id", $"source", $"kept")
-        .writeStream.format("memory").queryName("q_stream_pipeline_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(b1: _*)
-        q.processAllAvailable()
-        mem.addData(b2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("q_stream_pipeline_out")
+    val q = mem.toDF().toDF("doc_id", "ts", "source", "text")
+      .withWatermark("ts", "60 minutes")
+      .dropDuplicatesWithinWatermark("doc_id")
+      .withColumn("w", split(lower(trim($"text")), " "))
+      .withColumn("n_words", size($"w"))
+      .withColumn("dup_frac",
+        lit(1.0) - size(array_distinct($"w")).cast("double") / size($"w"))
+      .withColumn("kept", $"n_words" >= 5 && $"dup_frac" <= 0.3)
+      .select($"doc_id", $"source", $"kept")
+      .writeStream.format("memory").queryName("q_stream_pipeline_out")
+      .outputMode("append").start()
+    try {
+      mem.addData(b1: _*)
+      q.processAllAvailable()
+      mem.addData(b2: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    demo.table("q_stream_pipeline_out")
       .groupBy($"source", $"kept")
       .agg(count(lit(1)).as("n_docs"))
       .orderBy($"source", $"kept")
@@ -847,31 +860,30 @@ object WindowQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import graft.streaming.StreamMinHash
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val docs = Fixtures.documents(spark, sfDir)
       .select($"doc_id", $"source", $"text")
       .as[(Long, String, String)].collect().sortBy(_._1)
     val half = docs.length / 2
     val mem = MemoryStream[(Long, String, String)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDS()
-        .flatMap { case (id, src, text) => StreamMinHash.bandRows(id, src, text) }
-        .groupByKey(r => (r._1, r._2))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout())(StreamMinHash.matcher)
-        .writeStream.format("memory").queryName("q_stream_dedup_minhash_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(docs.take(half): _*); q.processAllAvailable()
-        mem.addData(docs.drop(half): _*); q.processAllAvailable()
-      } finally q.stop()
-    }
+    val q = mem.toDS()
+      .flatMap { case (id, src, text) => StreamMinHash.bandRows(id, src, text) }
+      .groupByKey(r => (r._1, r._2))
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.NoTimeout())(StreamMinHash.matcher)
+      .writeStream.format("memory").queryName("q_stream_dedup_minhash_out")
+      .outputMode("append").start()
+    try {
+      mem.addData(docs.take(half): _*); q.processAllAvailable()
+      mem.addData(docs.drop(half): _*); q.processAllAvailable()
+    } finally q.stop()
     // per-doc verdict = any band flagged it (bands agree on the
     // signature estimate; distinct collapses the multiplicity)
-    val flagged = spark.table("q_stream_dedup_minhash_out")
+    val flagged = demo.table("q_stream_dedup_minhash_out")
       .select($"docId".as("doc_id"), $"source").distinct()
       .groupBy($"source").agg(count(lit(1)).as("n_flagged"))
-    spark.createDataset(docs.toSeq).toDF("doc_id", "source", "text")
+    demo.createDataset(docs.toSeq).toDF("doc_id", "source", "text")
       .groupBy($"source").agg(count(lit(1)).as("n_docs"))
       .join(flagged, Seq("source"), "left")
       .select($"source", $"n_docs",
@@ -894,7 +906,8 @@ object WindowQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import graft.streaming.HeavyHitters
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val ev = Fixtures.events(spark, sfDir)
       .select($"ts", $"event_id", $"event_type", $"user_id")
       .as[(java.sql.Timestamp, Long, String, Long)]
@@ -902,19 +915,17 @@ object WindowQueries {
       .map(r => (r._3, r._4))
     val half = ev.length / 2
     val mem = MemoryStream[(String, Long)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDS()
-        .groupByKey(_._1)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout())(HeavyHitters.matcher)
-        .writeStream.format("memory").queryName("q_stream_heavy_out")
-        .outputMode("update").start()
-      try {
-        mem.addData(ev.take(half): _*); q.processAllAvailable()
-        mem.addData(ev.drop(half): _*); q.processAllAvailable()
-      } finally q.stop()
-    }
+    val q = mem.toDS()
+      .groupByKey(_._1)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(HeavyHitters.matcher)
+      .writeStream.format("memory").queryName("q_stream_heavy_out")
+      .outputMode("update").start()
+    try {
+      mem.addData(ev.take(half): _*); q.processAllAvailable()
+      mem.addData(ev.drop(half): _*); q.processAllAvailable()
+    } finally q.stop()
     val w = Window.partitionBy($"group").orderBy(desc("seq"))
-    spark.table("q_stream_heavy_out")
+    demo.table("q_stream_heavy_out")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"group".as("event_type"), $"n",
@@ -942,7 +953,8 @@ object WindowQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import graft.streaming.StreamAnomaly
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val ev = Fixtures.events(spark, sfDir)
       .select($"ts", $"event_id", $"event_type", $"value")
       .as[(java.sql.Timestamp, Long, String, Double)]
@@ -951,26 +963,24 @@ object WindowQueries {
         if (r._2 % 97 == 0) r._4 * 8.0 else r._4))
     val third = ev.length / 3
     val mem = MemoryStream[(String, Long, Long, Double)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDS()
-        .groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout())(StreamAnomaly.matcher)
-        .writeStream.format("memory").queryName("q_stream_anomaly_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(ev.take(third): _*); q.processAllAvailable()
-        mem.addData(ev.slice(third, 2 * third): _*); q.processAllAvailable()
-        mem.addData(ev.drop(2 * third): _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    val flags = spark.table("q_stream_anomaly_out")
+    val q = mem.toDS()
+      .groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.NoTimeout())(StreamAnomaly.matcher)
+      .writeStream.format("memory").queryName("q_stream_anomaly_out")
+      .outputMode("append").start()
+    try {
+      mem.addData(ev.take(third): _*); q.processAllAvailable()
+      mem.addData(ev.slice(third, 2 * third): _*); q.processAllAvailable()
+      mem.addData(ev.drop(2 * third): _*); q.processAllAvailable()
+    } finally q.stop()
+    val flags = demo.table("q_stream_anomaly_out")
       .groupBy($"key".as("event_type"))
       .agg(count(lit(1)).as("n_flagged"),
         sum(when($"eventId" % 97 === 0, 1L).otherwise(0L))
           .as("n_planted_caught"),
         round(max(abs($"z")), 4).as("max_abs_z"))
-    spark.createDataset(ev.toSeq).toDF("event_type", "ts_ms", "event_id", "value")
+    demo.createDataset(ev.toSeq).toDF("event_type", "ts_ms", "event_id", "value")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(when($"event_id" % 97 === 0, 1L).otherwise(0L)).as("n_planted"))
@@ -997,7 +1007,8 @@ object WindowQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import graft.streaming.Scd2State
-    implicit val sqlCtx = spark.sqlContext
+    val demo = demoSession(spark)
+    implicit val sqlCtx = demo.sqlContext
     val ev = Fixtures.events(spark, sfDir)
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
         $"value")
@@ -1005,20 +1016,18 @@ object WindowQueries {
       .collect().sortBy(r => (r._2, r._3))
     val third = ev.length / 3
     val mem = MemoryStream[(Long, Long, Long, Double)]
-    QueryScope.withConf(spark, "spark.sql.shuffle.partitions", "4") {
-      val q = mem.toDS()
-        .groupByKey(_._1)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout())(Scd2State.matcher)
-        .writeStream.format("memory").queryName("q_stream_scd2_out")
-        .outputMode("update").start()
-      try {
-        mem.addData(ev.take(third): _*); q.processAllAvailable()
-        mem.addData(ev.slice(third, 2 * third): _*); q.processAllAvailable()
-        mem.addData(ev.drop(2 * third): _*); q.processAllAvailable()
-      } finally q.stop()
-    }
+    val q = mem.toDS()
+      .groupByKey(_._1)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(Scd2State.matcher)
+      .writeStream.format("memory").queryName("q_stream_scd2_out")
+      .outputMode("update").start()
+    try {
+      mem.addData(ev.take(third): _*); q.processAllAvailable()
+      mem.addData(ev.slice(third, 2 * third): _*); q.processAllAvailable()
+      mem.addData(ev.drop(2 * third): _*); q.processAllAvailable()
+    } finally q.stop()
     val w = Window.partitionBy($"userId").orderBy(desc("seq"))
-    spark.table("q_stream_scd2_out")
+    demo.table("q_stream_scd2_out")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"userId".as("user_id"), $"nVersions".as("n_versions"),

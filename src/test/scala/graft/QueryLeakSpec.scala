@@ -11,7 +11,7 @@ class QueryLeakSpec extends SparkSpec {
     QueryScope.release()
     assert(QueryScope.held == 0)
     val before = checkpointed
-    // 10 hops, two checkpoints per hop (frontier and visited)
+    // 10 hops, one checkpoint per hop (visited)
     assert(queries.AnalyticsQueries.graphBfs(spark, sfDir).count() > 0)
     val grown = checkpointed -- before
     assert(grown.size <= 1, s"checkpoint block sets left pinned: $grown")

@@ -33,6 +33,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** Run `body` with each (key, value) set on the test session, then
+    * restore each key's previous value, or unset a key that had none. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Plan with AQE off so BatchScanExec is reachable in the tree (the
     * PlanShapeSpec discipline) — the ONE home of the AQE-toggle
     * helper every DSv2 plan-pin spec needs. */

@@ -128,13 +128,12 @@ class ConnectedComponentsSpec extends SparkSpec {
       .filter(e => e._1 != e._2)
     def labels(parts: Int, aqe: Boolean): (Map[Long, Long], Seq[(Long, Long)]) = {
       QueryScope.release() // rebuild the memoized shingles under these confs
-      val out = QueryScope.withConf(spark, "spark.sql.shuffle.partitions", parts.toString) {
-        QueryScope.withConf(spark, "spark.sql.adaptive.enabled", aqe.toString) {
-          (ConnectedComponents.run(edges.toDF("src", "dst"))
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toMap,
-            DedupQueries.dedupClusters(spark, sfDir)
-              .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
-        }
+      val out = withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString) {
+        (ConnectedComponents.run(edges.toDF("src", "dst"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap,
+          DedupQueries.dedupClusters(spark, sfDir)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
       }
       QueryScope.release()
       out

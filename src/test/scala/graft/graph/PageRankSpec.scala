@@ -83,8 +83,8 @@ class PageRankSpec extends SparkSpec {
     QueryScope.release()
     assert(QueryScope.held == 0)
     val before = checkpointed
-    // a 200-node ring plus chords: no dangling node, so 10 iterations
-    // checkpoint every second round (5 checkpoints)
+    // a 200-node ring plus chords: no dangling node; 10 iterations
+    // checkpoint every round (10 checkpoints)
     val rnd = new scala.util.Random(29)
     val edges = (0L until 200L).map(v => (v, (v + 1) % 200)) ++
       (1 to 300).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
@@ -131,11 +131,10 @@ class PageRankSpec extends SparkSpec {
     val edges = (1 to 250).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(70).toLong))
       .filter(e => e._1 != e._2)
     def ranks(parts: Int, aqe: Boolean): Map[Long, Double] = {
-      val out = QueryScope.withConf(spark, "spark.sql.shuffle.partitions", parts.toString) {
-        QueryScope.withConf(spark, "spark.sql.adaptive.enabled", aqe.toString) {
-          PageRank.run(edges.toDF("src", "dst"), iters = 10)
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-        }
+      val out = withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString) {
+        PageRank.run(edges.toDF("src", "dst"), iters = 10)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
       }
       QueryScope.release()
       out

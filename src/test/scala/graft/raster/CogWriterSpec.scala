@@ -242,8 +242,7 @@ class CogWriterSpec extends SparkSpec {
     val p = RasterProfile(1024, 1024, blockSize = 128, nodata = ND,
       resampling = "average", minOverviewSize = 128, dtype = "float64")
     val src = SyntheticRaster.generate(spark, p, seed = 8L)
-    def written(parts: String) = graft.QueryScope.withConf(spark,
-      "spark.sql.shuffle.partitions", parts) {
+    def written(parts: String) = withConf("spark.sql.shuffle.partitions" -> parts) {
       CogWriter.writeBytes(src, p, tmpDir(), partTarget = 0L)
     }
     val (one, oneRes) = written("1")

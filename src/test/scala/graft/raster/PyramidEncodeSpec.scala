@@ -1,6 +1,6 @@
 package graft.raster
 
-import graft.{QueryScope, SparkSpec}
+import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.sql.Dataset
 
@@ -152,7 +152,7 @@ class PyramidEncodeSpec extends SparkSpec {
     for (n <- Seq(1, 3, 7))
       assert(sha256(write(level0.repartition(n), prof)) == want, s"$n input partitions")
     for (p <- Seq(1, 4, 8)) {
-      val got = QueryScope.withConf(spark, "spark.sql.shuffle.partitions", p.toString) {
+      val got = withConf("spark.sql.shuffle.partitions" -> p.toString) {
         sha256(write(level0, prof))
       }
       assert(got == want, s"$p shuffle partitions")

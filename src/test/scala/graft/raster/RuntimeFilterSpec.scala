@@ -32,16 +32,6 @@ class RuntimeFilterSpec extends SparkSpec {
     dir
   }
 
-  def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   def cogScans(p: SparkPlan): Seq[BatchScanExec] =
     p.collect { case b: BatchScanExec if b.scan.description().startsWith("cog") => b }
 
