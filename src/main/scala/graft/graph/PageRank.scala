@@ -3,7 +3,7 @@ package graft.graph
 import graft.QueryScope
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
@@ -34,16 +34,15 @@ object PageRank {
   /** Ranks after `iters` power iterations over directed `edges(src,
     * dst)`. Returns (node, rank) for every node appearing as a src or
     * dst; ranks sum to 1. `edges` is read exactly once. The loop's
-    * partitioner has `parts` partitions, by default the active
-    * session's shuffle width. The returned frame reads the final
-    * round's checkpoint blocks, which stay pinned until
-    * [[QueryScope.release]]. */
+    * partitioner has `parts` partitions, by default the shuffle width
+    * of `edges`' session. The returned frame reads the final round's
+    * checkpoint blocks, which stay pinned until [[QueryScope.release]]. */
   def run(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      parts: Int = SparkSession.active.conf.get("spark.sql.shuffle.partitions").toInt)
-      : DataFrame = {
+      parts: Option[Int] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val part = new HashPartitioner(parts)
+    val part = new HashPartitioner(
+      parts.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt))
     // every node keyed once with its distinct out-neighbours, in the
     // partition its id hashes to; a node that is only ever a dst keys
     // an empty array (dangling). Each input partition groups its own

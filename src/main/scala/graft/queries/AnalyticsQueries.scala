@@ -354,7 +354,7 @@ object AnalyticsQueries {
     // parquet-metadata count, one cheap action.
     val approxEdges = Fixtures.lineitem(spark, sfDir).count() * 2
     val parts = math.max(8L, approxEdges / 8000000L).toInt
-    val ranks = PageRank.run(edges, iters = 8, parts = parts)
+    val ranks = PageRank.run(edges, iters = 8, parts = Some(parts))
     ranks
       .select(
         when($"node" % 2 === 0, lit("part")).otherwise(lit("supplier"))
@@ -650,7 +650,7 @@ object AnalyticsQueries {
       mem.addData(b2: _*)
       q.processAllAvailable()
     } finally q.stop()
-    demo.table("q_stream_score_out")
+    WindowQueries.sinkRows(spark, demo, "q_stream_score_out")
       .groupBy($"source", $"kept")
       .agg(count(lit(1)).as("n_docs"), round(avg($"p"), 3).as("mean_p"))
       .orderBy($"source", $"kept")

@@ -95,7 +95,7 @@ object RasterQueries {
       resampling = "bilinear")
     val k = Kernels.haloWidth("bilinear")
     val tiles = SyntheticRaster.generate(spark, prof, seed = 9L, withMask = false)
-    HaloExchange.padded(tiles, prof, k)
+    HaloExchange.padded(tiles, prof, k, level = 0)
       .map { t =>
         val W = t.w + 2 * k
         val H = t.h + 2 * k

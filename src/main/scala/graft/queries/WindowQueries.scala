@@ -33,12 +33,14 @@ object WindowQueries {
     * fixed-cost commits. The demos carry hundreds of rows by design —
     * the operator SEMANTICS are what's exercised; a production stream
     * sizes its width to its volume the same way. A demo binds its
-    * MemoryStream, its stream and its memory-sink read to the child, so
-    * neither the width nor the `q_stream_*_out` view reaches the
-    * caller's session. There is one child per caller session, because
-    * each session's streaming query manager adds a listener to the
-    * SparkContext's bus that is never removed: a child per call would
-    * leak one session per demo run. */
+    * MemoryStream and its stream to the child and hands its sink's rows
+    * back through [[sinkRows]], so neither the width nor the
+    * `q_stream_*_out` view reaches the caller's session. There is one
+    * child per caller session, because each session's streaming query
+    * manager adds a listener to the SparkContext's bus that is never
+    * removed: a child per call would leak one session per demo run.
+    * The map holds its callers weakly, but that listener still holds
+    * each child until the SparkContext stops. */
   private[graft] def demoSession(spark: SparkSession): SparkSession = {
     val child = demoSessions.computeIfAbsent(spark, _.newSession())
     val want = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) } +
@@ -50,8 +52,20 @@ object WindowQueries {
     child
   }
 
-  private val demoSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private val demoSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  /** The rows the demo session's memory sink `name` holds, as a frame
+    * of the caller's session: the demo's result is planned and run
+    * under the caller's conf at the time it runs. The sink's view is
+    * dropped from the demo session. */
+  private[graft] def sinkRows(spark: SparkSession, demo: SparkSession,
+      name: String): DataFrame = {
+    val sink = demo.table(name)
+    val rows = sink.collect()
+    demo.catalog.dropTempView(name)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
+  }
 
   /** Ranking: top-3 orders per customer by totalprice (unique tiebreak). */
   def winRank(spark: SparkSession, sfDir: String): DataFrame = {
@@ -377,7 +391,7 @@ object WindowQueries {
       mem.addData(rows: _*)
       q.processAllAvailable()
     } finally q.stop()
-    demo.table("q_stream_watermark_out")
+    sinkRows(spark, demo, "q_stream_watermark_out")
       .orderBy($"w_start", $"event_type")
   }
 
@@ -415,7 +429,7 @@ object WindowQueries {
       mem.addData(b2: _*)
       q.processAllAvailable()
     } finally q.stop()
-    demo.table("q_stream_dedup_out")
+    sinkRows(spark, demo, "q_stream_dedup_out")
       .groupBy($"kind").agg(count(lit(1)).as("n_unique"))
       .orderBy($"kind")
   }
@@ -467,7 +481,7 @@ object WindowQueries {
       for (b <- Seq(b1, b2, b3)) { mem.addData(b: _*); q.processAllAvailable() }
       mem.addData(sentinel); q.processAllAvailable()
     } finally q.stop()
-    demo.table("q_stream_custom_state_out")
+    sinkRows(spark, demo, "q_stream_custom_state_out")
       .filter($"user_id" =!= 999L)
       .select($"user_id",
         date_format($"session_start", "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -505,7 +519,7 @@ object WindowQueries {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    val hist = demo.table("q_stream_quantile_out")
+    val hist = sinkRows(spark, demo, "q_stream_quantile_out")
       .select(date_format($"window.start", fmtS).as("window_start"),
         $"bin", $"n")
     val byW = Window.partitionBy($"window_start")
@@ -570,7 +584,7 @@ object WindowQueries {
     // and an equal-ts upsert land in different batches, the opposite
     // of the fold's delete-then-upsert LWW resolution
     val w = Window.partitionBy($"key").orderBy(desc("seq"))
-    demo.table("q_stream_upsert_out")
+    sinkRows(spark, demo, "q_stream_upsert_out")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"key", round($"value", 4).as("value"),
@@ -664,7 +678,7 @@ object WindowQueries {
       clkStream.addData((second ++ late): _*)
       q.processAllAvailable()
     } finally q.stop()
-    demo.table("q_stream_join_out")
+    sinkRows(spark, demo, "q_stream_join_out")
       .groupBy($"ad_id")
       .agg(count(lit(1)).as("n_attributed"),
         round(first($"cost"), 4).as("cost"))
@@ -707,7 +721,7 @@ object WindowQueries {
     // recovered)
     val q2 = start()
     try { mem.addData(b2: _*); q2.processAllAvailable() } finally q2.stop()
-    demo.table("q_stream_recovery_out")
+    sinkRows(spark, demo, "q_stream_recovery_out")
       .orderBy($"w_start", $"event_type")
   }
 
@@ -769,7 +783,7 @@ object WindowQueries {
       mem.addData(b2: _*)
       q.processAllAvailable()
     } finally q.stop()
-    demo.table("q_stream_pipeline_out")
+    sinkRows(spark, demo, "q_stream_pipeline_out")
       .groupBy($"source", $"kept")
       .agg(count(lit(1)).as("n_docs"))
       .orderBy($"source", $"kept")
@@ -880,10 +894,10 @@ object WindowQueries {
     } finally q.stop()
     // per-doc verdict = any band flagged it (bands agree on the
     // signature estimate; distinct collapses the multiplicity)
-    val flagged = demo.table("q_stream_dedup_minhash_out")
+    val flagged = sinkRows(spark, demo, "q_stream_dedup_minhash_out")
       .select($"docId".as("doc_id"), $"source").distinct()
       .groupBy($"source").agg(count(lit(1)).as("n_flagged"))
-    demo.createDataset(docs.toSeq).toDF("doc_id", "source", "text")
+    spark.createDataset(docs.toSeq).toDF("doc_id", "source", "text")
       .groupBy($"source").agg(count(lit(1)).as("n_docs"))
       .join(flagged, Seq("source"), "left")
       .select($"source", $"n_docs",
@@ -925,7 +939,7 @@ object WindowQueries {
       mem.addData(ev.drop(half): _*); q.processAllAvailable()
     } finally q.stop()
     val w = Window.partitionBy($"group").orderBy(desc("seq"))
-    demo.table("q_stream_heavy_out")
+    sinkRows(spark, demo, "q_stream_heavy_out")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"group".as("event_type"), $"n",
@@ -974,13 +988,13 @@ object WindowQueries {
       mem.addData(ev.slice(third, 2 * third): _*); q.processAllAvailable()
       mem.addData(ev.drop(2 * third): _*); q.processAllAvailable()
     } finally q.stop()
-    val flags = demo.table("q_stream_anomaly_out")
+    val flags = sinkRows(spark, demo, "q_stream_anomaly_out")
       .groupBy($"key".as("event_type"))
       .agg(count(lit(1)).as("n_flagged"),
         sum(when($"eventId" % 97 === 0, 1L).otherwise(0L))
           .as("n_planted_caught"),
         round(max(abs($"z")), 4).as("max_abs_z"))
-    demo.createDataset(ev.toSeq).toDF("event_type", "ts_ms", "event_id", "value")
+    spark.createDataset(ev.toSeq).toDF("event_type", "ts_ms", "event_id", "value")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(when($"event_id" % 97 === 0, 1L).otherwise(0L)).as("n_planted"))
@@ -1027,7 +1041,7 @@ object WindowQueries {
       mem.addData(ev.drop(2 * third): _*); q.processAllAvailable()
     } finally q.stop()
     val w = Window.partitionBy($"userId").orderBy(desc("seq"))
-    demo.table("q_stream_scd2_out")
+    sinkRows(spark, demo, "q_stream_scd2_out")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"userId".as("user_id"), $"nVersions".as("n_versions"),

@@ -10,7 +10,7 @@ import org.apache.spark.sql.Dataset
   *
   * Spark-first shape: a `flatMap` emits each tile once whole (to its own
   * key) plus up to 8 edge strips (each ≤ k·blockSize px, addressed to
-  * the neighbor's key), and ONE `groupByKey` reassembles the padded
+  * the neighbor's key), and ONE grouping by tile reassembles the padded
   * tiles — a single shuffle whose payload is the strips only
   * (≈ 8k/blockSize of the raster volume, e.g. 1.6% at k=2, bs=256),
   * never a replication of whole tiles.
@@ -70,9 +70,11 @@ object HaloExchange {
     (px, mk)
   }
 
-  /** Padded tiles: (h+2k)×(w+2k) arrays; `mask` is authoritative for
-    * availability (0 = no data there: border-of-raster or invalid). */
-  def padded(tiles: Dataset[Tile], profile: RasterProfile, k: Int): Dataset[Tile] = {
+  /** Padded tiles of `level`: (h+2k)×(w+2k) arrays; `mask` is
+    * authoritative for availability (0 = no data there: border-of-raster
+    * or invalid). */
+  def padded(tiles: Dataset[Tile], profile: RasterProfile, k: Int,
+      level: Int): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val nodata = profile.nodata
@@ -108,8 +110,7 @@ object HaloExchange {
       out.result()
     }
 
-    pieces
-      .groupByKey(p => (p.level, p.ty, p.tx))
+    Pyramid.byTile(pieces, profile, level)
       .mapGroups { (key: (Int, Int, Int), ps: Iterator[Piece]) =>
         val (level, ty, tx) = key
         val (th, tw) = profile.tileDims(level, ty, tx)
@@ -153,22 +154,23 @@ object HaloExchange {
       }
   }
 
-  /** Halo path of the pyramid step: pad with k, run the wide kernel,
-    * regroup quadrants exactly like the halo-free path. */
-  def nextLevel(tiles: Dataset[Tile], profile: RasterProfile): Dataset[Tile] = {
+  /** Halo path of the pyramid step from tiles at `level`: pad with k,
+    * run the wide kernel, regroup quadrants exactly like the halo-free
+    * path. */
+  def nextLevel(tiles: Dataset[Tile], profile: RasterProfile, level: Int): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val k = Kernels.haloWidth(profile.resampling)
     require(k > 0, s"${profile.resampling} is halo-free; use Pyramid.nextLevel")
     val nodata = profile.nodata
     val kernel = profile.resampling
-    val quads = padded(tiles, profile, k).map { p =>
+    val quads = padded(tiles, profile, k, level).map { p =>
       // p: padded tile; p.h/p.w are the UNPADDED dims by construction
       val (px, mk) = HaloKernels.downsample2x(kernel, p, k, nodata)
       Quadrant(p.level + 1, p.ty / 2, p.tx / 2, p.ty % 2, p.tx % 2,
         (p.h + 1) / 2, (p.w + 1) / 2, px, mk)
     }
-    Pyramid.regroup(quads, profile)
+    Pyramid.regroup(quads, profile, level + 1)
   }
 }
 

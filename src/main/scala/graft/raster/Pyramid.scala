@@ -1,12 +1,12 @@
 package graft.raster
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.storage.StorageLevel
 
 /** Per-level resolution pyramid — the reference's core dataflow loop
   * (reference ccog/ccog.py:558-666) one level at a time: every tile is
   * downsampled 2× (narrow map), then the four shrunken quadrants that
-  * land in the same next-level tile meet in one `groupByKey` (a single
+  * land in the same next-level tile meet in one grouping (a single
   * shuffle per level — the analog of the reference's mosaic+rechunk,
   * ccog/ccog.py:652-657).
   *
@@ -80,24 +80,39 @@ object Pyramid {
 
   /** Downsample + regroup one level: tiles at `level` → tiles at
     * `level+1`. Pure function of the input Dataset — no persist here. */
-  def nextLevel(tiles: Dataset[Tile], profile: RasterProfile): Dataset[Tile] = {
+  def nextLevel(tiles: Dataset[Tile], profile: RasterProfile, level: Int): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     require(Kernels.haloWidth(profile.resampling) == 0,
       s"halo kernel '${profile.resampling}' must go through HaloExchange.nextLevel")
-    regroup(tiles.map(quadrant(_, profile)), profile)
+    regroup(tiles.map(quadrant(_, profile)), profile, level + 1)
   }
 
   /** Mosaic step shared by the halo-free and halo paths: group the ≤4
-    * quadrants of each next-level tile (one shuffle) and stitch. */
-  def regroup(quads: Dataset[Quadrant], profile: RasterProfile): Dataset[Tile] = {
+    * quadrants of each tile at `level` (one shuffle) and stitch. */
+  def regroup(quads: Dataset[Quadrant], profile: RasterProfile,
+      level: Int): Dataset[Tile] = {
     val spark = quads.sparkSession
     import spark.implicits._
-    quads
-      .groupByKey(q => (q.level, q.ty, q.tx))
+    byTile(quads, profile, level)
       .mapGroups { (key: (Int, Int, Int), qs: Iterator[Quadrant]) =>
         stitch(key._1, key._2, key._3, qs, profile)
       }
+  }
+
+  /** Rows addressed to the tiles of `level`, grouped by tile
+    * (level, ty, tx) in one shuffle sized to the level: level L holds
+    * 1/4^L of the raster's pixels, so it gets 1/4^L of the session's
+    * shuffle width, and never more partitions than it has tiles. */
+  private[raster] def byTile[T: Encoder](rows: Dataset[T], profile: RasterProfile,
+      level: Int): KeyValueGroupedDataset[(Int, Int, Int), T] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val (gw, gh) = profile.gridDims(level)
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = math.min(gw.toLong * gh, math.ceil(width / math.pow(4, level)).toLong).toInt
+    rows.repartition(parts, $"level", $"ty", $"tx")
+      .groupBy($"level", $"ty", $"tx").as[(Int, Int, Int), T]
   }
 
   /** Build levels 0..profile.maxLevel; every returned Dataset is
@@ -109,8 +124,8 @@ object Pyramid {
     var l = 0
     while (l < profile.maxLevel) {
       cur =
-        (if (Kernels.haloWidth(profile.resampling) == 0) nextLevel(cur, profile)
-         else HaloExchange.nextLevel(cur, profile))
+        (if (Kernels.haloWidth(profile.resampling) == 0) nextLevel(cur, profile, l)
+         else HaloExchange.nextLevel(cur, profile, l))
           .persist(StorageLevel.MEMORY_AND_DISK)
       levels += cur
       l += 1

@@ -44,8 +44,10 @@ class QueryConfSpec extends SparkSpec {
     val before = spark.conf.getAll
     // the rows graft.Verify dumps for q_stream_dedup: 300 distinct
     // event ids, every third one a doc
-    assert(WindowQueries.streamDedup(spark, sfDir).collect().toSeq ==
-      Seq(Row("doc", 100L), Row("img", 200L)))
+    val result = WindowQueries.streamDedup(spark, sfDir)
+    // the result is planned and run in the caller's session, under its conf
+    assert(result.sparkSession eq spark)
+    assert(result.collect().toSeq == Seq(Row("doc", 100L), Row("img", 200L)))
     assert(spark.conf.getAll == before)
     val views = spark.catalog.listTables().collect().map(_.name)
       .filter(n => n.startsWith("q_stream_") && n.endsWith("_out"))

@@ -28,7 +28,7 @@ class HaloSpec extends SparkSpec {
     import s.implicits._
     val p = RasterProfile(48, 48, blockSize = 16, nodata = ND, resampling = "bilinear")
     val k = 2
-    val padded = HaloExchange.padded(s.createDataset(coded(p)), p, k)
+    val padded = HaloExchange.padded(s.createDataset(coded(p)), p, k, level = 0)
       .collect().map(t => (t.ty, t.tx) -> t).toMap
     assert(padded.size == 9)
 
@@ -131,7 +131,7 @@ class HaloSpec extends SparkSpec {
         val px = Array.tabulate(h * w)(i => g((ty * 16 + i / w) * wG + tx * 16 + i % w))
         Tile(0, ty, tx, h, w, px, null)
       }
-      val got = HaloExchange.nextLevel(s.createDataset(tiles), p)
+      val got = HaloExchange.nextLevel(s.createDataset(tiles), p, level = 0)
         .collect().map(t => (t.ty, t.tx) -> t).toMap
       val (tapS, wt) = kernelTables(kernel)
       val (refPx, refV) = sepRef(g, valid, hG, wG, tapS, wt)
@@ -177,7 +177,7 @@ class HaloSpec extends SparkSpec {
       val px = Array.tabulate(h * w)(i => g((ty * 16 + i / w) * wG + tx * 16 + i % w))
       Tile(0, ty, tx, h, w, px, null)
     }
-    val got = HaloExchange.nextLevel(s.createDataset(tiles), p)
+    val got = HaloExchange.nextLevel(s.createDataset(tiles), p, level = 0)
       .collect().map(t => (t.ty, t.tx) -> t).toMap
     val (tapS, wt) = kernelTables("lanczos")
     val (refPx, _) = sepRef(g, g.map(_ => true), hG, wG, tapS, wt)
@@ -207,7 +207,7 @@ class HaloSpec extends SparkSpec {
       val px = Array.tabulate(h * w)(i => g((ty * 16 + i / w) * wG + tx * 16 + i % w))
       Tile(0, ty, tx, h, w, px, null)
     }
-    val got = HaloExchange.nextLevel(s.createDataset(tiles), p)
+    val got = HaloExchange.nextLevel(s.createDataset(tiles), p, level = 0)
       .collect().map(t => (t.ty, t.tx) -> t).toMap
 
     val (refPx, refV) = bilinearRef(g, valid, hG, wG)

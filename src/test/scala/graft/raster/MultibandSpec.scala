@@ -107,7 +107,7 @@ class MultibandSpec extends SparkSpec {
         px(b * h * w + y * w + x) = g(b)((ty * 16 + y) * wG + tx * 16 + x)
       Tile(0, ty, tx, h, w, px, null)
     }
-    val got = HaloExchange.nextLevel(s.createDataset(tiles), p)
+    val got = HaloExchange.nextLevel(s.createDataset(tiles), p, level = 0)
       .collect().map(t => (t.ty, t.tx) -> t).toMap
     // per-band separable reference
     val wt = Array(0.25, 0.75, 0.75, 0.25)

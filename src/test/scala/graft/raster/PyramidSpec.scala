@@ -41,6 +41,30 @@ class PyramidSpec extends SparkSpec {
     }
   }
 
+  test("each level is grouped in one shuffle sized to its share of the width and its tiles") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // 1024x768 in 128-px tiles: 48, 12, 4 and 1 tiles at levels 0-3
+    val p = RasterProfile(1024, 768, blockSize = 128, minOverviewSize = 128)
+    val lanczos = p.copy(resampling = "lanczos")
+    def widths(ds: org.apache.spark.sql.Dataset[Tile]) =
+      ds.queryExecution.executedPlan.collect { case e: ShuffleExchangeLike => e.numPartitions }
+    withConf("spark.sql.shuffle.partitions" -> "32", "spark.sql.adaptive.enabled" -> "false") {
+      val level0 = SyntheticRaster.generate(spark, p, seed = 1L)
+      // level 1 holds a quarter of the pixels: a quarter of the width
+      assert(widths(Pyramid.nextLevel(level0, p, 0)) == Seq(8))
+      // the halo pad groups level 0 at the whole width, the regroup level 1
+      assert(widths(HaloExchange.nextLevel(level0, lanczos, 0)).sorted == Seq(8, 32))
+      val levels = Pyramid.build(level0, p)
+      try assert(levels.tail.map(_.rdd.getNumPartitions) == Seq(8, 2, 1))
+      finally levels.foreach(_.unpersist())
+    }
+    withConf("spark.sql.shuffle.partitions" -> "64", "spark.sql.adaptive.enabled" -> "false") {
+      // a quarter of 64 is 16, but level 1 has 12 tiles
+      val level0 = SyntheticRaster.generate(spark, p, seed = 1L)
+      assert(widths(Pyramid.nextLevel(level0, p, 0)) == Seq(12))
+    }
+  }
+
   def fullPyramid(profile: RasterProfile, value: Double): Seq[org.apache.spark.sql.Dataset[Tile]] = {
     val s = spark
     import s.implicits._
