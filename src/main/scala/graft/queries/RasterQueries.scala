@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.QueryScope
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.raster._
 
 /** NATIVE raster operator surface (SURVEY §2.2 rows 34-36 + the sink
@@ -38,8 +38,8 @@ object RasterQueries {
     pyramidRollup(spark, sfDir, "average")
 
   /** The same pyramid under the WIDEST kernel (lanczos, halo k=6):
-    * every level is a stencil join — halo pad (one shuffle) + 6-tap
-    * separable filter + quadrant regroup (one shuffle) — so the
+    * every level is one halo round — tiles pasted with the strips of
+    * their neighbours (one exchange) + 6-tap separable filter — so the
     * reference's SLOW resampling path (ccog/ccog.py:43-53 calls these
     * out; dask pays `overlap` exchanges exactly here) sits on the
     * measured bench surface, not only inside HaloSpec. NATIVE
@@ -49,39 +49,39 @@ object RasterQueries {
   def rasterPyramidLanczos(spark: SparkSession, sfDir: String): DataFrame =
     pyramidRollup(spark, sfDir, "lanczos")
 
+  /** Per level of the pyramid: tiles, valid pixels and their mean. Each
+    * tile's double sum is quantized the way a decimal(38,10) cast does
+    * (its Double.toString value, HALF_UP) and the per-level sums are
+    * exact, so the mean does not depend on the partitioning; it is
+    * rounded like SQL's round(x, 4). The partials of the few hundred
+    * tiles are summed on the driver. */
   private[graft] def pyramidRollup(spark: SparkSession, sfDir: String,
       kernel: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     val e = edge(sfDir)
     val prof = RasterProfile(e, e * 3 / 4, blockSize = 128, nodata = ND,
       resampling = kernel, minOverviewSize = 128)
-    val levels = Pyramid.build(SyntheticRaster.generate(spark, prof, seed = 5L), prof)
-    val perLevel = levels.map { ds =>
-      ds.map { t =>
-        var valid = 0L
-        var sum = 0.0
-        var i = 0
-        while (i < t.h * t.w) {
-          if (t.valid(i, ND)) { valid += 1; sum += t.pixels(i) }
-          i += 1
-        }
-        (t.level, 1L, valid, sum)
-      }.toDF("level", "n_tiles", "valid_px", "sum_v")
-    }.reduce(_ union _)
-    val out = perLevel.groupBy($"level")
-      .agg(sum($"n_tiles").as("n_tiles"), sum($"valid_px").as("valid_px"),
-        // decimal accumulation: cross-tile double sums vary at the last
-        // ulp with partitioning; exact decimals keep the output stable
-        round(sum($"sum_v".cast("decimal(38,10)")).cast("double") /
-          sum($"valid_px"), 4).as("mean_valid"))
-      .orderBy($"level")
-    // the result is cached and forced before the levels it reads are
-    // unpersisted; it stays pinned until QueryScope.release()
-    val materialized = QueryScope.cache(out)
-    materialized.count()
-    levels.foreach(_.unpersist())
-    materialized
+    val built = PyramidEncode.build(SyntheticRaster.generate(spark, prof, seed = 5L), prof) { t =>
+      var valid = 0L
+      var sum = 0.0
+      var i = 0
+      while (i < t.h * t.w) {
+        if (t.valid(i, ND)) { valid += 1; sum += t.pixels(i) }
+        i += 1
+      }
+      Iterator((t.level, valid, java.math.BigDecimal.valueOf(sum)
+        .setScale(10, java.math.RoundingMode.HALF_UP)))
+    }
+    val tiles = try built.rows.collect() finally built.free()
+    val rows = tiles.groupBy(_._1).toSeq.sortBy(_._1).map { case (level, ts) =>
+      val valid = ts.map(_._2).sum
+      val sum = ts.map(_._3).reduce(_ add _)
+      Row(level, ts.length.toLong, valid, java.math.BigDecimal.valueOf(sum.doubleValue / valid)
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("level", IntegerType, nullable = false),
+      StructField("n_tiles", LongType), StructField("valid_px", LongType),
+      StructField("mean_valid", DoubleType))))
   }
 
   /** Halo exchange on a 6×4 grid, k=2 (bilinear width): per tile, how
@@ -117,27 +117,28 @@ object RasterQueries {
       .orderBy($"ty", $"tx")
   }
 
-  /** Encode + distributed prefix-sum placement WITHOUT the sink: the
+  /** Encode + prefix-sum placement WITHOUT the sink: the
     * (level, ty, tx, offset, nbytes) plan rows, file-ordered — directly
-    * the reference's parts_info table (ccog/ccog.py:717-773). */
+    * the reference's parts_info table (ccog/ccog.py:717-773). The sizes
+    * are collected and laid out on the driver, as the writer does. */
   def rasterAssemble(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = edge(sfDir)
     val prof = RasterProfile(e, e, blockSize = 128, nodata = ND,
       resampling = "average", minOverviewSize = 128)
-    val levels = Pyramid.build(SyntheticRaster.generate(spark, prof, seed = 3L), prof)
-    val encoded = levels.map(_.map(t => TileCodec.encode(t, prof))).reduce(_ union _)
-    val placement = Offsets.place(encoded, BigTiff.headerLength(prof))
-    val out = placement.placed
-      .map(p => (p.level, p.ty, p.tx, p.offset, p.nbytes))
+    val built = PyramidEncode.build(SyntheticRaster.generate(spark, prof, seed = 3L), prof) { t =>
+      val p = TileCodec.encode(t, prof)
+      Iterator(Offsets.TileSize(p.level, p.ty, p.tx, p.page, p.nbytes))
+    }
+    val sizes = try built.rows.collect() finally built.free()
+    val layout = Offsets.layout(sizes, BigTiff.headerLength(prof), prof.gridDims)
+    (for {
+      level <- prof.maxLevel to 0 by -1
+      (gw, gh) = prof.gridDims(level)
+      i <- 0 until gw * gh
+    } yield (level, i / gw, i % gw, layout.offsets((level, TileCodec.PageData))(i),
+      layout.counts((level, TileCodec.PageData))(i).toInt))
       .toDF("level", "ty", "tx", "offset", "nbytes")
-      .orderBy($"level".desc, $"ty", $"tx")
-    // pinned until QueryScope.release(), like pyramidRollup's result
-    val materialized = QueryScope.cache(out)
-    materialized.count()
-    placement.cached.unpersist()
-    levels.foreach(_.unpersist())
-    materialized
   }
 
   /** Full write_ccog analog: synthetic raster → assembled COG bytes via

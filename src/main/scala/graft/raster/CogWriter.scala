@@ -8,7 +8,8 @@ import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWrit
   *
   *   pyramid and per-tile encode in one pass ([[PyramidEncode]]):
   *     each task encodes the tiles it builds, every page ONCE, with
-  *     fused stats partials; only 2×-shrunk quadrants cross the wire
+  *     fused stats partials; only 2×-shrunk quadrants (and a halo
+  *     kernel's level 0 and strips) cross the wire
   *   → ONE collect: every tile's size plus exact per-partition band
   *     stats partials (grid×~20 B + bands×~100 B per partition)
   *   → driver layout (Offsets.layout, R25: the prefix sum IS the
@@ -17,10 +18,11 @@ import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWrit
   *     offsets) → ordered multipart sink (OrderedMultipartWriter,
   *     R28/R36), an RDD job outside the SQL planner.
   *
-  * A halo-free write is two jobs: the collect (one stage per
-  * quadrant exchange, a few for the whole pyramid), then the sink's
-  * one shuffle, whose tasks pack and upload the parts. Encoded bytes
-  * cross the wire once, into their parts.
+  * A write is two jobs, whatever the kernel: the collect (one stage
+  * per pyramid round — a few for a halo-free kernel, one per level for
+  * a halo kernel), then the sink's one shuffle, whose tasks pack and
+  * upload the parts. Encoded bytes cross the wire once, into their
+  * parts.
   */
 object CogWriter {
 
@@ -64,7 +66,7 @@ object CogWriter {
       // PER-BAND stats partials of its level-0 data pages — no second
       // pass over pixels (the reference pays a full extra pass,
       // ccog/ccog.py:38,511-541)
-      val perPartition = encoded.pages
+      val perPartition = encoded.rows
         .mapPartitions { it =>
           val sizes = Array.newBuilder[Offsets.TileSize]
           var stats = Seq.empty[BandPartial]
@@ -116,7 +118,7 @@ object CogWriter {
       // placed by a narrow map over the persisted pages; the sink packs
       // it in one RDD job
       val blobs = spark.sparkContext.parallelize(headerBlobs, headerBlobs.size)
-        .union(Offsets.blobs(encoded.pages, layout))
+        .union(Offsets.blobs(encoded.rows, layout))
       val totalLen = layout.fileLen
       val receipts = OrderedMultipartWriter.writeBlobs(blobs, totalLen, maxBlob, sink,
         partTarget, OrderedMultipartWriter.shufflePartitions(spark), resume)

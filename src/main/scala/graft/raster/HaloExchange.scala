@@ -8,12 +8,13 @@ import org.apache.spark.sql.Dataset
   * pixels beyond the 2×2 block, so each tile needs a k-px border from
   * its 8 neighbors before downsampling.
   *
-  * Spark-first shape: a `flatMap` emits each tile once whole (to its own
-  * key) plus up to 8 edge strips (each ≤ k·blockSize px, addressed to
-  * the neighbor's key), and ONE grouping by tile reassembles the padded
-  * tiles — a single shuffle whose payload is the strips only
-  * (≈ 8k/blockSize of the raster volume, e.g. 1.6% at k=2, bs=256),
-  * never a replication of whole tiles.
+  * Spark-first shape: [[spread]] sends each patch of a tile to its own
+  * frame plus, cropped, to the halo ring of each of the 8 neighbours it
+  * borders, and ONE grouping by tile pastes the padded tiles — a single
+  * shuffle whose extra payload is the strips only (≈ 8k/blockSize of
+  * the raster volume, e.g. 1.6% at k=2, bs=256), never a replication of
+  * whole tiles. [[PyramidEncode]] spreads its quadrants the same way, so
+  * each of its halo rounds stays one exchange.
   *
   * Raster-border sides have no neighbor: those padded cells stay
   * mask=0 and the kernel renormalizes over the weights that exist —
@@ -27,47 +28,77 @@ import org.apache.spark.sql.Dataset
   * the last row/column, so any tap beyond them is past the raster
   * border, which mask-0 renormalization already handles: no merge
   * step needed (proven for k=6 lanczos over 1-px trailing tiles in
-  * HaloSpec).
+  * HaloSpec). Neither does a quadrant: blockSize is a multiple of 16,
+  * so an interior quadrant is at least 8 px, wider than any halo.
   */
 object HaloExchange {
 
-  /** One piece of a padded tile: `slot` = (dy+1)*3+(dx+1) names which
-    * neighbor direction the piece fills (4 = the tile itself). */
-  case class Piece(level: Int, ty: Int, tx: Int, slot: Int,
-      h: Int, w: Int, pixels: Array[Double], mask: Array[Byte])
-
-  /** Copy the rectangle [y0,y0+ph)×[x0,x0+pw) out of tile t —
-    * band-major planes + the shared mask plane. */
-  private def crop(t: Tile, y0: Int, x0: Int, ph: Int, pw: Int): (Array[Double], Array[Byte]) = {
-    val bands = t.bands
-    val plane = t.h * t.w
-    val px = new Array[Double](bands * ph * pw)
-    val mk = if (t.mask == null) null else new Array[Byte](ph * pw)
-    var b = 0
-    while (b < bands) {
-      var y = 0
-      while (y < ph) {
-        var x = 0
-        while (x < pw) {
-          px(b * ph * pw + y * pw + x) = t.pixels(b * plane + (y0 + y) * t.w + (x0 + x))
-          x += 1
+  /** Patch `p`, addressed to its tile's unpadded frame, re-addressed to
+    * that tile's frame padded by `k`, plus its crop into the halo ring of
+    * each neighbour it borders. k < blockSize, so no crop reaches past
+    * the 8 neighbours. Real-valued planes only: the halo kernels refuse
+    * complex dtypes. */
+  def spread(p: Patch, k: Int, profile: RasterProfile): Iterator[Patch] =
+    if (k == 0) Iterator(p)
+    else {
+      val bs = profile.blockSize
+      val (gw, gh) = profile.gridDims(p.level)
+      for {
+        dy <- Iterator(-1, 0, 1)
+        dx <- Iterator(-1, 0, 1)
+        (ny, nx) = (p.ty + dy, p.tx + dx)
+        if ny >= 0 && ny < gh && nx >= 0 && nx < gw
+        // the neighbour's padded frame, in this tile's coordinates
+        (nh, nw) = profile.tileDims(p.level, ny, nx)
+        (fy, fx) = (dy * bs - k, dx * bs - k)
+        y0 = math.max(p.oy, fy)
+        x0 = math.max(p.ox, fx)
+        y1 = math.min(p.oy + p.h, fy + nh + 2 * k)
+        x1 = math.min(p.ox + p.w, fx + nw + 2 * k)
+        if y0 < y1 && x0 < x1
+      } yield
+        if (dy == 0 && dx == 0) p.copy(oy = p.oy + k, ox = p.ox + k)
+        else {
+          val (px, mk) = crop(p.pixels, p.mask, p.h, p.w, y0 - p.oy, x0 - p.ox, y1 - y0, x1 - x0)
+          Patch(p.level, ny, nx, y0 - fy, x0 - fx, y1 - y0, x1 - x0, px, mk)
         }
+    }
+
+  /** Tile `t` as the one patch that fills its unpadded frame. */
+  def whole(t: Tile): Patch = Patch(t.level, t.ty, t.tx, 0, 0, t.h, t.w, t.pixels, t.mask)
+
+  /** The unpadded tile inside `t`, a tile padded by `k`. */
+  def core(t: Tile, k: Int): Tile =
+    if (k == 0) t
+    else {
+      val (px, mk) = crop(t.pixels, t.mask, t.h + 2 * k, t.w + 2 * k, k, k, t.h, t.w)
+      t.copy(pixels = px, mask = mk)
+    }
+
+  /** Copy the rectangle [y0,y0+ch)×[x0,x0+cw) out of the h×w planes
+    * `px` (band-major) and the shared mask plane `mk`. */
+  private def crop(px: Array[Double], mk: Array[Byte], h: Int, w: Int,
+      y0: Int, x0: Int, ch: Int, cw: Int): (Array[Double], Array[Byte]) = {
+    val planes = px.length / (h * w)
+    val out = new Array[Double](planes * ch * cw)
+    var b = 0
+    while (b < planes) {
+      var y = 0
+      while (y < ch) {
+        System.arraycopy(px, b * h * w + (y0 + y) * w + x0, out, (b * ch + y) * cw, cw)
         y += 1
       }
       b += 1
     }
+    val omk = if (mk == null) null else new Array[Byte](ch * cw)
     if (mk != null) {
       var y = 0
-      while (y < ph) {
-        var x = 0
-        while (x < pw) {
-          mk(y * pw + x) = t.mask((y0 + y) * t.w + (x0 + x))
-          x += 1
-        }
+      while (y < ch) {
+        System.arraycopy(mk, (y0 + y) * w + x0, omk, y * cw, cw)
         y += 1
       }
     }
-    (px, mk)
+    (out, omk)
   }
 
   /** Padded tiles of `level`: (h+2k)×(w+2k) arrays; `mask` is
@@ -77,80 +108,9 @@ object HaloExchange {
       level: Int): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val nodata = profile.nodata
-
-    val bands = profile.bands
-    val pieces = tiles.flatMap { t =>
-      val (gw, gh) = profile.gridDims(t.level)
-      val out = Seq.newBuilder[Piece]
-      out += Piece(t.level, t.ty, t.tx, 4, t.h, t.w, t.pixels,
-        if (t.mask == null) Array.fill[Byte](t.h * t.w)(1) else t.mask)
-      var dy = -1
-      while (dy <= 1) {
-        var dx = -1
-        while (dx <= 1) {
-          if ((dy != 0 || dx != 0)
-              && t.ty + dy >= 0 && t.ty + dy < gh
-              && t.tx + dx >= 0 && t.tx + dx < gw) {
-            // strip of THIS tile adjacent to that neighbor; in the
-            // neighbor's padded frame it fills the OPPOSITE slot
-            val ph = if (dy == 0) t.h else math.min(k, t.h)
-            val pw = if (dx == 0) t.w else math.min(k, t.w)
-            val y0 = if (dy == 1) t.h - ph else 0
-            val x0 = if (dx == 1) t.w - pw else 0
-            val (px, mk) = crop(t, y0, x0, ph, pw)
-            val slot = (-dy + 1) * 3 + (-dx + 1)
-            out += Piece(t.level, t.ty + dy, t.tx + dx, slot, ph, pw, px,
-              if (mk == null) Array.fill[Byte](ph * pw)(1) else mk)
-          }
-          dx += 1
-        }
-        dy += 1
-      }
-      out.result()
-    }
-
-    Pyramid.byTile(pieces, profile, level)
-      .mapGroups { (key: (Int, Int, Int), ps: Iterator[Piece]) =>
-        val (level, ty, tx) = key
-        val (th, tw) = profile.tileDims(level, ty, tx)
-        val H = th + 2 * k
-        val W = tw + 2 * k
-        val pixels = new Array[Double](bands * H * W)
-        java.util.Arrays.fill(pixels, nodata)
-        val mask = new Array[Byte](H * W) // 0 = unavailable
-        ps.foreach { p =>
-          val dy = p.slot / 3 - 1 // sender's position relative to this tile
-          val dx = p.slot % 3 - 1
-          // destination origin in the padded frame
-          val oy = if (dy == -1) k - p.h else if (dy == 0) k else k + th
-          val ox = if (dx == -1) k - p.w else if (dx == 0) k else k + tw
-          var b = 0
-          while (b < bands) {
-            val srcBase = b * p.h * p.w
-            val dstBase = b * H * W
-            var y = 0
-            while (y < p.h) {
-              var x = 0
-              while (x < p.w) {
-                pixels(dstBase + (oy + y) * W + (ox + x)) = p.pixels(srcBase + y * p.w + x)
-                x += 1
-              }
-              y += 1
-            }
-            b += 1
-          }
-          var y = 0
-          while (y < p.h) {
-            var x = 0
-            while (x < p.w) {
-              mask((oy + y) * W + (ox + x)) = p.mask(y * p.w + x)
-              x += 1
-            }
-            y += 1
-          }
-        }
-        Tile(level, ty, tx, th, tw, pixels, mask)
+    Pyramid.byTile(tiles.flatMap(t => spread(whole(t), k, profile)), profile, level)
+      .mapGroups { (key: (Int, Int, Int), ps: Iterator[Patch]) =>
+        Pyramid.paste(key._1, key._2, key._3, k, ps, profile)
       }
   }
 
@@ -162,15 +122,8 @@ object HaloExchange {
     import spark.implicits._
     val k = Kernels.haloWidth(profile.resampling)
     require(k > 0, s"${profile.resampling} is halo-free; use Pyramid.nextLevel")
-    val nodata = profile.nodata
-    val kernel = profile.resampling
-    val quads = padded(tiles, profile, k, level).map { p =>
-      // p: padded tile; p.h/p.w are the UNPADDED dims by construction
-      val (px, mk) = HaloKernels.downsample2x(kernel, p, k, nodata)
-      Quadrant(p.level + 1, p.ty / 2, p.tx / 2, p.ty % 2, p.tx % 2,
-        (p.h + 1) / 2, (p.w + 1) / 2, px, mk)
-    }
-    Pyramid.regroup(quads, profile, level + 1)
+    Pyramid.regroup(padded(tiles, profile, k, level).map(Pyramid.quadrant(_, profile)),
+      profile, level + 1)
   }
 }
 

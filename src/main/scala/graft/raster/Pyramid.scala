@@ -16,11 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * `to_delayed(optimize_graph=False)` (ccog/ccog.py:618-621, SURVEY
   * §4.1); Spark expresses it as persist/unpersist.
   *
-  * [[build]] is the reference form of the pyramid: the raster queries
-  * and the specs read its levels, and [[CogWriter]] takes it for halo
-  * kernels ([[HaloExchange]]). Halo-free COG writes go through
-  * [[PyramidEncode]], which builds the same tiles from the same
-  * [[quadrant]] and [[stitch]] without caching any raw level.
+  * [[build]] is the reference form of the pyramid, which the specs and
+  * graftbench check [[PyramidEncode]] against: the COG writer and the
+  * raster queries build their tiles there, from the same [[quadrant]]
+  * and [[paste]], without caching any raw level.
   *
   * Scale shape: the shuffle payload at level L+1 is 1/4 of level L's
   * pixel volume, so total shuffle over the whole pyramid is bounded by
@@ -28,51 +27,55 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pyramid {
 
-  /** Tile `t` shrunk 2× by the profile's halo-free kernel, addressed to
-    * its quadrant of the next-level tile. */
-  def quadrant(t: Tile, profile: RasterProfile): Quadrant = {
+  /** Tile `t` shrunk 2× by the profile's kernel, addressed to its
+    * quadrant of the next-level tile. For a halo kernel `t` is padded
+    * by the kernel's halo width ([[HaloExchange.padded]]). */
+  def quadrant(t: Tile, profile: RasterProfile): Patch = {
+    val k = Kernels.haloWidth(profile.resampling)
     val (px, mk) =
-      if (TileCodec.isComplex(profile.dtype))
+      if (k > 0) HaloKernels.downsample2x(profile.resampling, t, k, profile.nodata)
+      else if (TileCodec.isComplex(profile.dtype))
         Kernels.downsampleComplex2x(profile.resampling, t, profile.nodata)
       else Kernels.downsample2x(profile.resampling, t, profile.nodata)
-    Quadrant(t.level + 1, t.ty / 2, t.tx / 2, t.ty % 2, t.tx % 2,
+    val half = profile.blockSize / 2
+    Patch(t.level + 1, t.ty / 2, t.tx / 2, t.ty % 2 * half, t.tx % 2 * half,
       (t.h + 1) / 2, (t.w + 1) / 2, px, mk)
   }
 
-  /** Mosaic the ≤4 quadrants of tile (level, ty, tx) into that tile:
-    * the one stitch loop of every pyramid path. Cells no quadrant
-    * covers stay nodata and masked out. */
-  def stitch(level: Int, ty: Int, tx: Int, qs: Iterator[Quadrant],
+  /** Tile (level, ty, tx) padded by `k`, pasted from the patches
+    * addressed to it: the one mosaic loop of every pyramid path (at
+    * k = 0, the tile stitched from its quadrants). Cells no patch covers
+    * stay nodata and masked out; a patch without a mask is all valid.
+    * The tile's h and w are the unpadded dims. */
+  def paste(level: Int, ty: Int, tx: Int, k: Int, ps: Iterator[Patch],
       profile: RasterProfile): Tile = {
-    val half = profile.blockSize / 2
     val bands = profile.bands
-    // complex planes carry (re, im) pairs — stitch moves sample UNITS
+    // complex planes carry (re, im) pairs — paste moves sample UNITS
     val spu = if (TileCodec.isComplex(profile.dtype)) 2 else 1
     val (th, tw) = profile.tileDims(level, ty, tx)
-    val pixels = new Array[Double](bands * th * tw * spu)
+    val (fh, fw) = (th + 2 * k, tw + 2 * k)
+    val pixels = new Array[Double](bands * fh * fw * spu)
     java.util.Arrays.fill(pixels, profile.nodata)
-    val mask = new Array[Byte](th * tw)
-    qs.foreach { q =>
-      val offY = q.qy * half
-      val offX = q.qx * half
+    val mask = new Array[Byte](fh * fw)
+    ps.foreach { p =>
       var b = 0
       while (b < bands) {
-        val srcBase = b * q.h * q.w * spu
-        val dstBase = b * th * tw * spu
+        val srcBase = b * p.h * p.w * spu
+        val dstBase = b * fh * fw * spu
         var y = 0
-        while (y < q.h) {
-          System.arraycopy(q.pixels, srcBase + y * q.w * spu,
-            pixels, dstBase + ((offY + y) * tw + offX) * spu, q.w * spu)
+        while (y < p.h) {
+          System.arraycopy(p.pixels, srcBase + y * p.w * spu,
+            pixels, dstBase + ((p.oy + y) * fw + p.ox) * spu, p.w * spu)
           y += 1
         }
         b += 1
       }
-      if (q.mask != null) {
-        var y = 0
-        while (y < q.h) {
-          System.arraycopy(q.mask, y * q.w, mask, (offY + y) * tw + offX, q.w)
-          y += 1
-        }
+      var y = 0
+      while (y < p.h) {
+        val at = (p.oy + y) * fw + p.ox
+        if (p.mask == null) java.util.Arrays.fill(mask, at, at + p.w, 1.toByte)
+        else System.arraycopy(p.mask, y * p.w, mask, at, p.w)
+        y += 1
       }
     }
     Tile(level, ty, tx, th, tw, pixels, mask)
@@ -89,14 +92,14 @@ object Pyramid {
   }
 
   /** Mosaic step shared by the halo-free and halo paths: group the ≤4
-    * quadrants of each tile at `level` (one shuffle) and stitch. */
-  def regroup(quads: Dataset[Quadrant], profile: RasterProfile,
+    * quadrants of each tile at `level` (one shuffle) and paste them. */
+  def regroup(quads: Dataset[Patch], profile: RasterProfile,
       level: Int): Dataset[Tile] = {
     val spark = quads.sparkSession
     import spark.implicits._
     byTile(quads, profile, level)
-      .mapGroups { (key: (Int, Int, Int), qs: Iterator[Quadrant]) =>
-        stitch(key._1, key._2, key._3, qs, profile)
+      .mapGroups { (key: (Int, Int, Int), qs: Iterator[Patch]) =>
+        paste(key._1, key._2, key._3, 0, qs, profile)
       }
   }
 
@@ -134,7 +137,10 @@ object Pyramid {
   }
 }
 
-/** A downsampled tile block addressed to quadrant (qy,qx) of next-level
-  * tile (level,ty,tx). */
-case class Quadrant(level: Int, ty: Int, tx: Int, qy: Int, qx: Int,
+/** A rectangle of pixels (band-major, shared mask; null = all valid)
+  * addressed to tile (level, ty, tx): it fills rows oy until oy+h and
+  * columns ox until ox+w of the tile's frame, which a halo of k px
+  * widens by k on every side. A quadrant is a patch of its next-level
+  * tile; a strip is a patch of a neighbour's halo ring. */
+case class Patch(level: Int, ty: Int, tx: Int, oy: Int, ox: Int,
     h: Int, w: Int, pixels: Array[Double], mask: Array[Byte])

@@ -1463,13 +1463,12 @@ class CogPartitionReader(part: CogInputPartition)
       // coalesce this partition's planned ranges (data + mask + planar
       // planes) into merged fetch spans: one positioned read per span
       // instead of one per tile — the request-count lever on object
-      // stores. `range.gap` tunes merging (-1 disables),
-      // `range.maxspan` caps the buffer.
+      // stores. `range.gap` tunes merging (-1 disables); a span holds
+      // at most CoalescingInput.DefaultMaxSpan bytes.
       val ranges = part.tiles.flatMap(s =>
         Seq((s.off, s.cnt), (s.mOff, s.mCnt)) ++ s.pOff.zip(s.pCnt))
       inVar = CoalescingInput.wrap(raw, ranges,
-        hconf.getLong("range.gap", CoalescingInput.DefaultGap),
-        hconf.getLong("range.maxspan", CoalescingInput.DefaultMaxSpan))
+        hconf.getLong("range.gap", CoalescingInput.DefaultGap))
       opened = true
     }
     inVar

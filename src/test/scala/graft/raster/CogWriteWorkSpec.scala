@@ -61,8 +61,8 @@ class CogWriteWorkSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  def write(): CogWriter.Result =
-    CogWriter.write(level0, prof,
+  def write(p: RasterProfile = prof): CogWriter.Result =
+    CogWriter.write(level0, p,
       new graft.sink.LocalMultipartSink(Files.createTempDirectory("graft-work").toString))
 
   /** Shuffle bytes the per-level reference pyramid writes. */
@@ -75,6 +75,13 @@ class CogWriteWorkSpec extends SparkSpec {
   lazy val (result, jobs) = {
     write() // warm-up: first-use planning must not change the counts below
     traced(write())
+  }
+
+  /** The jobs of the same write under the widest halo kernel. */
+  lazy val lanczosJobs = {
+    val lanczos = prof.copy(resampling = "lanczos")
+    write(lanczos)
+    traced(write(lanczos))._2
   }
 
   def show: String = jobs.map(j => s"job ${j.id}: ${j.stages.size} stages " +
@@ -106,6 +113,11 @@ class CogWriteWorkSpec extends SparkSpec {
     assert(jobs.size == 2, show)
     assert(jobs.head.stages.size == 2, show)
     assert(jobs(1).ran.size == 2, show)
+    // a halo kernel builds one level per round, each round one
+    // exchange: level 0's tiles and strips, then one per overview
+    assert(lanczosJobs.size == 2, lanczosJobs)
+    assert(lanczosJobs.head.stages.size == prof.maxLevel + 2, lanczosJobs)
+    assert(lanczosJobs(1).ran.size == 2, lanczosJobs)
   }
 
   test("band stats equal a driver-side BigDecimal reference and the decimal(38,12) SQL") {

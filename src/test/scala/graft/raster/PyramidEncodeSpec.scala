@@ -9,7 +9,7 @@ import org.apache.spark.sql.Dataset
   * encode of the reference tile, every tile read back through
   * [[CogReader]] equals the reference tile, and the object's bytes do
   * not depend on the input partitioning or on the shuffle width (which
-  * sets the block edge). */
+  * sets a halo-free kernel's block edge). */
 class PyramidEncodeSpec extends SparkSpec {
 
   val ND = -9999.0
@@ -89,8 +89,8 @@ class PyramidEncodeSpec extends SparkSpec {
     bytes
   }
 
-  // bilinear is a halo kernel: the writer's per-level path
-  for (kernel <- Seq("average", "nearest", "mode", "rms", "bilinear"))
+  for (kernel <- Seq("average", "nearest", "mode", "rms",
+      "bilinear", "gauss", "cubic", "cubicspline", "lanczos"))
     test(s"$kernel: every page and decoded tile equals Pyramid.build's") {
       val prof = base.copy(resampling = kernel)
       val bytes = assertMatchesReference(synthetic(prof, seed = 5L), prof)
@@ -145,17 +145,28 @@ class PyramidEncodeSpec extends SparkSpec {
     assert(PyramidEncode.blockLog(big, 1, 1) == PyramidEncode.MaxBlockLog)
   }
 
+  /** The object each kernel writes from seed 7, as the per-level
+    * writer wrote it: two halo kernels of each width class and the
+    * halo-free default. */
+  val goldens = Map(
+    "average" -> "8c73f24d77bb09dba90d11189784b5ff8fd9f6e0ca6280c08997579b6324d505",
+    "bilinear" -> "b5d49d6e6e3eaa319a0ac3e58c9a9f29560a8e109554bdb8bec0296023498a36",
+    "cubic" -> "1c64a667f31297aec4cb31380811c9fc119584df44214bd38408331c2678a008",
+    "lanczos" -> "6d78a63cb0a91b7b291478ea6471152288644999d1c02fda56554fd2079e1fe4")
+
   test("sha256 does not depend on input partitioning or shuffle width") {
-    val prof = base
-    val level0 = synthetic(prof, seed = 7L)
-    val want = sha256(write(level0, prof))
-    for (n <- Seq(1, 3, 7))
-      assert(sha256(write(level0.repartition(n), prof)) == want, s"$n input partitions")
-    for (p <- Seq(1, 4, 8)) {
-      val got = withConf("spark.sql.shuffle.partitions" -> p.toString) {
-        sha256(write(level0, prof))
+    for ((kernel, want) <- goldens) {
+      val prof = base.copy(resampling = kernel)
+      val level0 = synthetic(prof, seed = 7L)
+      assert(sha256(write(level0, prof)) == want, kernel)
+      for (n <- Seq(1, 3, 7))
+        assert(sha256(write(level0.repartition(n), prof)) == want, s"$kernel: $n input partitions")
+      for (p <- Seq(1, 4, 8)) {
+        val got = withConf("spark.sql.shuffle.partitions" -> p.toString) {
+          sha256(write(level0, prof))
+        }
+        assert(got == want, s"$kernel: $p shuffle partitions")
       }
-      assert(got == want, s"$p shuffle partitions")
     }
   }
 }
